@@ -8,12 +8,14 @@ network latency. Here the transport is batched and partition-parallel:
 * source (A2): the transport's ``search_read`` runs once on the driver
   (metadata-sized results — the reference's model too) and becomes a
   DataFrame; large extracts should land as files/JDBC instead.
-* sink (I1): ``rpc_load`` ships each Arrow batch to the transport from
-  inside ``mapInPandas`` — executors call the remote API in parallel,
-  ``batch_size`` rows per call, and per-ROW failures are captured as
-  ledger rows (level='error') instead of aborting the job, preserving
-  the reference's error-isolation semantics (:738-745) without
-  try/except-per-row round-trips.
+* sink (I1): ``rpc_apply_actions`` ships each Arrow batch to the
+  transport from inside ``mapInPandas`` — executors call the remote API
+  in parallel, ``batch_size`` rows per call, each row routed to
+  create/write/unlink by its merge action (a plain load is every row
+  tagged ``inserted`` with no ``model_id``: batched creates). Per-ROW
+  failures are captured as ledger rows (level='error') instead of
+  aborting the job, preserving the reference's error-isolation
+  semantics (:738-745) without try/except-per-row round-trips.
 
 The transport is a caller-supplied factory (pickled to executors, one
 client per partition — connection reuse the reference only had for
@@ -60,52 +62,6 @@ def rpc_extract(
     if schema:
         return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
     return spark.createDataFrame(rows)  # type: ignore[arg-type]
-
-
-def rpc_load(
-    df: DataFrame,
-    transport_factory: Callable[[], Any],
-    model: str,
-    pk_col: str,
-    batch_size: int = 100,
-) -> DataFrame:
-    """I1 transport: batched, partition-parallel create with per-row
-    error capture. Returns a ledger-shaped DataFrame
-    (pk, model_id, level, message) — feed it to sinks.ledger.
-
-    One transport client per partition; ``batch_size`` rows per API call
-    (the reference's 100-row chunking reborn as a network batching knob,
-    minus the tail-drop bug at etl_cron.py:49-50 — pandas slicing keeps
-    the remainder).
-    """
-    cols = df.columns
-
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = transport_factory()
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                payload = chunk[cols].to_dict("records")
-                results = client.create_batch(model, payload)
-                yield pd.DataFrame(
-                    {
-                        "pk": chunk[pk_col].astype(str).values,
-                        "model_id": [
-                            (r.get("id") if r.get("ok") else None) for r in results
-                        ],
-                        "level": [
-                            ("info" if r.get("ok") else "error") for r in results
-                        ],
-                        "message": [
-                            ("Ok" if r.get("ok") else str(r.get("error")))
-                            for r in results
-                        ],
-                    }
-                )
-
-    return df.mapInPandas(
-        send, schema="pk string, model_id long, level string, message string"
-    )
 
 
 def rpc_apply_actions(
@@ -183,12 +139,8 @@ def rpc_apply_actions(
                     for pk, r in zip(sub[pk_col], results):
                         emit(pk, r, "unlink")
                 # kept rows: ledger 'skip' without a round-trip
-                sub = chunk[acts == "kept"]
-                for pk in sub[pk_col]:
-                    pks.append(str(pk))
-                    ids.append(None)
-                    levels.append("info")
-                    msgs.append("Ok (kept, no-op)")
+                for pk in chunk[acts == "kept"][pk_col]:
+                    emit(pk, {"ok": True}, "kept, no-op")
                 yield pd.DataFrame(
                     {
                         "pk": pks,

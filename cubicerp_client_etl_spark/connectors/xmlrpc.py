@@ -8,7 +8,7 @@ returning a uid, then ``/xmlrpc/2/object``
 every model call. This module speaks that exact protocol with nothing
 but ``xmlrpc.client``, so the engine needs no third-party RPC library
 and the transport is picklable into ``mapInPandas`` (one client per
-executor partition — ``rpc_load``'s contract).
+executor partition — ``rpc_apply_actions``'s contract).
 
 Error isolation: ``create_batch`` first tries ONE batched ``create``
 call (modern Odoo accepts a list of vals dicts — one round-trip per

@@ -11,12 +11,17 @@ network per loaded row. Here the whole job is ONE lazy DataFrame plan:
 No driver-side row loops, no chunking (partitions are the unit of
 parallelism), state transitions on the driver only. The 100-row-chunk
 tail-drop bug (etl_cron.py:49-50) has no analogue — there is no chunking
-to get wrong. The ready→running→done cron sweep itself is
-``run_ready_jobs`` (etl_cron.run parity over the live transport,
-loopback-server-tested).
+to get wrong. The package's one cron sweep is ``run_ready_jobs``
+(ready→running→done|error over the live transport, per-job isolation,
+loopback-server-tested). Every ledger row, from a load or a failed
+run, goes through ``sinks.ledger.build_ledger`` under one stable job id.
 """
 
 from __future__ import annotations
+
+import logging
+import traceback
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,17 +37,32 @@ from cubicerp_client_etl_spark.plans.spec import (
     ResourceSpec,
     TransformSpec,
 )
-from cubicerp_client_etl_spark.sinks.ledger import build_ledger, write_ledger
+from cubicerp_client_etl_spark.sinks.ledger import (
+    build_ledger,
+    ledger_job_id,
+    write_ledger,
+)
 from cubicerp_client_etl_spark.sinks.writers import (
     FWOutColumn,
     write_csv_resource,
     write_fixed_width,
     write_parquet,
 )
-from cubicerp_client_etl_spark.sources.csv_source import read_csv_resource
-from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, read_fixed_width
+from cubicerp_client_etl_spark.sources.csv_source import csv_columns, read_csv_resource
+from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, fixed_width_columns
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
+from cubicerp_client_etl_spark.sources.lines import parse_lines, read_lines
 from cubicerp_client_etl_spark.checkpointing import pin_eager
+
+_log = logging.getLogger(__name__)
+
+
+def _ftp_server(res: ResourceSpec):
+    """The resource's ServerSpec when its files live on an FTP server."""
+    srv = res.server
+    if srv is not None and srv.etl_type == "fs" and srv.fs_protocol == "ftp":
+        return srv
+    return None
 
 
 def _ftp_transport(server):
@@ -87,17 +107,15 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     paths per H4/H5; A7 FTP staging; A1 begin/end hooks)."""
     res = job.extract
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
-    if (
-        res.server is not None
-        and res.server.etl_type == "fs"
-        and res.server.fs_protocol == "ftp"
-        and res.f_filename
-    ):
+    ftp_server = _ftp_server(res)
+    if ftp_server is not None and res.f_filename:
         # A7: stage the remote file into the local spool; everything
         # downstream is the normal parallel read over the staged copy.
-        path = _ftp_transport(res.server).fetch(res.f_filename, job.run_date)
+        path = _ftp_transport(ftp_server).fetch(res.f_filename, job.run_date)
+    encoding = res.encoding or "UTF-8"
 
-    if res.etl_type == "rpc" and res.rpc_model:
+    delegated = res.etl_type == "rpc" and res.rpc_model
+    if delegated:
         # A2 declared form: the scan runs through the live transport;
         # the domain ships to the server VERBATIM (the reference's
         # delegation, cubicerpetl.py:314-328) — no local re-filter.
@@ -111,17 +129,12 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             fields=[c.name for c in res.columns],
             schema=res.rpc_schema or None,
         )
-        for k, v in res.row_default_value.items():
-            if k in df.columns:
-                df = df.withColumn(k, F.coalesce(F.col(k), F.lit(v)))
-            else:
-                df = df.withColumn(k, F.lit(v))
-        return df
-
-    if job.job_type == "online" and job.input_payload_b64 is not None:
-        # A6: inline payload fed through the same parsers as files
-        lines = read_inline_payload(spark, job.input_payload_b64)
-        df = _parse_lines_as(res, lines)
+    elif job.job_type == "online" and job.input_payload_b64 is not None:
+        # A6: the inline payload is one more lines frame for the file
+        # codecs, header/footer broadcast included
+        df = _parse_text(
+            res, read_inline_payload(spark, job.input_payload_b64, encoding)
+        )
     elif res.etl_type == "db" and res.sql_query:
         # A1 re-owned: the reference ships this SQL to the source DB
         # wrapped in optional begin/end statements with a settle delay
@@ -146,34 +159,17 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
         df = spark.read.orc(path)
     elif res.f_type == "xml":
         df = spark.read.format("xml").option("rowTag", res.xml_row_tag).load(path)
-    elif res.f_type == "csv":
+    elif res.f_type == "csv" and not (res.header_columns or res.footer_columns):
         df = read_csv_resource(
             spark,
             path,
             [c.name for c in res.columns],
             sep=res.txt_separator,
             quote=res.txt_quote,
-            header_columns=[c.name for c in res.header_columns]
-            if res.header_columns
-            else None,
-            footer_columns=[c.name for c in res.footer_columns]
-            if res.footer_columns
-            else None,
-            encoding=res.encoding or "UTF-8",
+            encoding=encoding,
         )
-    elif res.f_type == "txt":
-        df = read_fixed_width(
-            spark,
-            path,
-            [_fw_in(c) for c in res.columns],
-            header_columns=[_fw_in(c) for c in res.header_columns]
-            if res.header_columns
-            else None,
-            footer_columns=[_fw_in(c) for c in res.footer_columns]
-            if res.footer_columns
-            else None,
-            encoding=res.encoding or "UTF-8",
-        )
+    elif res.f_type in ("csv", "txt"):
+        df = _parse_text(res, read_lines(spark, path, encoding))
     elif res.f_type == "dbf":
         from cubicerp_client_etl_spark.sources.dbf import read_dbf
 
@@ -181,7 +177,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     else:
         raise ValueError(f"unsupported extract resource: {res}")
 
-    if res.domain:
+    if res.domain and not delegated:
         df = df.filter(compile_domain(list(res.domain)))
     # B3: defaults fill NULL holes (reference merges defaults *under*
     # extracted values, cubicerpetl.py:330-335 — same outcome over NULLs)
@@ -197,24 +193,21 @@ def _fw_in(c) -> FWColumn:
     return FWColumn(c.name, c.txt_position, c.txt_length)
 
 
-def _parse_lines_as(res: ResourceSpec, lines: DataFrame) -> DataFrame:
-    """Parse an ordered-lines frame per the resource's file physics."""
-    from cubicerp_client_etl_spark.sources.csv_source import _csv_line_to_cols
-
+def _parse_text(res: ResourceSpec, lines: DataFrame) -> DataFrame:
+    """Ordered lines (a file's or an inline payload's) → body rows per
+    the resource's csv/txt physics and header/footer columns."""
     if res.f_type == "csv":
-        return lines.select(
-            "_line_no",
-            *_csv_line_to_cols(
-                [c.name for c in res.columns], res.txt_separator, res.txt_quote
-            ),
-        )
-    if res.f_type == "txt":
-        cols = [
-            F.trim(F.substring("value", c.txt_position, c.txt_length)).alias(c.name)
-            for c in res.columns
-        ]
-        return lines.select("_line_no", *cols)
-    raise ValueError(f"inline payload needs csv/txt physics, got {res.f_type}")
+        to_col = lambda c: c.name  # noqa: E731
+        project = partial(csv_columns, sep=res.txt_separator, quote=res.txt_quote)
+    elif res.f_type == "txt":
+        to_col, project = _fw_in, fixed_width_columns
+    else:
+        raise ValueError(f"line payload needs csv/txt physics, got {res.f_type}")
+    header, footer = (
+        [to_col(c) for c in cols] if cols else None
+        for cols in (res.header_columns, res.footer_columns)
+    )
+    return parse_lines(lines, project, [to_col(c) for c in res.columns], header, footer)
 
 
 # ------------------------------------------------------------------- transform
@@ -318,28 +311,14 @@ def load_sink(
         )
         rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
         rpc_ledger.count()  # ship exactly once
-        if job.ledger_path:
-            ledger = build_ledger(
-                rpc_ledger,
-                job_id=hash(job.name) % (2**31),
-                pk_col="pk",
-                level_col="level",
-                message_col="message",
-                model=res.name,
-                model_id_col="model_id",
-            )
-            write_ledger(ledger, job.ledger_path)
+        _append_ledger(
+            job, rpc_ledger, "pk", level_col="level", message_col="message",
+            model_id_col="model_id",
+        )
         return merged
 
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
-    ftp_server = (
-        res.server
-        if res.server is not None
-        and res.server.etl_type == "fs"
-        and res.server.fs_protocol == "ftp"
-        else None
-    )
-    remote_name = None
+    ftp_server = _ftp_server(res)
     if ftp_server is not None:
         # I6: render the single-file output into the local spool, then
         # put it to the remote endpoint after the write completes.
@@ -385,7 +364,7 @@ def load_sink(
     else:
         raise ValueError(f"unsupported load resource: {res}")
 
-    if ftp_server is not None and remote_name is not None:
+    if ftp_server is not None:
         # the Spark writers produce a directory; the single part file
         # inside (single_file/ordered mode ⇒ exactly one) is the upload
         import glob as _glob
@@ -398,16 +377,18 @@ def load_sink(
             )
         transport.put(parts[0], remote_name)
 
+    _append_ledger(job, merged, job.pk_field, message_col="action")
+    return merged
+
+
+def _append_ledger(job: JobSpec, rows: DataFrame, pk_col: str, **cols) -> None:
+    """Append ``rows`` to the job's run ledger (if it has one) under the
+    job's stable ledger id — the one writer for loads and failed runs."""
     if job.ledger_path:
         ledger = build_ledger(
-            merged,
-            job_id=hash(job.name) % (2**31),
-            pk_col=job.pk_field,
-            message_col="action",
-            model=res.name,
+            rows, ledger_job_id(job.name), pk_col, model=job.load.name, **cols
         )
         write_ledger(ledger, job.ledger_path)
-    return merged
 
 
 def run_job(
@@ -430,11 +411,11 @@ def run_ready_jobs(
     job_id: int | None = None,
     job_model: str = "etl.job",
 ) -> dict[int, DataFrame]:
-    """The reference's cron sweep (etl_cron.run, :39-55) re-owned: fetch
-    the job registry through the transport, skip jobs whose state is
-    not 'ready' (unless ``job_id`` pins one — the reference's explicit
-    override), flip each to running via ``action_start``, run the full
-    declared lifecycle, flip to done via ``action_done``.
+    """The reference's cron sweep (etl_cron.run, :39-55) re-owned: ask
+    the server for the ready batch jobs (or only ``job_id`` when one is
+    pinned — the reference's explicit override, cubicerpetl.py:76), flip
+    each to running via ``action_start``, run the full declared
+    lifecycle, flip to done via ``action_done``.
 
     ``job_builder(job_row) -> JobSpec`` compiles the server's job
     metadata into the engine's declarative spec (deployment-specific —
@@ -442,25 +423,44 @@ def run_ready_jobs(
     a test or deployment supplies the mapping). ``existing_target_for
     (job_row) -> DataFrame | None`` supplies the reprocess target.
 
+    Each job is isolated, unlike the reference's cascade: a job that
+    raises is written to state 'error' (never left 'running'), its
+    traceback goes to its run ledger and the log, and the sweep moves
+    on — the per-row discipline of cubicerpetl.py:738-745 lifted to
+    job granularity.
+
     The 100-row chunk loop (etl_cron.py:46-53, with its tail-drop bug
     at :49-50) has no analogue: run_job is one lazy plan and partitions
     are the unit of parallelism. State transitions happen on the
     driver, one RPC each — metadata-sized, like the reference.
 
-    Returns {job id: merged frame} for the jobs that ran.
+    Returns {job id: merged frame} for the jobs that completed.
     """
-    rows = transport.search_read(job_model, [], ["id", "name", "state"])
+    if job_id is not None:
+        domain = [("id", "=", job_id)]
+    else:
+        domain = [("state", "=", "ready"), ("type", "=", "batch")]
+    rows = transport.search_read(job_model, domain, ["id", "name", "state"])
     ran: dict[int, DataFrame] = {}
     for row in rows:
         jid = int(row["id"])
-        if job_id is not None:
-            if jid != job_id:
-                continue
-        elif row.get("state") != "ready":
-            continue
         transport.execute_kw(job_model, "action_start", [[jid]])
-        job = job_builder(row)
-        existing = existing_target_for(row) if existing_target_for else None
-        ran[jid] = run_job(spark, job, existing_target=existing)
+        job = None
+        try:
+            job = job_builder(row)
+            existing = existing_target_for(row) if existing_target_for else None
+            ran[jid] = run_job(spark, job, existing_target=existing)
+        except Exception:  # noqa: BLE001 -- recorded, and the sweep goes on
+            tb = traceback.format_exc()
+            _log.warning("etl job %s failed:\n%s", jid, tb)
+            transport.execute_kw(job_model, "write", [[jid], {"state": "error"}])
+            if job is not None:
+                error_row = spark.createDataFrame(
+                    [(None, "error", tb)], "pk string, level string, message string"
+                )
+                _append_ledger(
+                    job, error_row, "pk", level_col="level", message_col="message"
+                )
+            continue
         transport.execute_kw(job_model, "action_done", [[jid]])
     return ran

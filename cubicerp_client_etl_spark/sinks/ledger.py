@@ -12,6 +12,8 @@ over it instead of driver-side counters.
 
 from __future__ import annotations
 
+import zlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,6 +30,12 @@ LEDGER_COLUMNS = (
     "amount",
     "ts",
 )
+
+
+def ledger_job_id(job_name: str) -> int:
+    """The ledger's 31-bit job id: a digest of the job name, so every
+    run of a job appends under the same id in every process."""
+    return zlib.crc32(job_name.encode("utf-8")) & 0x7FFFFFFF
 
 
 def build_ledger(

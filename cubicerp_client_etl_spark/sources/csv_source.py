@@ -13,10 +13,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.sources.lines import read_lines, split_header_footer
+from cubicerp_client_etl_spark.sources.lines import parse_lines, read_lines
 
 
-def _csv_line_to_cols(names: list[str], sep: str, quote: str) -> list[Column]:
+def csv_columns(names: list[str], sep: str, quote: str) -> list[Column]:
     """Parse one CSV line via from_csv (JVM-side uniVocity parser —
     handles quoting/escapes, unlike a naive split)."""
     schema = ", ".join(f"`{n}` string" for n in names)
@@ -47,20 +47,10 @@ def read_csv_resource(
         return spark.read.csv(
             path, sep=sep, quote=quote, encoding=encoding, schema=None, header=False
         ).toDF(*columns)
-
-    lines = read_lines(spark, path, encoding)
-    body, header, footer = split_header_footer(
-        lines, header_columns is not None, footer_columns is not None
+    return parse_lines(
+        read_lines(spark, path, encoding),
+        lambda names: csv_columns(names, sep, quote),
+        columns,
+        header_columns,
+        footer_columns,
     )
-    out = body.select(
-        "file", "_line_no", *_csv_line_to_cols(columns, sep, quote)
-    )
-    for hf, names in ((header, header_columns), (footer, footer_columns)):
-        if hf is not None:
-            parsed = hf.select(
-                F.col("file").alias("__hf_file"), *_csv_line_to_cols(names, sep, quote)
-            )
-            out = out.join(
-                F.broadcast(parsed), out.file == F.col("__hf_file"), "left"
-            ).drop("__hf_file")
-    return out

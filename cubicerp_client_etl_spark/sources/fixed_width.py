@@ -13,10 +13,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.sources.lines import read_lines, split_header_footer
+from cubicerp_client_etl_spark.sources.lines import parse_lines, read_lines
 
 
 @dataclass(frozen=True)
@@ -31,8 +31,9 @@ class FWColumn:
     strip: bool = True
 
 
-def _project(prefix_cols: list, cols: list[FWColumn]) -> list:
-    out = list(prefix_cols)
+def fixed_width_columns(cols: list[FWColumn]) -> list[Column]:
+    """Slice one line's ``value`` into the declared fields."""
+    out = []
     for c in cols:
         e = F.substring("value", c.position, c.length)
         if c.strip:
@@ -51,19 +52,10 @@ def read_fixed_width(
 ) -> DataFrame:
     """Parse fixed-width file(s) → body DataFrame with ``_line_no``;
     header/footer fields (if declared) broadcast onto every body row."""
-    lines = read_lines(spark, path, encoding)
-    body, header, footer = split_header_footer(
-        lines, header_columns is not None, footer_columns is not None
+    return parse_lines(
+        read_lines(spark, path, encoding),
+        fixed_width_columns,
+        columns,
+        header_columns,
+        footer_columns,
     )
-    out = body.select(_project([F.col("file"), F.col("_line_no")], columns))
-    if header is not None:
-        h = header.select(_project([F.col("file").alias("__hf_file")], header_columns))
-        out = out.join(F.broadcast(h), out.file == F.col("__hf_file"), "left").drop(
-            "__hf_file"
-        )
-    if footer is not None:
-        f = footer.select(_project([F.col("file").alias("__hf_file")], footer_columns))
-        out = out.join(F.broadcast(f), out.file == F.col("__hf_file"), "left").drop(
-            "__hf_file"
-        )
-    return out

@@ -17,7 +17,9 @@ realistic 100 TB layout), never from within one file.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -45,20 +47,53 @@ def split_header_footer(
 
     Mirrors the reference's slicing (header = row 0, footer = row N-1,
     both removed from the body; cubicerpetl.py:242-245,267-270), as a
-    window max per file instead of driver-side indexing.
+    window max per file instead of driver-side indexing. Only a footer
+    needs the window: line 0 is known without one.
     """
     from pyspark.sql import Window as W
 
-    w = W.partitionBy("file")
-    marked = lines.withColumn("__max_line", F.max("_line_no").over(w))
     header = footer = None
-    body = marked
-    if has_header:
-        header = marked.filter(F.col("_line_no") == 0).drop("__max_line")
-        body = body.filter(F.col("_line_no") > 0)
+    body = lines
     if has_footer:
+        marked = lines.withColumn(
+            "__max_line", F.max("_line_no").over(W.partitionBy("file"))
+        )
         footer = marked.filter(F.col("_line_no") == F.col("__max_line")).drop(
             "__max_line"
         )
-        body = body.filter(F.col("_line_no") < F.col("__max_line"))
-    return body.drop("__max_line"), header, footer
+        body = marked.filter(F.col("_line_no") < F.col("__max_line")).drop(
+            "__max_line"
+        )
+    if has_header:
+        header = lines.filter(F.col("_line_no") == 0)
+        body = body.filter(F.col("_line_no") > 0)
+    return body, header, footer
+
+
+def parse_lines(
+    lines: DataFrame,
+    project: Callable[[list], list[Column]],
+    columns: list,
+    header_columns: list | None = None,
+    footer_columns: list | None = None,
+) -> DataFrame:
+    """Ordered lines → parsed body rows ``(file, _line_no, *columns)``,
+    the codec-independent half of every text reader.
+
+    ``project(cols)`` turns one line's ``value`` into the declared
+    columns (the CSV or fixed-width physics). Header/footer lines are
+    parsed with their own column lists and broadcast onto every body
+    row of the same file; with neither declared, the body is a plain
+    projection (no window, no join).
+    """
+    body, header, footer = split_header_footer(
+        lines, header_columns is not None, footer_columns is not None
+    )
+    out = body.select("file", "_line_no", *project(columns))
+    for hf, cols in ((header, header_columns), (footer, footer_columns)):
+        if hf is not None:
+            parsed = hf.select(F.col("file").alias("__hf_file"), *project(cols))
+            out = out.join(
+                F.broadcast(parsed), out.file == F.col("__hf_file"), "left"
+            ).drop("__hf_file")
+    return out

@@ -137,6 +137,46 @@ def test_online_job_inline_payload(spark, tmp_path):
     assert rows == {(10, "X"), (20, "Y"), (30, "NONE")}
 
 
+@pytest.mark.parametrize("f_type", ["csv", "txt"])
+def test_online_payload_parses_like_file(spark, tmp_path, f_type):
+    """A6: an inline payload goes through the file codec itself, so a
+    resource with header and footer columns gives the same body rows,
+    header/footer fields broadcast, whether its bytes arrive as a file
+    or as an online job's base64 payload."""
+    if f_type == "csv":
+        content = "H;B7\n01;a\n02;b\nT;2\n"
+        cols = lambda *names: tuple(ColumnSpec(n) for n in names)  # noqa: E731
+        body, header, footer = cols("k", "s"), cols("hrec", "batch"), cols("trec", "n")
+    else:
+        content = "HB7\n01a\n02b\nT2\n"
+        cols = lambda *spec: tuple(  # noqa: E731
+            ColumnSpec(n, txt_position=p, txt_length=w) for n, p, w in spec
+        )
+        body = cols(("k", 1, 2), ("s", 3, 1))
+        header = cols(("hrec", 1, 1), ("batch", 2, 2))
+        footer = cols(("trec", 1, 1), ("n", 2, 1))
+    path = tmp_path / f"in.{f_type}"
+    path.write_text(content)
+
+    def rows(f_filename="", payload=None):
+        res = ResourceSpec(
+            name="in", f_type=f_type, txt_separator=";", columns=body,
+            header_columns=header, footer_columns=footer, f_filename=f_filename,
+        )
+        job = JobSpec(
+            name="hf", extract=res, transform=TransformSpec(name="t"),
+            load=ResourceSpec(name="out"),
+            job_type="online" if payload else "batch", input_payload_b64=payload,
+        )
+        names = [c.name for c in body + header + footer]
+        return sorted(tuple(r) for r in extract(spark, job).select(*names).collect())
+
+    via_file = rows(f_filename=str(path))
+    assert via_file == [("01", "a", "H", "B7", "T", "2"), ("02", "b", "H", "B7", "T", "2")]
+    payload = base64.b64encode(content.encode()).decode()
+    assert rows(payload=payload) == via_file
+
+
 def test_sql_passthrough_resource(spark):
     """A1 re-owned: the resource's sql_query runs in Spark SQL (with date
     template vars), not shipped to a foreign DB."""
@@ -213,44 +253,6 @@ def test_hooks_run_in_order(spark, tmp_path):
     assert calls == ["pre", "post", "end"]
     assert merged.filter(~F.col("hooked")).count() == 0
     assert merged.count() <= 100
-
-
-def test_cron_sweep_isolates_failures(spark, tmp_path):
-    """§3.1 orchestration: ready→running→done transitions, one failing
-    job lands in state='error' with its traceback in the ledger, and the
-    sweep still completes the remaining ready jobs (unlike the
-    reference's cascade, etl_cron.py:39-55)."""
-    from cubicerp_client_etl_spark.plans.cron import JobRun, run_ready_jobs
-
-    good_a = _job(tmp_path / "a")
-    bad = JobSpec(
-        name="broken",
-        extract=ResourceSpec(
-            name="missing",
-            f_type="parquet",
-            f_filename=str(tmp_path / "nope.parquet"),
-        ),
-        transform=TransformSpec(name="t", fields=(FieldSpec("id", field_name="x"),)),
-        load=ResourceSpec(name="out", f_type="csv", f_filename=str(tmp_path / "bad_out")),
-        ledger_path=str(tmp_path / "bad_ledger"),
-    )
-    good_b = _job(tmp_path / "b")
-    done_already = JobRun(spec=_job(tmp_path / "c"), state="done")
-
-    runs = [JobRun(good_a), JobRun(bad), JobRun(good_b), done_already]
-    out = run_ready_jobs(spark, runs)
-
-    assert [r.state for r in out] == ["done", "error", "done", "done"]
-    assert out[1].error and "nope.parquet" in out[1].error
-    # failure is in the broken job's ledger, not swallowed
-    led = spark.read.parquet(str(tmp_path / "bad_ledger"))
-    err = led.filter(F.col("level") == "error").collect()
-    assert len(err) == 1 and err[0]["job"] == "broken"
-    # completed jobs produced their sinks
-    assert out[0].result is not None and out[0].result.count() > 0
-    # re-sweep is a no-op: nothing left in 'ready'
-    again = run_ready_jobs(spark, out)
-    assert [r.state for r in again] == ["done", "error", "done", "done"]
 
 
 def test_orc_and_xml_resource_roundtrip(spark, tmp_path):

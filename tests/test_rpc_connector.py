@@ -6,7 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.connectors.mock import MockTransport
-from cubicerp_client_etl_spark.connectors.rpc import rpc_extract, rpc_load
+from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions, rpc_extract
+
+
+def _creates(df):
+    """Plain rows as a load sees them: every row tagged ``inserted``
+    with no recovered server id, so each one ships as a create."""
+    return df.withColumn("action", F.lit("inserted"))
 
 
 def test_rpc_extract_mock_roundtrip(spark):
@@ -22,10 +28,12 @@ def test_rpc_extract_mock_roundtrip(spark):
     assert df.filter(F.col("name") == "p0").count() == 1
 
 
-def test_rpc_load_batches_and_isolates_errors(spark):
+def test_rpc_create_batches_and_isolates_errors(spark):
     rows = [(i, float(i if i % 5 else -i)) for i in range(1, 251)]
     df = spark.createDataFrame(rows, "k int, v double").repartition(4)
-    ledger = rpc_load(df, MockTransport, "res.partner", pk_col="k", batch_size=100)
+    ledger = rpc_apply_actions(
+        _creates(df), MockTransport, "res.partner", pk_col="k", batch_size=100
+    )
     got = ledger.collect()
     assert len(got) == 250  # no tail-drop: every row gets an outcome
     errors = [r for r in got if r["level"] == "error"]
@@ -36,11 +44,13 @@ def test_rpc_load_batches_and_isolates_errors(spark):
     assert all(r["model_id"] == int(r["pk"]) * 2 for r in infos)
 
 
-def test_rpc_load_respects_batch_size(spark):
+def test_rpc_create_respects_batch_size(spark):
     # single partition so the mock's call log is observable via an
     # accumulator-free check: route results through the ledger count
     df = spark.createDataFrame([(i, 1.0) for i in range(7)], "k int, v double").coalesce(1)
-    ledger = rpc_load(df, MockTransport, "res.partner", pk_col="k", batch_size=3)
+    ledger = rpc_apply_actions(
+        _creates(df), MockTransport, "res.partner", pk_col="k", batch_size=3
+    )
     assert ledger.count() == 7  # 3+3+1 — remainder batch not dropped
 
 
@@ -90,6 +100,24 @@ def test_rpc_python_datasource_parallel_slices(spark):
 # ---------------------------------------------------------------------------
 
 
+def _matches(row: dict, domain) -> bool:
+    """AND of (field, op, value) leaves, the subset the tests ship."""
+
+    def hit(f, op, v):
+        x = row.get(f)
+        if op == "=":
+            return x == v
+        if op == "!=":
+            return x != v
+        if op == ">=":
+            return x is not None and x >= v
+        if op == "<":
+            return x is not None and x < v
+        raise ValueError(op)
+
+    return all(hit(*leaf) for leaf in domain)
+
+
 class _OdooLikeServer:
     """Minimal in-memory Odoo-protocol endpoint for loopback tests."""
 
@@ -114,31 +142,12 @@ class _OdooLikeServer:
         if (db, uid, password) != (self.DB, self.UID, self.PWD):
             raise xmlrpc.client.Fault(3, "AccessDenied")
         if method == "search_read":
-            domain = args[0]
             fields = kwargs.get("fields") or []
-
-            def hit(row, f, op, v):
-                x = row.get(f)
-                if op == "=":
-                    return x == v
-                if op == "!=":
-                    return x != v
-                if op == ">=":
-                    return x is not None and x >= v
-                if op == "<":
-                    return x is not None and x < v
-                raise ValueError(op)
-
-            out = []
-            for row in self.store.values():
-                if all(
-                    hit(row, f, op, v)
-                    for f, op, v in (tuple(leaf) for leaf in domain)
-                ):
-                    out.append(
-                        {f: row.get(f) for f in fields} if fields else dict(row)
-                    )
-            return out
+            return [
+                {f: row.get(f) for f in fields} if fields else dict(row)
+                for row in self.store.values()
+                if _matches(row, args[0])
+            ]
         if method == "create":
             vals_list = args[0]
             self.create_calls.append(len(vals_list))
@@ -172,7 +181,7 @@ class _OdooLikeServer:
         raise xmlrpc.client.Fault(1, f"unknown method {method}")
 
 
-def _start_server():
+def _start_server(state=None):
     import threading
     from socketserver import ThreadingMixIn
     from xmlrpc.server import SimpleXMLRPCRequestHandler, SimpleXMLRPCServer
@@ -186,7 +195,7 @@ def _start_server():
     class Server(ThreadingMixIn, SimpleXMLRPCServer):
         daemon_threads = True
 
-    state = _OdooLikeServer()
+    state = state or _OdooLikeServer()
     srv = Server(("127.0.0.1", 0), requestHandler=Handler, allow_none=True,
                  logRequests=False)
     srv.register_instance(state)
@@ -219,11 +228,10 @@ def test_live_xmlrpc_extract_and_auth(spark):
 
 
 def test_live_xmlrpc_load_batch_and_per_row_degradation(spark):
-    """rpc_load through the REAL socket from executor workers: a clean
-    Arrow chunk lands as ONE batched create; a chunk with a poisoned
-    row degrades to per-row creates, the bad row turns into a ledger
-    error and its neighbors still commit."""
-    from cubicerp_client_etl_spark.connectors.rpc import rpc_load
+    """rpc_apply_actions creates through the REAL socket from executor
+    workers: a clean Arrow chunk lands as ONE batched create; a chunk
+    with a poisoned row degrades to per-row creates, the bad row turns
+    into a ledger error and its neighbors still commit."""
     from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
 
     srv, state, port = _start_server()
@@ -236,7 +244,9 @@ def test_live_xmlrpc_load_batch_and_per_row_degradation(spark):
         df = spark.createDataFrame(
             [(1, 10), (2, 20), (3, -5), (4, 40)], "k long, v long"
         ).coalesce(1)
-        ledger = rpc_load(df, factory, "res.partner", "k", batch_size=10)
+        ledger = rpc_apply_actions(
+            _creates(df), factory, "res.partner", "k", batch_size=10
+        )
         rows = {r.pk: (r.level, r.model_id) for r in ledger.collect()}
         assert rows["3"][0] == "error" and rows["3"][1] is None
         assert all(rows[k][0] == "info" for k in ("1", "2", "4"))
@@ -466,14 +476,48 @@ def test_declared_rpc_job_lifecycle_end_to_end(spark, tmp_path):
         srv.shutdown()
 
 
-def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
-    """etl_cron parity against the live server: the sweep fetches the
-    job registry, runs ONLY 'ready' jobs (ready -> running -> done via
-    action_start/action_done model calls), skips done/draft ones, and
-    the job_id override runs a pinned job regardless of state."""
-    import xmlrpc.client
+class _JobServer(_OdooLikeServer):
+    """The loopback server plus the ``etl.job`` registry: the sweep's
+    search_read honors its domain, ``action_start``/``action_done``
+    move a job's state, and every state a job passes through is kept
+    in ``history``."""
 
-    from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
+    def __init__(self, jobs):
+        super().__init__()
+        self.history: dict[int, list[str]] = {}
+        for jid, name, state, type_ in jobs:
+            self.add_job(jid, name, state, type_)
+
+    def add_job(self, jid, name, state, type_="batch"):
+        self.store[jid] = {"id": jid, "name": name, "state": state,
+                           "type": type_, "model": "etl.job"}
+        self.history[jid] = [state]
+
+    def execute_kw(self, db, uid, pwd, model, method, args, kwargs):
+        import xmlrpc.client
+
+        if model != "etl.job":
+            return super().execute_kw(db, uid, pwd, model, method, args, kwargs)
+        if method == "search_read":
+            fields = kwargs.get("fields") or []
+            return [
+                {f: r.get(f) for f in fields}
+                for r in self.store.values()
+                if r.get("model") == "etl.job" and _matches(r, args[0])
+            ]
+        if method in ("action_start", "action_done", "write"):
+            new = {"action_start": "running", "action_done": "done"}.get(method)
+            for rid in args[0]:
+                if rid not in self.store:
+                    raise xmlrpc.client.Fault(4, f"missing id {rid}")
+                self.store[rid]["state"] = new or args[1]["state"]
+                self.history[rid].append(self.store[rid]["state"])
+            return True
+        raise xmlrpc.client.Fault(1, f"unknown etl.job method {method}")
+
+
+def _csv_job(spark, tmp_path, jid, ledger_path=None):
+    """A tiny CSV-in → CSV-out lifecycle named after the server job."""
     from cubicerp_client_etl_spark.plans.spec import (
         ColumnSpec,
         FieldSpec,
@@ -481,94 +525,182 @@ def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
         ResourceSpec,
         TransformSpec,
     )
-    from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
     from cubicerp_client_etl_spark.sinks.writers import write_csv_resource
 
-    srv, state, port = _start_server()
+    src = tmp_path / f"in_{jid}"
+    write_csv_resource(
+        spark.createDataFrame(
+            [(str(jid), "x"), (str(jid + 1), "y")], "k string, s string"
+        ),
+        str(src),
+    )
+    return JobSpec(
+        name=f"job{jid}",
+        extract=ResourceSpec(
+            name="in",
+            f_type="csv",
+            f_filename=str(src),
+            columns=(ColumnSpec("k"), ColumnSpec("s")),
+        ),
+        transform=TransformSpec(
+            name="t",
+            fields=(
+                FieldSpec("pk", value="CAST(k AS STRING)"),
+                FieldSpec("s", field_name="s"),
+            ),
+            reprocess="insert",
+        ),
+        load=ResourceSpec(
+            name="out", f_type="csv", f_filename=str(tmp_path / f"out_{jid}")
+        ),
+        pk_field="pk",
+        ledger_path=ledger_path,
+    )
+
+
+def _broken_job(tmp_path, name, ledger_path):
+    """A job whose extract reads a parquet path that does not exist."""
+    from cubicerp_client_etl_spark.plans.spec import (
+        FieldSpec,
+        JobSpec,
+        ResourceSpec,
+        TransformSpec,
+    )
+
+    return JobSpec(
+        name=name,
+        extract=ResourceSpec(
+            name="missing", f_type="parquet",
+            f_filename=str(tmp_path / "nope.parquet"),
+        ),
+        transform=TransformSpec(name="t", fields=(FieldSpec("id", field_name="x"),)),
+        load=ResourceSpec(name="out", f_type="csv",
+                          f_filename=str(tmp_path / "bad_out")),
+        pk_field="id",
+        ledger_path=ledger_path,
+    )
+
+
+def test_cron_sweep_runs_only_ready_jobs(spark, tmp_path):
+    """etl_cron parity against the live server: the sweep asks for the
+    ready BATCH jobs only (ready -> running -> done via action_start/
+    action_done model calls), so done, draft and online jobs are never
+    started. A job that raises ends in state 'error' (never left
+    'running') with its traceback in its ledger, the later ready jobs
+    still run, a re-sweep is a no-op, and the job_id override runs a
+    pinned job regardless of state."""
+    from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
+    from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
+    from cubicerp_client_etl_spark.sinks.ledger import LEDGER_COLUMNS, ledger_job_id
+
+    state = _JobServer([
+        (201, "job_a", "ready", "batch"),
+        (202, "job_b", "done", "batch"),
+        (203, "job_c", "draft", "batch"),
+        (204, "job_d", "ready", "online"),
+        (205, "broken", "ready", "batch"),
+        (206, "job_f", "ready", "batch"),
+    ])
+    srv, state, port = _start_server(state)
     try:
-        # teach the loopback server the job model + state transitions
-        state.store[201] = {"id": 201, "name": "job_a", "state": "ready",
-                            "model": "etl.job"}
-        state.store[202] = {"id": 202, "name": "job_b", "state": "done",
-                            "model": "etl.job"}
-        state.store[203] = {"id": 203, "name": "job_c", "state": "draft",
-                            "model": "etl.job"}
-        orig_execute = _OdooLikeServer.execute_kw
+        started: list[int] = []
+        bad_ledger = str(tmp_path / "bad_ledger")
 
-        def execute_kw(self, db, uid, pwd, model, method, args, kwargs):
-            if method in ("action_start", "action_done"):
-                for rid in args[0]:
-                    if rid not in self.store:
-                        raise xmlrpc.client.Fault(4, f"missing id {rid}")
-                    self.store[rid]["state"] = (
-                        "running" if method == "action_start" else "done"
-                    )
-                return True
-            if method == "search_read" and model == "etl.job":
-                fields = kwargs.get("fields") or []
-                return [
-                    {f: r.get(f) for f in fields}
-                    for r in self.store.values()
-                    if r.get("model") == "etl.job"
-                ]
-            return orig_execute(self, db, uid, pwd, model, method, args, kwargs)
+        def job_builder(row):
+            jid = int(row["id"])
+            started.append(jid)
+            if row["name"] == "broken":
+                return _broken_job(tmp_path, "broken", bad_ledger)
+            return _csv_job(spark, tmp_path, jid)
 
-        _OdooLikeServer.execute_kw = execute_kw
-        try:
-            # a tiny file lifecycle per job (CSV in -> CSV out)
-            started: list[int] = []
+        t = XmlRpcTransport(f"http://127.0.0.1:{port}", "erp", "admin", "secret")
+        ran = run_ready_jobs(spark, t, job_builder)
+        assert sorted(ran) == [201, 206]
+        assert started == [201, 205, 206]
+        final = {jid: state.store[jid]["state"] for jid in range(201, 207)}
+        assert final == {201: "done", 202: "done", 203: "draft",
+                         204: "ready", 205: "error", 206: "done"}
+        assert state.history[205] == ["ready", "running", "error"]
+        assert state.history[202] == ["done"]  # never restarted
+        assert ran[201].count() == 2 and ran[206].count() == 2
+        # the failure is in the broken job's ledger, not swallowed
+        led = spark.read.parquet(bad_ledger)
+        assert tuple(led.columns) == LEDGER_COLUMNS
+        err = led.collect()
+        assert len(err) == 1 and err[0]["level"] == "error"
+        assert err[0]["job_id"] == ledger_job_id("broken")
+        assert "nope.parquet" in err[0]["message"]
 
-            def job_builder(row):
-                jid = int(row["id"])
-                started.append(jid)
-                src = tmp_path / f"in_{jid}"
-                write_csv_resource(
-                    spark.createDataFrame(
-                        [(jid, "x"), (jid + 1, "y")], "k long, s string"
-                    ).select(
-                        F.col("k").cast("string"), "s"
-                    ),
-                    str(src),
-                )
-                return JobSpec(
-                    name=f"job{jid}",
-                    extract=ResourceSpec(
-                        name="in",
-                        f_type="csv",
-                        f_filename=str(src),
-                        columns=(ColumnSpec("k"), ColumnSpec("s")),
-                    ),
-                    transform=TransformSpec(
-                        name="t",
-                        fields=(
-                            FieldSpec("pk", value="CAST(k AS STRING)"),
-                            FieldSpec("s", field_name="s"),
-                        ),
-                        reprocess="insert",
-                    ),
-                    load=ResourceSpec(
-                        name="out", f_type="csv",
-                        f_filename=str(tmp_path / f"out_{jid}"),
-                    ),
-                    pk_field="pk",
-                )
+        # re-sweep is a no-op: nothing left in 'ready' that is batch
+        assert run_ready_jobs(spark, t, job_builder) == {}
+        assert started == [201, 205, 206]
+        assert {jid: state.store[jid]["state"] for jid in range(201, 207)} == final
 
-            t = XmlRpcTransport(
-                f"http://127.0.0.1:{port}", "erp", "admin", "secret"
-            )
-            ran = run_ready_jobs(spark, t, job_builder)
-            assert sorted(ran) == [201]
-            assert state.store[201]["state"] == "done"
-            assert state.store[202]["state"] == "done"
-            assert state.store[203]["state"] == "draft"  # untouched
-            assert ran[201].count() == 2
-
-            # job_id override runs a non-ready job (the reference's
-            # explicit-job path skips the state check)
-            ran2 = run_ready_jobs(spark, t, job_builder, job_id=203)
-            assert sorted(ran2) == [203]
-            assert state.store[203]["state"] == "done"
-        finally:
-            _OdooLikeServer.execute_kw = orig_execute
+        # job_id override runs a non-ready job (the reference's
+        # explicit-job path skips the state check)
+        ran2 = run_ready_jobs(spark, t, job_builder, job_id=203)
+        assert sorted(ran2) == [203]
+        assert state.store[203]["state"] == "done"
     finally:
         srv.shutdown()
+
+
+def test_sweep_ledger_keeps_one_schema_across_success_and_failure(spark, tmp_path):
+    """A job's run ledger holds both its load rows and a later failed
+    run's error row: one directory, read back with exactly the ledger
+    columns and one job id, the failure at level 'error'."""
+    from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
+    from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
+    from cubicerp_client_etl_spark.sinks.ledger import LEDGER_COLUMNS, ledger_job_id
+
+    srv, state, port = _start_server(_JobServer([(301, "nightly", "ready", "batch")]))
+    try:
+        ledger = str(tmp_path / "ledger")
+        builds = iter([
+            _csv_job(spark, tmp_path, 301, ledger_path=ledger),
+            _broken_job(tmp_path, "job301", ledger),
+        ])
+        t = XmlRpcTransport(f"http://127.0.0.1:{port}", "erp", "admin", "secret")
+        assert sorted(run_ready_jobs(spark, t, lambda row: next(builds))) == [301]
+        state.add_job(301, "nightly", "ready")  # the server re-queues it
+        assert run_ready_jobs(spark, t, lambda row: next(builds)) == {}
+        assert state.store[301]["state"] == "error"
+
+        led = spark.read.parquet(ledger)
+        assert tuple(led.columns) == LEDGER_COLUMNS
+        rows = led.collect()
+        assert {r["job_id"] for r in rows} == {ledger_job_id("job301")}
+        assert sorted(r["level"] for r in rows) == ["error", "info", "info"]
+        assert sorted(r["pk"] for r in rows if r["level"] == "info") == ["301", "302"]
+    finally:
+        srv.shutdown()
+
+
+def test_ledger_job_id_is_stable_across_hash_seeds():
+    """The ledger's job id is a digest of the job name, not Python's
+    per-process randomized ``hash``: two interpreters with different
+    hash seeds give the same id."""
+    import os
+    import subprocess
+    import sys
+
+    from cubicerp_client_etl_spark.sinks.ledger import ledger_job_id
+
+    code = (
+        "from cubicerp_client_etl_spark.sinks.ledger import ledger_job_id;"
+        "print(ledger_job_id('nightly_invoices'))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ids = {
+        subprocess.run(
+            [sys.executable, "-c", code],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            cwd=root,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert ids == {str(ledger_job_id("nightly_invoices"))}
+    assert 0 <= ledger_job_id("nightly_invoices") < 2**31
