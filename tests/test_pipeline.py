@@ -255,6 +255,52 @@ def test_hooks_run_in_order(spark, tmp_path):
     assert merged.count() <= 100
 
 
+def test_cron_sweep_isolates_failures(spark, tmp_path):
+    """§3.1 orchestration: ready→running→done transitions, one failing
+    job lands in state='error' with its traceback in the ledger, and the
+    sweep still completes the remaining ready jobs (unlike the
+    reference's cascade, etl_cron.py:39-55)."""
+    from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
+    from cubicerp_client_etl_spark.plans.interpreter import run_ready_jobs
+    from cubicerp_client_etl_spark.sinks.ledger import ledger_job_id
+    from tests.test_rpc_connector import _JobServer, _broken_job, _start_server
+
+    bad_ledger = str(tmp_path / "bad_ledger")
+    specs = {
+        1: _job(tmp_path / "a"),
+        2: _broken_job(tmp_path, "broken", bad_ledger),
+        3: _job(tmp_path / "b"),
+        4: _job(tmp_path / "c"),
+    }
+    srv, state, port = _start_server(_JobServer([
+        (1, "good_a", "ready", "batch"),
+        (2, "broken", "ready", "batch"),
+        (3, "good_b", "ready", "batch"),
+        (4, "done_already", "done", "batch"),
+    ]))
+    try:
+        t = XmlRpcTransport(f"http://127.0.0.1:{port}", "erp", "admin", "secret")
+        out = run_ready_jobs(spark, t, lambda row: specs[int(row["id"])])
+
+        states = [state.store[jid]["state"] for jid in range(1, 5)]
+        assert states == ["done", "error", "done", "done"]
+        assert state.history[2] == ["ready", "running", "error"]
+        assert state.history[4] == ["done"]
+        # failure is in the broken job's ledger, not swallowed
+        led = spark.read.parquet(bad_ledger)
+        err = led.filter(F.col("level") == "error").collect()
+        assert len(err) == 1 and err[0]["job_id"] == ledger_job_id("broken")
+        assert "nope.parquet" in err[0]["message"]
+        # completed jobs produced their sinks
+        assert sorted(out) == [1, 3]
+        assert out[1].count() > 0 and out[3].count() > 0
+        # re-sweep is a no-op: nothing left in 'ready'
+        assert run_ready_jobs(spark, t, lambda row: specs[int(row["id"])]) == {}
+        assert [state.store[jid]["state"] for jid in range(1, 5)] == states
+    finally:
+        srv.shutdown()
+
+
 def test_orc_and_xml_resource_roundtrip(spark, tmp_path):
     """A9 extension: engine-native ORC and XML resources run the full
     extract→transform→load lifecycle (XML rowTag honored both ways)."""
