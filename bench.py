@@ -140,8 +140,12 @@ def main() -> None:
                 REGISTRY[name].fn(spark, WARM_DIR).write.format("noop").mode(
                     "overwrite"
                 ).save()
-            except Exception:
-                pass  # warm-up is best-effort; timing still valid without it
+            except Exception as ex:
+                # warm-up is best-effort; timing stays valid without it
+                print(
+                    f"warm-up failed: {name}: {type(ex).__name__}: {ex}",
+                    file=sys.stderr,
+                )
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     # Two flagships are genuinely unstable run-to-run (round-8 judge
     # re-run: SNM spread 22.5 s over median 4.1 s — first run pays the
@@ -208,14 +212,11 @@ def main() -> None:
         # committed rename history so a rotated query keeps its
         # cross-round yardstick instead of silently dropping out of
         # load-flag rule 3
-        try:
-            sys.path.insert(0, os.path.join(here, "tools"))
-            from hash_ledger import load_maps, translate
+        sys.path.insert(0, os.path.join(here, "tools"))
+        from hash_ledger import load_maps, translate
 
-            maps = load_maps()
-            prev = {translate(n, maps): v for n, v in prev.items()}
-        except Exception:
-            pass  # translation is best-effort; untranslated keys just skip rule 3
+        maps = load_maps()
+        prev = {translate(n, maps): v for n, v in prev.items()}
     load_warnings = load_flags(samples, prev)
     if load_warnings:
         print(

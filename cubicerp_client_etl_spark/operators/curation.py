@@ -44,10 +44,11 @@ def shingles(tokens_col: Column, n: int) -> Column:
     """``array<string>`` of space-joined token n-grams (empty when the
     document has fewer than ``n`` tokens).
 
-    JVM-side: ``transform`` over a ``sequence`` of start offsets with
-    ``slice`` + ``array_join`` — no explode yet, so callers choose when
-    to flatten. Guarded with ``when`` because Spark's ``sequence(1, 0)``
-    counts DOWN (descending step) instead of producing an empty array.
+    JVM-side: a ``zip_with`` chain pairs the tokens with ``n - 1``
+    shifted ``slice`` views, joining each pair with a space, and a final
+    ``slice`` keeps the ``len - n + 1`` full shingles — no explode yet,
+    so callers choose when to flatten. Guarded with ``when`` so a
+    document shorter than ``n`` yields an empty array.
     """
     if n < 1:
         raise ValueError("shingle size must be >= 1")

@@ -1,5 +1,6 @@
 """Round-6 extension waves (q171+ at birth; the flagships were
-later rotated into the driver window by tools/renumber_r6b.py):
+later rotated into the driver window by the round-6 renames in
+tools/renames.json):
 positional fingerprinting,
 portable-HLL cardinality, deterministic corpus splits, DSIR importance
 weighting, BM25 retrieval, tokenizer-fertility observability, LSH

@@ -31,13 +31,18 @@ class FWOutColumn:
     forced_value: str | None = None  # B4: overrides row data at write
 
 
-def render_fixed_width_lines(df: DataFrame, columns: list[FWOutColumn]) -> DataFrame:
-    """Project df → single-column ('value') DataFrame of rendered lines."""
+def _fixed_width_line(columns: list[FWOutColumn]) -> Column:
+    """One ``concat`` of every column's ``fw_render``: the rendered line."""
     pieces: list[Column] = []
     for c in columns:
         src = F.lit(c.forced_value) if c.forced_value is not None else F.col(c.name)
         pieces.append(fw_render(src, c.length, c.align, c.fill))
-    return df.select(F.concat(*pieces).alias("value"))
+    return F.concat(*pieces)
+
+
+def render_fixed_width_lines(df: DataFrame, columns: list[FWOutColumn]) -> DataFrame:
+    """Project df → single-column ('value') DataFrame of rendered lines."""
+    return df.select(_fixed_width_line(columns).alias("value"))
 
 
 def write_fixed_width(
@@ -60,12 +65,8 @@ def write_fixed_width(
     # header/body/footer sequence is encoded in a sort key instead.
     spark = df.sparkSession
     keys = list(order_by or [])
-    pieces: list[Column] = []
-    for c in columns:
-        src = F.lit(c.forced_value) if c.forced_value is not None else F.col(c.name)
-        pieces.append(fw_render(src, c.length, c.align, c.fill))
     body = df.select(
-        F.concat(*pieces).alias("value"),
+        _fixed_width_line(columns).alias("value"),
         F.lit(1).alias("__ord"),
         *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)],
     )

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Regenerate QUERIES.md (corpus index) from the live registry and the
-round-1→round-2 rename map. Run after adding/renaming queries."""
+committed rename table (tools/renames.json). Run after adding/renaming
+queries."""
 
 from __future__ import annotations
 
@@ -14,7 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import json  # noqa: E402
 
 from hash_ledger import load_maps, translate  # noqa: E402
-from renumber import MAPPING  # noqa: E402
 
 from cubicerp_client_etl_spark.queries import REGISTRY  # noqa: E402
 
@@ -27,7 +27,7 @@ def main() -> None:
     # committed rename history (the HASHLEDGER chain), then invert.
     maps = load_maps()
     inv: dict[str, str] = {}
-    for r1name in MAPPING:
+    for r1name in maps[0]:
         cur = translate(r1name, maps)
         if cur in REGISTRY:
             inv[cur] = r1name
@@ -51,11 +51,11 @@ def main() -> None:
         "sub-operators (xml-id resolve, name-search, insert-if-absent,",
         "merge modes) are out-of-window between rotations and keep",
         "sweep + pytest coverage plus driver hashes under earlier names.",
-        "A per-round rotation treadmill (`tools/renumber_r*.py`, pairwise",
-        "number swaps with audit headers) cycles never-driver-hashed",
+        "A per-round rotation treadmill (pairwise number swaps, one entry",
+        "per rotation in `tools/renames.json`) cycles never-driver-hashed",
         "queries in. Old (round-1) names are listed for cross-referencing",
         "CORRECTNESS_r01 evidence; the rename maps' source of truth is",
-        "tools/renumber*.py, and each round's old→new table is in that",
+        "tools/renames.json, and each round's rationale is in that",
         "round's CHANGES_r*.md. The `driver hashes` column lists every",
         "round in which this query — under ANY historical name — carried",
         "a green driver-hash row, straight from the committed",

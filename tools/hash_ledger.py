@@ -2,22 +2,29 @@
 """Canonical ever-driver-hashed ledger (judge r12 item 3).
 
 Folds every ``CORRECTNESS_r*.json`` the driver has ever recorded
-through the complete committed rename history (``tools/renumber*.py``,
-rounds 2..12) and emits ``HASHLEDGER.json`` mapping each CURRENT
+through the complete committed rename history (``tools/renames.json``,
+rounds 2..15) and emits ``HASHLEDGER.json`` mapping each CURRENT
 registry name to the rounds in which it — under any historical name —
 carried a green driver-hash row (rows+schema+hash all true, err null).
 
+``tools/renames.json`` is a chronological list of
+``{"round", "source", "mapping"}`` entries, one per rotation. A new
+rotation appends one entry and records its rationale in that round's
+CHANGES. ``source`` names the one-shot script that applied an older
+entry (``git log -- tools/<source>`` finds it and its audit header).
+
 Why chaining through *all* maps in chronological order is sound even
 though we don't hardcode when each CORRECTNESS file was recorded
-relative to each swap: every rename is a pairwise number swap with the
-semantic suffix preserved (asserted by each renumber tool), so a
-POST-swap name (qB_x from the pair qA_x<->qB_y) can only equal an OLD
-key of the same map if x == y, i.e. never.  A name recorded after a map
-ran therefore passes through that map unmatched, while a name recorded
-before it translates exactly once.  The r2 map (``renumber.py``) is the
-full two-digit -> zero-padded renumbering of the round-1 corpus; it is
-what makes the round-1 names (``q01_*`` .. ``q120_*``) translatable —
-the piece the judge's own reconstruction was missing.
+relative to each swap: every rename after round 2 is a pairwise number
+swap with the semantic suffix preserved (asserted by
+``tests/test_renames.py``), so a POST-swap name (qB_x from the pair
+qA_x<->qB_y) can only equal an OLD key of the same map if x == y, i.e.
+never.  A name recorded after a map ran therefore passes through that
+map unmatched, while a name recorded before it translates exactly once.
+The round-2 map is the full two-digit -> zero-padded renumbering of the
+round-1 corpus; it is what makes the round-1 names (``q01_*`` ..
+``q120_*``) translatable — the piece the judge's own reconstruction was
+missing.
 
 The ledger is the single source of truth for rotation planning:
 ``never_hashed`` feeds the incoming side of a window rotation and the
@@ -36,35 +43,18 @@ import sys
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
-# Chronological order of every rename that ever ran.
-MAP_FILES = [
-    "renumber.py",  # round 2: q01..q120 two-digit era -> q001..q117
-    "renumber_r4.py",
-    "renumber_r6.py",
-    "renumber_r6b.py",
-    "renumber_r7.py",
-    "renumber_r8.py",
-    "renumber_r8b.py",
-    "renumber_r8c.py",
-    "renumber_r9.py",
-    "renumber_r10.py",
-    "renumber_r11.py",
-    "renumber_r12.py",
-    "renumber_r13.py",
-    "renumber_r14.py",
-    "renumber_r15.py",  # may not exist yet when this tool first runs
-]
+RENAMES = ROOT / "tools" / "renames.json"
 
 
-def load_maps() -> list[dict[str, str]]:
-    maps = []
-    for name in MAP_FILES:
-        path = ROOT / "tools" / name
-        if not path.exists():
-            continue
-        m = re.search(r"MAPPING\s*=\s*\{(.*?)\n\}", path.read_text(), re.S)
-        maps.append(eval("{" + m.group(1) + "}"))  # noqa: S307 - our own files
-    return maps
+def load_maps(after_round: int | None = None) -> list[dict[str, str]]:
+    """Every rename mapping in chronological order; only those of rounds
+    after ``after_round`` when given."""
+    entries = json.loads(RENAMES.read_text())
+    return [
+        e["mapping"]
+        for e in entries
+        if after_round is None or e["round"] > after_round
+    ]
 
 
 def translate(name: str, maps: list[dict[str, str]]) -> str:

@@ -43,6 +43,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hash_ledger import load_maps  # noqa: E402
+
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -132,7 +134,7 @@ def prior_census(below: int | None = None) -> tuple[int | None, dict, int]:
     """Latest committed census (strictly below round ``below`` when
     given — a --merge into this round's census must NOT pick itself up
     as the baseline), with its query names translated through every
-    renumber map published SINCE that round — so a renamed query keeps
+    rename map published SINCE that round — so a renamed query keeps
     its cross-round scaling baseline instead of silently losing the
     3x-regression check. Returns (round, queries, n_renamed)."""
     cands = []
@@ -149,17 +151,7 @@ def prior_census(below: int | None = None) -> tuple[int | None, dict, int]:
     except (OSError, ValueError):
         return rnd, {}, 0
     renamed = 0
-    for later in sorted(
-        int(m.group(1))
-        for p in glob.glob(os.path.join(HERE, "tools/renumber_r*.py"))
-        if (m := re.search(r"renumber_r(\d+)\.py$", p)) and int(m.group(1)) > rnd
-    ):
-        try:
-            import importlib
-
-            mapping = importlib.import_module(f"renumber_r{later}").MAPPING
-        except Exception:  # noqa: BLE001 — older maps may not import
-            continue
+    for mapping in load_maps(after_round=rnd):
         translated = {mapping.get(n, n): r for n, r in queries.items()}
         renamed += sum(1 for n in queries if n in mapping)
         queries = translated
@@ -247,8 +239,11 @@ def main() -> int:
         REGISTRY[names[0]].fn(spark, args.base).write.format("noop").mode(
             "overwrite"
         ).save()
-    except Exception:  # noqa: BLE001 — warmup is best-effort
-        pass
+    except Exception as ex:  # noqa: BLE001 — warmup is best-effort
+        print(
+            f"warm-up failed: {names[0]}: {type(ex).__name__}: {ex}",
+            file=sys.stderr,
+        )
 
     rows: dict[str, dict] = {}
     failures: list[str] = []
