@@ -3,16 +3,64 @@
 The reference implements four flavors of per-row, memo-cached lookup
 against remote dictionaries (value mappings cubicerpetl/cubicerpetl.py:
 624-649, xml-ids :598-611, name-search :613-622, insert-if-absent
-:717-726). Here each becomes a broadcast left join — one shuffle-free
-pass regardless of fact-table size, because the dictionary side is small
-by construction.
+:717-726). A value mapping declared on the driver becomes one
+expression, ``try_element_at`` over a literal map, so decoding is a
+projection with no join. A mapping held in a DataFrame, and every other
+lookup here, is a broadcast left join — one shuffle-free pass regardless
+of fact-table size, because the dictionary side is small by construction.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+
+def _decode(val: Column, label: Column, default: Column, return_null: bool) -> Column:
+    """The value-mapping rule (C1), re-derived over true SQL NULLs
+    (SURVEY §1.3) from the reference (cubicerpetl.py:643-648), given the
+    input, its looked-up label (NULL on a miss) and the default label
+    (NULL without a default line):
+
+    * NULL input → NULL if ``return_null`` else the default (if any);
+    * matched input → its label;
+    * unmatched input → the default label if a default line exists,
+      otherwise the original value passes through.
+    """
+    null_case = F.lit(None) if return_null else default
+    return F.when(val.isNull(), null_case).otherwise(
+        F.coalesce(label, default, val.cast("string"))
+    )
+
+
+def value_mapping_expr(
+    val: Column | str,
+    lines: Iterable[tuple[str | None, str | None]],
+    default: str | None = None,
+    return_null: bool = False,
+) -> Column:
+    """Decode ``val`` through driver-side mapping ``lines`` — ``(raw
+    value, label)`` pairs — as one expression (C1): ``try_element_at``
+    over a literal ``create_map``, so the decode is part of the
+    projection and no join, broadcast or Python-built frame is planned.
+
+    ``lines`` fold into a dict like the reference's (a later line for the
+    same raw value wins); a line with a ``None`` raw value never matches,
+    as in the join form. The input is compared as a string.
+    """
+    val = F.col(val) if isinstance(val, str) else val
+    table = {name: label for name, label in lines if name is not None}
+    if table:
+        literal = F.create_map(
+            *[F.lit(x).cast("string") for kv in table.items() for x in kv]
+        )
+        label = F.try_element_at(literal, val.cast("string"))
+    else:
+        label = F.lit(None).cast("string")
+    return _decode(val, label, F.lit(default).cast("string"), return_null)
 
 
 def value_mapping_decode(
@@ -22,17 +70,14 @@ def value_mapping_decode(
     out_col: str | None = None,
     return_null: bool = False,
 ) -> DataFrame:
-    """Decode a column through a value-mapping dictionary (C1).
+    """Decode a column through a value-mapping dictionary held in a
+    DataFrame (C1), by two broadcast left joins.
 
     ``mapping`` has columns ``name`` (the raw value), ``label`` (the
     decoded value) and ``is_default`` (at most one true row supplying the
-    fallback). Semantics mirror the reference (cubicerpetl.py:643-648),
-    re-derived over true SQL NULLs (SURVEY §1.3):
-
-    * NULL input → NULL if ``return_null`` else the default (if any);
-    * matched input → its label;
-    * unmatched input → the default label if a default line exists,
-      otherwise the original value passes through.
+    fallback); the rule is ``_decode``'s. A frame has no line order, so a
+    raw value listed twice matches twice and its row fans out; a mapping
+    known on the driver goes through ``value_mapping_expr`` instead.
     """
     out_col = out_col or f"{value_col}_decoded"
     lines = mapping.filter(~F.col("is_default")).select(
@@ -46,10 +91,8 @@ def value_mapping_decode(
         .join(F.broadcast(lines), F.col(value_col) == F.col("__map_name"), "left")
         .join(F.broadcast(default), "__dflt_key", "left")
     )
-    val = F.col(value_col)
-    null_case = F.lit(None) if return_null else F.col("__dflt_label")
-    decoded = F.when(val.isNull(), null_case).otherwise(
-        F.coalesce(F.col("__map_label"), F.col("__dflt_label"), val.cast("string"))
+    decoded = _decode(
+        F.col(value_col), F.col("__map_label"), F.col("__dflt_label"), return_null
     )
     return joined.withColumn(out_col, decoded).drop(
         "__map_name", "__map_label", "__dflt_key", "__dflt_label"

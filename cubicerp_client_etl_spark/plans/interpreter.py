@@ -29,14 +29,9 @@ from pyspark.storagelevel import StorageLevel
 
 from cubicerp_client_etl_spark.compilers.domain import compile_domain
 from cubicerp_client_etl_spark.compilers.template import render_date_template
-from cubicerp_client_etl_spark.operators.lookups import value_mapping_decode
+from cubicerp_client_etl_spark.operators.lookups import value_mapping_expr
 from cubicerp_client_etl_spark.operators.merge import apply_reprocess_mode
-from cubicerp_client_etl_spark.plans.spec import (
-    JobSpec,
-    MappingSpec,
-    ResourceSpec,
-    TransformSpec,
-)
+from cubicerp_client_etl_spark.plans.spec import JobSpec, ResourceSpec, TransformSpec
 from cubicerp_client_etl_spark.sinks.ledger import (
     build_ledger,
     ledger_job_id,
@@ -212,18 +207,18 @@ def _parse_text(res: ResourceSpec, lines: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------- transform
 def transform(df: DataFrame, spec: TransformSpec, job: JobSpec) -> DataFrame:
-    """Field program → one select + mapping joins (B1/B2/B9/C1, K-hooks).
+    """Field program → one select (B1/B2/B9/C1, K-hooks).
 
     Expressions are SQL strings compiled with F.expr — declarative and
-    optimizer-visible (never exec'd Python, SURVEY §4.4.6).
+    optimizer-visible (never exec'd Python, SURVEY §4.4.6). A mapped
+    field decodes inside the same select: its mapping is a literal map
+    expression (``value_mapping_expr``), not a frame to join.
     """
-    spark = df.sparkSession
     if "pre" in job.python_hooks:  # K1 — explicit, registered, typed
         df = job.python_hooks["pre"](df)
 
     mappings = {m.name: m for m in spec.mappings}
     out_cols = []
-    post_maps: list[tuple[str, MappingSpec, bool]] = []
     for f_ in spec.fields:
         if f_.value:
             expr = F.expr(render_date_template(f_.value, job.run_date))
@@ -231,21 +226,14 @@ def transform(df: DataFrame, spec: TransformSpec, job: JobSpec) -> DataFrame:
             expr = F.col(f_.field_name)
         else:
             expr = F.col(f_.name)
-        out_cols.append(expr.alias(f_.name))
         if f_.mapping:
-            post_maps.append((f_.name, mappings[f_.mapping], f_.search_null))
+            m = mappings[f_.mapping]
+            expr = value_mapping_expr(
+                expr, m.lines, m.default, m.return_null or f_.search_null
+            )
+        out_cols.append(expr.alias(f_.name))
 
     out = df.select(*out_cols)
-
-    for col_name, mspec, search_null in post_maps:
-        mdf = spark.createDataFrame(
-            [(n, lb, False) for n, lb in mspec.lines]
-            + ([(None, mspec.default, True)] if mspec.default is not None else []),
-            "name string, label string, is_default boolean",
-        )
-        out = value_mapping_decode(
-            out, col_name, mdf, out_col=col_name, return_null=mspec.return_null or search_null
-        )
 
     if spec.filter_domain:  # B7 continue_on, declaratively
         out = out.filter(compile_domain(list(spec.filter_domain)))
@@ -298,7 +286,12 @@ def load_sink(
         # ledger records (not the plan's optimistic action).
         from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions
 
-        out = merged
+        # ship over the session's shuffle partitions hashed by pk, one
+        # transport client each: left to AQE, a small load coalesces to
+        # one task (one sequential client, and a rejected batch then
+        # retries row by row across the whole load)
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        out = merged.repartition(n_parts, job.pk_field)
         if id_map is not None and "model_id" not in out.columns:
             out = out.join(id_map, job.pk_field, "left")
         if "model_id" not in out.columns:
@@ -309,12 +302,15 @@ def load_sink(
             res.rpc_model,
             pk_col=job.pk_field,
         )
-        rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
-        rpc_ledger.count()  # ship exactly once
-        _append_ledger(
-            job, rpc_ledger, "pk", level_col="level", message_col="message",
-            model_id_col="model_id",
-        )
+        # the one action that ships the rows: the ledger write, or a
+        # noop write when the job keeps no ledger
+        if job.ledger_path:
+            _append_ledger(
+                job, rpc_ledger, "pk", level_col="level", message_col="message",
+                model_id_col="model_id",
+            )
+        else:
+            rpc_ledger.write.format("noop").mode("overwrite").save()
         return merged
 
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
@@ -455,8 +451,10 @@ def run_ready_jobs(
             _log.warning("etl job %s failed:\n%s", jid, tb)
             transport.execute_kw(job_model, "write", [[jid], {"state": "error"}])
             if job is not None:
-                error_row = spark.createDataFrame(
-                    [(None, "error", tb)], "pk string, level string, message string"
+                error_row = spark.range(0, 1, 1, 1).select(
+                    F.lit(None).cast("string").alias("pk"),
+                    F.lit("error").alias("level"),
+                    F.lit(tb).alias("message"),
                 )
                 _append_ledger(
                     job, error_row, "pk", level_col="level", message_col="message"

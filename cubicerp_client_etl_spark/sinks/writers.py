@@ -5,7 +5,7 @@ one ``concat`` expression (H1/H11; reference semantics at
 cubicerpetl/cubicerpetl.py:548-586 including forced values and the
 rjust-keeps-tail truncation). Header/footer emission (from the first and
 last body row, :421-425,433-437) forces single-file output — the writer
-coalesces to 1 only in that mode; plain writes stay fully parallel.
+goes to one partition only in that mode; plain writes stay fully parallel.
 """
 
 from __future__ import annotations
@@ -60,9 +60,11 @@ def write_fixed_width(
         render_fixed_width_lines(df, columns).write.mode("overwrite").text(path)
         return
 
-    # Single ordered file: one explicit global sort over (__ord, keys) —
-    # union partition order is NOT a contract (AQE may re-plan), so the
-    # header/body/footer sequence is encoded in a sort key instead.
+    # Single ordered file: one partition sorted on (__ord, keys) — union
+    # partition order is NOT a contract (AQE may re-plan), so the
+    # header/body/footer sequence is encoded in a sort key instead. The
+    # file is one task either way; repartition(1) + a partition-local
+    # sort skips the range-partition sampling job a global orderBy adds.
     spark = df.sparkSession
     keys = list(order_by or [])
     body = df.select(
@@ -88,9 +90,9 @@ def write_fixed_width(
     for p in parts[1:]:
         out = out.unionByName(p)
     (
-        out.orderBy("__ord", *[f"__k{i}" for i in range(len(keys))])
+        out.repartition(1)
+        .sortWithinPartitions("__ord", *[f"__k{i}" for i in range(len(keys))])
         .select("value")
-        .coalesce(1)
         .write.mode("overwrite")
         .text(path)
     )

@@ -18,7 +18,9 @@ def read_inline_payload(
 ) -> DataFrame:
     """base64 text payload → (file='<inline>', _line_no, value) lines,
     the same shape sources.lines.read_lines produces."""
-    df = spark.createDataFrame([(payload_b64,)], "b64 string")
+    # range + lit keeps the one-row frame in the JVM: no Python-pickled
+    # scan for the payload
+    df = spark.range(0, 1, 1, 1).select(F.lit(payload_b64).alias("b64"))
     text = F.decode(F.unbase64(F.col("b64")), encoding)
     lines = F.split(F.regexp_replace(text, r"(\r?\n)+$", ""), r"\r?\n")
     return df.select(

@@ -116,6 +116,35 @@ def test_fixed_width_roundtrip_with_header_footer(spark, nation_df, tmp_path):
     assert all(int(r["f_count"]) == 3 for r in rows)
 
 
+def test_fixed_width_ordered_write_keeps_key_order(spark, tmp_path):
+    """About 2k rows spread over 4 shuffled partitions, written with
+    ``order_by``, a header and a footer: one part file, header first,
+    footer last, body lines in key order."""
+    n = 2000
+    df = (
+        spark.range(n)
+        .select(
+            ((F.col("id") * 7919) % n).cast("int").alias("n_nationkey"),
+            F.concat(F.lit("N"), F.col("id").cast("string")).alias("n_name"),
+            (F.col("id") % 5).cast("int").alias("n_regionkey"),
+        )
+        .repartition(4, "n_name")
+    )
+    assert df.rdd.getNumPartitions() >= 4
+    out = str(tmp_path / "fw_ordered")
+    write_fixed_width(
+        df, out, FW_OUT, order_by=["n_nationkey"],
+        header_line="H2024010599", footer_line="F0000002000",
+    )
+    files = glob.glob(f"{out}/part-*")
+    assert len(files) == 1
+    raw = open(files[0]).read().rstrip("\n").split("\n")
+    assert len(raw) == n + 2
+    assert raw[0] == "H2024010599" and raw[-1] == "F0000002000"
+    keys = [int(line[:4]) for line in raw[1:-1]]
+    assert keys == list(range(n))
+
+
 def test_csv_header_footer_broadcast(spark, tmp_path):
     p = tmp_path / "hf.csv"
     p.write_text(

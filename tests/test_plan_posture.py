@@ -767,3 +767,62 @@ def test_q136_fuzzy_screen_banded_equi_join(spark):
     assert "NestedLoop" not in plan.replace("BroadcastNestedLoopJoin", "")
     # the 1-row planted-count broadcast is the only nested-loop join
     assert plan.count("BroadcastNestedLoopJoin") <= 1
+
+
+def test_online_mapped_job_plans_without_rdd_scan_or_join(spark):
+    """An online job's inline payload and its value mapping stay JVM
+    literals: the executed plan of extract → transform has no
+    ``ExistingRDD`` scan (a Python-pickled ``createDataFrame``) and no
+    join (a mapping frame)."""
+    import base64
+
+    from cubicerp_client_etl_spark.plans.interpreter import extract, transform
+    from cubicerp_client_etl_spark.plans.spec import (
+        ColumnSpec,
+        FieldSpec,
+        JobSpec,
+        MappingSpec,
+        ResourceSpec,
+        TransformSpec,
+    )
+
+    payload = base64.b64encode(b"1;A\n2;R\n3;N\n").decode()
+    job = JobSpec(
+        name="online_mapped",
+        job_type="online",
+        input_payload_b64=payload,
+        extract=ResourceSpec(
+            name="in", f_type="csv", txt_separator=";",
+            columns=(ColumnSpec("k"), ColumnSpec("flag")),
+        ),
+        transform=TransformSpec(
+            name="t",
+            fields=(
+                FieldSpec("k", field_name="k"),
+                FieldSpec("flag", field_name="flag", mapping="flags"),
+            ),
+            mappings=(MappingSpec("flags", (("A", "Acc"), ("R", "Ret")), "Unk"),),
+        ),
+        load=ResourceSpec(name="out"),
+    )
+    df = transform(extract(spark, job), job.transform, job)
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("1", "Acc"), ("2", "Ret"), ("3", "Unk")
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_job_path_sources_build_no_python_frames():
+    """Driver-side literals on the ETL job path are JVM expressions: no
+    module under ``plans/`` or ``sources/`` calls ``createDataFrame``."""
+    import pathlib
+
+    import cubicerp_client_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = sorted((root / "plans").glob("*.py")) + sorted((root / "sources").glob("*.py"))
+    assert files
+    offenders = [p.name for p in files if "createDataFrame(" in p.read_text()]
+    assert offenders == []

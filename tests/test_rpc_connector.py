@@ -704,3 +704,78 @@ def test_ledger_job_id_is_stable_across_hash_seeds():
     }
     assert ids == {str(ledger_job_id("nightly_invoices"))}
     assert 0 <= ledger_job_id("nightly_invoices") < 2**31
+
+
+class _CountingTransport:
+    """Executor-importable transport that appends one line per
+    ``create_batch`` call, the created rows' pks, to a log file (its
+    config string), so a test can count sends across worker processes."""
+
+    def __init__(self, log_path):
+        self.log_path = log_path
+
+    def create_batch(self, model, rows):
+        with open(self.log_path, "a") as fh:
+            fh.write(" ".join(str(r["pk"]) for r in rows) + "\n")
+        return [{"ok": True, "id": int(r["pk"]) * 2, "error": None} for r in rows]
+
+
+def _counting_transport(log_path):
+    return _CountingTransport(log_path)
+
+
+def test_rpc_load_ships_each_row_once_with_and_without_ledger(spark, tmp_path):
+    """An RPC load runs one shipping action: the ledger write when the
+    job keeps a ledger, a noop write when it does not. Either way every
+    row reaches the server exactly once, and a one-partition source still
+    ships from several partitions (AQE does not fold the load into one
+    sequential client)."""
+    import base64
+
+    from cubicerp_client_etl_spark.plans.interpreter import run_job
+    from cubicerp_client_etl_spark.plans.spec import (
+        ColumnSpec,
+        FieldSpec,
+        JobSpec,
+        ResourceSpec,
+        TransformSpec,
+    )
+
+    pks = [str(i) for i in range(1, 41)]
+    payload = base64.b64encode("".join(f"{k};{k}\n" for k in pks).encode()).decode()
+    for ledger in (True, False):
+        log = tmp_path / f"sent_{ledger}.log"
+        job = JobSpec(
+            name=f"rpc_ship_{ledger}",
+            job_type="online",
+            input_payload_b64=payload,
+            extract=ResourceSpec(
+                name="in", f_type="csv", txt_separator=";",
+                columns=(ColumnSpec("k"), ColumnSpec("v")),
+            ),
+            transform=TransformSpec(
+                name="t",
+                fields=(
+                    FieldSpec("pk", field_name="k"),
+                    FieldSpec("v", value="CAST(v AS BIGINT)"),
+                ),
+            ),
+            load=ResourceSpec(
+                name="out",
+                etl_type="rpc",
+                rpc_model="res.partner",
+                rpc_transport="tests.test_rpc_connector:_counting_transport",
+                rpc_transport_config=str(log),
+            ),
+            pk_field="pk",
+            ledger_path=str(tmp_path / "ledger") if ledger else None,
+        )
+        merged = run_job(spark, job)
+        calls = log.read_text().splitlines()
+        assert sorted(pk for call in calls for pk in call.split()) == sorted(pks), ledger
+        assert len(calls) > 1, calls
+        if ledger:
+            rows = spark.read.parquet(str(tmp_path / "ledger")).collect()
+            assert sorted(r.pk for r in rows) == sorted(pks)
+            assert {r.model_id for r in rows} == {int(k) * 2 for k in pks}
+        merged.unpersist()
