@@ -286,12 +286,7 @@ def load_sink(
         # ledger records (not the plan's optimistic action).
         from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions
 
-        # ship over the session's shuffle partitions hashed by pk, one
-        # transport client each: left to AQE, a small load coalesces to
-        # one task (one sequential client, and a rejected batch then
-        # retries row by row across the whole load)
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        out = merged.repartition(n_parts, job.pk_field)
+        out = merged
         if id_map is not None and "model_id" not in out.columns:
             out = out.join(id_map, job.pk_field, "left")
         if "model_id" not in out.columns:
@@ -302,15 +297,13 @@ def load_sink(
             res.rpc_model,
             pk_col=job.pk_field,
         )
-        # the one action that ships the rows: the ledger write, or a
-        # noop write when the job keeps no ledger
-        if job.ledger_path:
-            _append_ledger(
-                job, rpc_ledger, "pk", level_col="level", message_col="message",
-                model_id_col="model_id",
-            )
-        else:
-            rpc_ledger.write.format("noop").mode("overwrite").save()
+        rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
+        rpc_ledger.count()  # ship exactly once
+        _append_ledger(
+            job, rpc_ledger, "pk", level_col="level", message_col="message",
+            model_id_col="model_id",
+        )
+        rpc_ledger.unpersist()
         return merged
 
     path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""

@@ -725,11 +725,9 @@ def _counting_transport(log_path):
 
 
 def test_rpc_load_ships_each_row_once_with_and_without_ledger(spark, tmp_path):
-    """An RPC load runs one shipping action: the ledger write when the
-    job keeps a ledger, a noop write when it does not. Either way every
-    row reaches the server exactly once, and a one-partition source still
-    ships from several partitions (AQE does not fold the load into one
-    sequential client)."""
+    """Every row of an RPC load reaches the server exactly once, whether
+    or not the job keeps a ledger, and the load leaves no cached frame
+    behind once the caller unpersists the returned one."""
     import base64
 
     from cubicerp_client_etl_spark.plans.interpreter import run_job
@@ -770,12 +768,13 @@ def test_rpc_load_ships_each_row_once_with_and_without_ledger(spark, tmp_path):
             pk_field="pk",
             ledger_path=str(tmp_path / "ledger") if ledger else None,
         )
+        cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
         merged = run_job(spark, job)
         calls = log.read_text().splitlines()
         assert sorted(pk for call in calls for pk in call.split()) == sorted(pks), ledger
-        assert len(calls) > 1, calls
         if ledger:
             rows = spark.read.parquet(str(tmp_path / "ledger")).collect()
             assert sorted(r.pk for r in rows) == sorted(pks)
             assert {r.model_id for r in rows} == {int(k) * 2 for k in pks}
         merged.unpersist()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
