@@ -27,16 +27,27 @@ chain-friendly token wide.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def _reliable(df: DataFrame) -> bool:
-    """True iff the session has a reliable checkpoint dir configured."""
+    """True iff the session has a reliable checkpoint dir configured. A
+    probe that raises (a py4j edge) falls back to local checkpoints with
+    a warning naming the exception."""
     try:
         return (
             df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined()
         )
-    except Exception:  # pragma: no cover - py4j edge; default to local
+    except Exception as exc:
+        _log.warning(
+            "checkpoint-dir probe failed (%s: %s); pinning with localCheckpoint",
+            type(exc).__name__,
+            exc,
+        )
         return False
 
 

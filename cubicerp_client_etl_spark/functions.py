@@ -1,4 +1,6 @@
-"""Scalar-function pack + oracle-exact numeric helpers (SURVEY §2.H).
+"""Scalar-function pack + oracle-exact numeric helpers (SURVEY §2.H),
+and the shingle primitives every dedup/curation operator shares
+(SURVEY L-dedup2): the two tokenizers and the one n-gram builder.
 
 Everything here is built-in Catalyst expressions (JVM-side, codegen'd) —
 no UDFs. The ``dsum``/``dmoney`` helpers exist because double-precision
@@ -214,3 +216,51 @@ def business_days_between(start: Column, end: Column) -> Column:
         "bigint"
     )
     return (ce - cs).cast("bigint")
+
+
+# --- shingle primitives (SURVEY L-dedup2) ---
+
+
+def space_tokens(text: Column | str) -> Column:
+    """Split on single spaces, verbatim: no trim, no case folding (the
+    curation family's token law; oracles replay it as
+    ``string_split(text, ' ')``)."""
+    return F.split(F.col(text) if isinstance(text, str) else text, " ")
+
+
+def word_tokens(text: Column | str) -> Column:
+    """Lower-cased, trimmed, whitespace-run split — the token law of
+    ``dedup.shingles`` and the SimHash families (oracles replay it as
+    ``string_split_regex(lower(trim(text)), '\\s+')``)."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.split(F.lower(F.trim(c)), r"\s+")
+
+
+def ngrams(tokens: Column, n: int) -> Column:
+    """``array<string>`` of the space-joined token ``n``-grams, in
+    document order (empty when the document has fewer than ``n``
+    tokens). Each n-gram is a left fold of ``concat_ws(" ", acc, tok)``,
+    which skips a NULL token (``[NULL, NULL, "c"]`` gives ``" c"``); at
+    ``n = 1`` a NULL token renders as ``""``.
+
+    JVM-side: a ``zip_with`` chain pairs the tokens with ``n - 1``
+    shifted ``slice`` views, joining each pair with a space, and a final
+    ``slice`` keeps the ``len - n + 1`` full n-grams — no explode, so
+    callers choose when to flatten. One pass with no per-offset subarray
+    (measured 5.9 → 1.25 s against transform(sequence → slice) on the
+    sf1 corpus explode). The zip pads the shorter shifted side with
+    NULLs, which ``concat_ws`` skips; those truncated tail entries sit
+    at positions > len−n+1 and the final slice discards them.
+    """
+    if n < 1:
+        raise ValueError("shingle size must be >= 1")
+    ln = F.size(tokens)
+    if n == 1:
+        acc = F.transform(tokens, lambda t: F.concat_ws(" ", t))
+    else:
+        acc = tokens
+        for k in range(1, n):
+            nxt = F.slice(tokens, k + 1, F.greatest(ln - k, F.lit(1)))
+            acc = F.zip_with(acc, nxt, lambda x, y: F.concat_ws(" ", x, y))
+    body = F.slice(acc, 1, F.greatest(ln - (n - 1), F.lit(1)))
+    return F.when(ln >= n, body).otherwise(F.array().cast("array<string>"))

@@ -1,12 +1,10 @@
 from cubicerp_client_etl_spark.operators.lookups import (
     first_hit_lookup,
     insert_if_absent,
-    value_mapping_decode,
 )
 from cubicerp_client_etl_spark.operators.merge import apply_reprocess_mode
 
 __all__ = [
-    "value_mapping_decode",
     "first_hit_lookup",
     "insert_if_absent",
     "apply_reprocess_mode",

@@ -9,6 +9,12 @@ ingest and tokenization — the Gopher/C4-style repetition rules, the
 eval-set n-gram decontamination pass, and chunking for context-window
 packing / RAG indexes.
 
+Tokens and n-grams come from the shared primitives in ``functions``
+(``space_tokens``, ``ngrams``: a document shorter than ``n`` has no
+n-grams); the two scorers that treat such a document as one shingle
+(``boilerplate_shingle_report``, ``ngram_novelty``) use
+``dedup.shingle_rows`` / ``dedup.shingles`` instead.
+
 Scale posture (the design constraint for every function here):
 
 * Everything per-document is a pure Catalyst expression over the
@@ -33,38 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.functions import e6_floor_ratio
-
-
-def _toks(col: Column | str) -> Column:
-    return F.split(F.col(col) if isinstance(col, str) else col, " ")
-
-
-def shingles(tokens_col: Column, n: int) -> Column:
-    """``array<string>`` of space-joined token n-grams (empty when the
-    document has fewer than ``n`` tokens).
-
-    JVM-side: a ``zip_with`` chain pairs the tokens with ``n - 1``
-    shifted ``slice`` views, joining each pair with a space, and a final
-    ``slice`` keeps the ``len - n + 1`` full shingles — no explode yet,
-    so callers choose when to flatten. Guarded with ``when`` so a
-    document shorter than ``n`` yields an empty array.
-    """
-    if n < 1:
-        raise ValueError("shingle size must be >= 1")
-    ln = F.size(tokens_col)
-    # r16: zip_with chain over shifted views instead of
-    # transform(sequence → slice+array_join) — one pass, no per-offset
-    # subarray allocation, byte-identical strings (measured ~5x faster
-    # on the sf1 corpus explode; see dedup.shingles). Null-padded tail
-    # entries from the shorter shifted side are truncated shingles at
-    # positions > ln−n+1, which the final slice discards.
-    acc = tokens_col
-    for k in range(1, n):
-        nxt = F.slice(tokens_col, k + 1, F.greatest(ln - k, F.lit(1)))
-        acc = F.zip_with(acc, nxt, lambda x, y: F.concat_ws(" ", x, y))
-    body = F.slice(acc, 1, F.greatest(ln - (n - 1), F.lit(1)))
-    return F.when(ln >= n, body).otherwise(F.array().cast("array<string>"))
+from cubicerp_client_etl_spark.functions import e6_floor_ratio, ngrams, space_tokens
+from cubicerp_client_etl_spark.operators.dedup import shingle_rows, shingles
 
 
 def repetition_stats(
@@ -93,7 +69,7 @@ def repetition_stats(
     Map-only: one Catalyst projection, no shuffle, no Python. At 100 TB
     this is a streaming pass over the scan with whole-stage codegen.
     """
-    toks = _toks(text_col)
+    toks = space_tokens(text_col)
     srt = F.array_sort(toks)
     zero = F.lit(0).cast("bigint")
     run_acc = F.struct(
@@ -132,7 +108,7 @@ def repetition_stats(
     )
     top = folded["best"]
     sumsq = folded["sumsq"]
-    bg = shingles(toks, 2)
+    bg = ngrams(toks, 2)
 
     base = docs.select(
         F.col(id_col),
@@ -185,11 +161,11 @@ def decontaminate(
     shingles only.
     """
     bench_sh = (
-        benchmark.select(F.explode(shingles(_toks(text_col), n)).alias("sh"))
+        benchmark.select(F.explode(ngrams(space_tokens(text_col), n)).alias("sh"))
         .distinct()
     )
     corp_sh = corpus.select(
-        F.col(id_col), F.explode(shingles(_toks(text_col), n)).alias("sh")
+        F.col(id_col), F.explode(ngrams(space_tokens(text_col), n)).alias("sh")
     )
     return (
         corp_sh.join(F.broadcast(bench_sh), "sh")
@@ -220,7 +196,7 @@ def chunk_documents(
     """
     if chunk_size < 1 or stride < 1:
         raise ValueError("chunk_size and stride must be >= 1")
-    toks = _toks(text_col)
+    toks = space_tokens(text_col)
     n = F.size(toks).cast("bigint")
     # exact integer ceil-div on the SAME `n` expression as the slice
     # below (no re-derived SQL-string token count — a splice of the raw
@@ -267,7 +243,7 @@ def unigram_freq_score(
     vocab-side join is AQE's choice — Zipf vocabularies are small next
     to the corpus, so it resolves to broadcast in practice.
     """
-    tok = docs.select(F.col(id_col), F.explode(_toks(text_col)).alias("tok"))
+    tok = docs.select(F.col(id_col), F.explode(space_tokens(text_col)).alias("tok"))
     hist = tok.groupBy("tok").agg(F.count("*").cast("bigint").alias("freq"))
     scored = (
         tok.join(hist, "tok")
@@ -347,7 +323,7 @@ def bigram_fluency_score(
     partial-agg'd: bigram histogram, head histogram, per-doc rollup;
     the histogram joins resolve to broadcast under Zipf vocabularies.
     """
-    base = docs.select(F.col(id_col), _toks(text_col).alias("_tk")).where(
+    base = docs.select(F.col(id_col), space_tokens(text_col).alias("_tk")).where(
         F.size("_tk") >= 2
     )
     bg = base.select(
@@ -488,9 +464,6 @@ def boilerplate_shingle_report(
     same mass every dedup pass already touches. No windows, no
     all-pairs.
     """
-    from cubicerp_client_etl_spark.functions import e6_floor_ratio
-    from cubicerp_client_etl_spark.operators.dedup import shingle_rows
-
     if not 0 < df_ratio_e6 <= 1_000_000:
         raise ValueError("df_ratio_e6 must be in (0, 1e6]")
     sh = shingle_rows(
@@ -549,8 +522,6 @@ def ngram_novelty(
     doc-keyed count. The reference side reduces to DISTINCT shingles
     before the join, so boilerplate repetition never inflates it.
     """
-    from cubicerp_client_etl_spark.operators.dedup import shingles
-
     # NOTE (r16 measured): checkpointing the distinct (doc, shingle)
     # frame for its two consumers (anti-join + totals) read SLOWER at
     # sf1 (8.4 → 9.9 s A/B median) — the two consumers' distinct

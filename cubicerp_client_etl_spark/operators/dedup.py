@@ -13,7 +13,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.functions import e6_floor_ratio
+from cubicerp_client_etl_spark.functions import (
+    e6_floor_ratio,
+    ngrams,
+    space_tokens,
+    word_tokens,
+)
 from cubicerp_client_etl_spark.checkpointing import pin
 
 
@@ -33,35 +38,21 @@ def shingles(
     text_col: Column | str, n: int = 3, tokens: Column | None = None
 ) -> Column:
     """Word n-gram shingles as an array of strings (distinct not enforced
-    here; MinHash is insensitive to duplicates after the explode-distinct).
+    here; MinHash is insensitive to duplicates after the explode-distinct):
+    ``functions.ngrams`` over ``functions.word_tokens``, except that a
+    document shorter than ``n`` tokens is ONE shingle, its whole
+    normalized text, instead of none.
 
     ``tokens`` (opt-in): a pre-split ``array<string>`` column carrying
-    exactly ``split(lower(trim(text)), r"\\s+")`` — lets a caller that
-    derives several hash families from one corpus pass (the q040
-    datasheet) tokenize ONCE behind a shared exchange instead of once
-    per family. Semantics are identical by contract; the caller owns
-    keeping the token stream in sync with the text column.
+    exactly ``word_tokens(text)`` — lets a caller that derives several
+    hash families from one corpus pass (the q040 datasheet) tokenize
+    ONCE behind a shared exchange instead of once per family. Semantics
+    are identical by contract; the caller owns keeping the token stream
+    in sync with the text column.
     """
-    if tokens is not None:
-        toks = tokens
-    else:
-        c = F.col(text_col) if isinstance(text_col, str) else text_col
-        toks = F.split(F.lower(F.trim(c)), r"\s+")
-    # r16 (guide §1.2 "per-task work"): build shingles as a zip_with
-    # chain over shifted views instead of transform(sequence →
-    # slice+concat) — one pass, no per-offset subarray allocation;
-    # measured 5.9 → 1.25 s for the sf1 corpus explode, byte-identical
-    # strings (concat_ws left-to-right equals joining the slice). The
-    # zip pads the shorter (shifted) side with nulls, which concat_ws
-    # skips — those truncated tail entries sit at positions
-    # > size−n+1 and the final slice discards them.
-    acc = toks
-    for k in range(1, n):
-        nxt = F.slice(toks, k + 1, F.greatest(F.size(toks) - k, F.lit(1)))
-        acc = F.zip_with(acc, nxt, lambda x, y: F.concat_ws(" ", x, y))
-    body = F.slice(acc, 1, F.greatest(F.size(toks) - (n - 1), F.lit(1)))
+    toks = word_tokens(text_col) if tokens is None else tokens
     return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
-        body
+        ngrams(toks, n)
     )
 
 
@@ -159,8 +150,9 @@ def minhash_signatures(
     """Per-document MinHash signature: (id, h0..h{k-1}).
 
     ``tokens_col``: optional name of a pre-split ``array<string>``
-    column on ``df`` (the ``shingles(tokens=...)`` contract) so a
-    multi-family caller tokenizes the corpus once.
+    column on ``df`` holding ``functions.word_tokens(text_col)`` (the
+    ``shingles(tokens=...)`` contract) so a multi-family caller
+    tokenizes the corpus once.
 
     One explode + one groupBy with k min-aggregates — a single shuffle on
     the document id.
@@ -390,8 +382,7 @@ def simhash_bits(text_col: Column | str, n_bits: int = 64) -> Column:
     Hamming distance between two fingerprints is then a zip_with sum —
     see ``hamming_distance``.
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
+    toks = word_tokens(text_col)
     # masks[i] = 1 << (63-i) as SIGNED int64 (top bit is the negative
     # literal), matching bin()'s big-endian rendering bit order
     def _signed(m: int) -> int:
@@ -458,8 +449,7 @@ def simhash_bits_portable(
     for production; these are the cross-engine-checkable variants.
     Map-only, whole-stage codegen; no shuffle, no Python.
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
+    toks = word_tokens(text_col)
     n_toks = F.size(toks).cast("long")
 
     if single_digest:
@@ -518,17 +508,13 @@ def simhash_int_portable(
     ``SUM(CASE WHEN 2*o > n THEN 1::BIGINT << (n_bits-1-i) END)`` and
     ``bit_count(xor(a, b))``. Requires ``n_bits <= 32``.
 
-    ``tokens``: optional pre-split ``array<string>`` column (same
-    contract as ``shingles(tokens=...)``) so multi-family callers
-    tokenize once.
+    ``tokens``: optional pre-split ``array<string>`` column holding
+    ``functions.word_tokens(text_col)`` (the ``shingles(tokens=...)``
+    contract) so multi-family callers tokenize once.
     """
     if n_bits > 32:
         raise ValueError("simhash_int_portable supports n_bits <= 32")
-    if tokens is not None:
-        toks = tokens
-    else:
-        c = F.col(text_col) if isinstance(text_col, str) else text_col
-        toks = F.split(F.lower(F.trim(c)), r"\s+")
+    toks = word_tokens(text_col) if tokens is None else tokens
     n_toks = F.size(toks).cast("long")
     digs = F.transform(toks, lambda t: F.md5(t))
     zeros = F.array_repeat(F.lit(0).cast("long"), n_bits)
@@ -612,14 +598,11 @@ def remove_duplicate_spans(
     """
     if width < 1:
         raise ValueError("width must be >= 1")
-    from cubicerp_client_etl_spark.operators.curation import shingles
-
-    toks = F.split(F.col(text_col), " ")
-    base = docs.select(F.col(id_col), toks.alias("_t"))
+    base = docs.select(F.col(id_col), space_tokens(text_col).alias("_t"))
 
     sh = base.select(
         id_col,
-        F.posexplode(shingles(F.col("_t"), width)).alias("_p0", "_v"),
+        F.posexplode(ngrams(F.col("_t"), width)).alias("_p0", "_v"),
     ).select(id_col, (F.col("_p0") + 1).alias("pos"), "_v")  # 1-based starts
 
     dup = (
@@ -680,11 +663,9 @@ def shingle_frequencies(
     ultra-hot shingle reduces to one row per input partition before
     the shuffle, so the aggregate itself is skew-immune.
     """
-    from cubicerp_client_etl_spark.operators.curation import shingles as _sh
-
-    toks = F.split(F.col(text_col), " ")
+    sh = F.array_distinct(ngrams(space_tokens(text_col), shingle_n))
     return (
-        docs.select(F.explode(F.array_distinct(_sh(toks, shingle_n))).alias("shingle"))
+        docs.select(F.explode(sh).alias("shingle"))
         .groupBy("shingle")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -720,9 +701,8 @@ def _setsim_prefix_tokens(
     setsim cost at sf1), and the candidate equi-join keys narrow the
     same way (guide §2.3)."""
     from cubicerp_client_etl_spark.catalog import widen_scan
-    from cubicerp_client_etl_spark.operators.curation import shingles as _sh
 
-    toks = F.split(F.col(text_col), " ")
+    toks = space_tokens(text_col)
     # widen: the per-doc shingle build + sorted-set construction is
     # CPU-heavy map work before any shuffle (no-op on wide scans)
     # base feeds the frequency aggregate, the prefix build AND the
@@ -733,7 +713,7 @@ def _setsim_prefix_tokens(
     base = (
         widen_scan(docs).select(
             F.col(id_col).alias("_id"),
-            F.array_sort(F.array_distinct(_sh(toks, shingle_n))).alias("_set"),
+            F.array_sort(F.array_distinct(ngrams(toks, shingle_n))).alias("_set"),
         )
         .filter(F.size("_set") > 0)
         .withColumn("_sz", F.size("_set").cast("bigint"))

@@ -5,9 +5,9 @@ against remote dictionaries (value mappings cubicerpetl/cubicerpetl.py:
 624-649, xml-ids :598-611, name-search :613-622, insert-if-absent
 :717-726). A value mapping declared on the driver becomes one
 expression, ``try_element_at`` over a literal map, so decoding is a
-projection with no join. A mapping held in a DataFrame, and every other
-lookup here, is a broadcast left join — one shuffle-free pass regardless
-of fact-table size, because the dictionary side is small by construction.
+projection with no join. Every other lookup here is a broadcast left
+join — one shuffle-free pass regardless of fact-table size, because the
+dictionary side is small by construction.
 """
 
 from __future__ import annotations
@@ -17,23 +17,6 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-
-
-def _decode(val: Column, label: Column, default: Column, return_null: bool) -> Column:
-    """The value-mapping rule (C1), re-derived over true SQL NULLs
-    (SURVEY §1.3) from the reference (cubicerpetl.py:643-648), given the
-    input, its looked-up label (NULL on a miss) and the default label
-    (NULL without a default line):
-
-    * NULL input → NULL if ``return_null`` else the default (if any);
-    * matched input → its label;
-    * unmatched input → the default label if a default line exists,
-      otherwise the original value passes through.
-    """
-    null_case = F.lit(None) if return_null else default
-    return F.when(val.isNull(), null_case).otherwise(
-        F.coalesce(label, default, val.cast("string"))
-    )
 
 
 def value_mapping_expr(
@@ -48,8 +31,14 @@ def value_mapping_expr(
     projection and no join, broadcast or Python-built frame is planned.
 
     ``lines`` fold into a dict like the reference's (a later line for the
-    same raw value wins); a line with a ``None`` raw value never matches,
-    as in the join form. The input is compared as a string.
+    same raw value wins); a line with a ``None`` raw value never matches.
+    The input is compared as a string. The rule, re-derived over true
+    SQL NULLs (SURVEY §1.3) from the reference (cubicerpetl.py:643-648):
+
+    * NULL input → NULL if ``return_null`` else ``default`` (if any);
+    * matched input → its label;
+    * unmatched input → ``default`` if given, otherwise the original
+      value passes through.
     """
     val = F.col(val) if isinstance(val, str) else val
     table = {name: label for name, label in lines if name is not None}
@@ -60,42 +49,9 @@ def value_mapping_expr(
         label = F.try_element_at(literal, val.cast("string"))
     else:
         label = F.lit(None).cast("string")
-    return _decode(val, label, F.lit(default).cast("string"), return_null)
-
-
-def value_mapping_decode(
-    df: DataFrame,
-    value_col: str,
-    mapping: DataFrame,
-    out_col: str | None = None,
-    return_null: bool = False,
-) -> DataFrame:
-    """Decode a column through a value-mapping dictionary held in a
-    DataFrame (C1), by two broadcast left joins.
-
-    ``mapping`` has columns ``name`` (the raw value), ``label`` (the
-    decoded value) and ``is_default`` (at most one true row supplying the
-    fallback); the rule is ``_decode``'s. A frame has no line order, so a
-    raw value listed twice matches twice and its row fans out; a mapping
-    known on the driver goes through ``value_mapping_expr`` instead.
-    """
-    out_col = out_col or f"{value_col}_decoded"
-    lines = mapping.filter(~F.col("is_default")).select(
-        F.col("name").alias("__map_name"), F.col("label").alias("__map_label")
-    )
-    default = mapping.filter(F.col("is_default")).select(
-        F.lit(1).alias("__dflt_key"), F.col("label").alias("__dflt_label")
-    )
-    joined = (
-        df.withColumn("__dflt_key", F.lit(1))
-        .join(F.broadcast(lines), F.col(value_col) == F.col("__map_name"), "left")
-        .join(F.broadcast(default), "__dflt_key", "left")
-    )
-    decoded = _decode(
-        F.col(value_col), F.col("__map_label"), F.col("__dflt_label"), return_null
-    )
-    return joined.withColumn(out_col, decoded).drop(
-        "__map_name", "__map_label", "__dflt_key", "__dflt_label"
+    dflt = F.lit(default).cast("string")
+    return F.when(val.isNull(), F.lit(None) if return_null else dflt).otherwise(
+        F.coalesce(label, dflt, val.cast("string"))
     )
 
 

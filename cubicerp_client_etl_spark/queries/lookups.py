@@ -12,7 +12,7 @@ from cubicerp_client_etl_spark.catalog import load
 from cubicerp_client_etl_spark.functions import dsum
 from cubicerp_client_etl_spark.operators.lookups import (
     insert_if_absent,
-    value_mapping_decode,
+    value_mapping_expr,
 )
 from cubicerp_client_etl_spark.operators.merge import apply_reprocess_mode
 from cubicerp_client_etl_spark.queries import register
@@ -20,14 +20,9 @@ from cubicerp_client_etl_spark.queries import register
 # --------------------------------------------------------------------------
 # q286 (birth q022) — value-mapping decode (C1): l_returnflag through a mapping table
 # with a default line ('N' is deliberately unmapped → falls to default).
-# Engine side goes through the generic broadcast-join operator; oracle
-# expresses the same decode as CASE.
+# Engine side is the job path's literal-map decode (value_mapping_expr);
+# oracle expresses the same decode as CASE.
 # --------------------------------------------------------------------------
-_FLAG_MAPPING = [
-    ("A", "Accepted", False),
-    ("R", "Returned", False),
-    (None, "Unknown", True),
-]
 
 
 @register(
@@ -44,11 +39,10 @@ GROUP BY 1
 )
 def q286_value_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    mapping = spark.createDataFrame(
-        _FLAG_MAPPING, "name string, label string, is_default boolean"
+    label = value_mapping_expr(
+        li.l_returnflag, [("A", "Accepted"), ("R", "Returned")], "Unknown"
     )
-    decoded = value_mapping_decode(li, "l_returnflag", mapping, out_col="flag_label")
-    return decoded.groupBy("flag_label").agg(
+    return li.groupBy(label.alias("flag_label")).agg(
         F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("sum_qty")
     )
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.catalog import load
-from cubicerp_client_etl_spark.functions import e6_floor_ratio
+from cubicerp_client_etl_spark.functions import e6_floor_ratio, word_tokens
 from cubicerp_client_etl_spark.queries import register
 
 # a bucket whose occupancy exceeds this emits > HOT_OCC^2/2 ~ 2k pairs;
@@ -222,9 +222,9 @@ def q040_neardup_candidate_datasheet(
     # The function returns the union LAZILY (no collect here — the
     # caller's action materializes it); the cache-lifetime story lives
     # at the persist site below.
-    toked = docs.withColumn(
-        "_tk", F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    ).repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    toked = docs.withColumn("_tk", word_tokens("text")).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
 
     # family 1: MinHash band buckets (the q082 join key, digest-reuse
     # portable form — 8 md5 per shingle for the 32-hash signature)

@@ -196,7 +196,7 @@ GROUP BY s.doc_id
 """,
 )
 def q045_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cubicerp_client_etl_spark.operators.curation import _toks, shingles
+    from cubicerp_client_etl_spark.functions import ngrams, space_tokens
     from cubicerp_client_etl_spark.operators.sketches import (
         bloom_build,
         bloom_maybe_members,
@@ -205,12 +205,12 @@ def q045_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     bench_sh = (
         docs.filter(F.col("doc_id") % 97 == 0)
-        .select(F.explode(shingles(_toks("text"), 5)).alias("sh"))
+        .select(F.explode(ngrams(space_tokens("text"), 5)).alias("sh"))
     )
     bloom = bloom_build(bench_sh, "sh", m=_BLOOM_M, k=_BLOOM_K, seed="d1")
     corp_sh = (
         docs.filter(F.col("doc_id") % 97 != 0)
-        .select("doc_id", F.explode(shingles(_toks("text"), 5)).alias("sh"))
+        .select("doc_id", F.explode(ngrams(space_tokens("text"), 5)).alias("sh"))
     )
     flagged = bloom_maybe_members(
         corp_sh, "sh", bloom, m=_BLOOM_M, k=_BLOOM_K, seed="d1"

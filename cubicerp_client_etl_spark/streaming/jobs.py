@@ -439,12 +439,12 @@ def stream_decontaminate_bloom(
     (Bloom contract): everything the exact decontamination pass drops
     is dropped here too; over-dropping is bounded by the FP rate.
     """
-    from cubicerp_client_etl_spark.operators.curation import _toks, shingles
+    from cubicerp_client_etl_spark.functions import ngrams, space_tokens
     from cubicerp_client_etl_spark.operators.sketches import (
         bloom_bitset_maybe_member,
     )
 
-    sh = shingles(_toks(text_col), n)
+    sh = ngrams(space_tokens(text_col), n)
     flagged = F.exists(
         sh, lambda s: bloom_bitset_maybe_member(s, bits, k, seed)
     )

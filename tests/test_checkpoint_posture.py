@@ -6,6 +6,8 @@ identical either way; this pins WHICH call the knob dispatches."""
 
 from __future__ import annotations
 
+import logging
+
 from cubicerp_client_etl_spark import checkpointing
 
 
@@ -52,3 +54,21 @@ def test_reliable_probe_matches_session_state(spark):
     df = spark.range(3)
     jvm_state = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
     assert checkpointing._reliable(df) == jvm_state
+
+
+def test_failed_probe_warns_and_pins_locally(spark, monkeypatch, caplog):
+    """A checkpoint-dir probe that raises falls back to
+    ``localCheckpoint`` loudly: one warning naming the exception."""
+    df = spark.range(3)
+
+    def broken_session(self):
+        raise RuntimeError("probe exploded")
+
+    calls = _record_calls(monkeypatch, df)
+    monkeypatch.setattr(type(df), "sparkSession", property(broken_session))
+    with caplog.at_level(logging.WARNING, logger="cubicerp_client_etl_spark"):
+        checkpointing.pin(df)
+    assert calls == [("localCheckpoint", False)]
+    warned = [r for r in caplog.records if r.name == checkpointing.__name__]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "RuntimeError: probe exploded" in warned[0].getMessage()

@@ -10,13 +10,18 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.plans.interpreter import extract
+from cubicerp_client_etl_spark.plans.spec import (
+    ColumnSpec,
+    JobSpec,
+    ResourceSpec,
+    TransformSpec,
+)
 from cubicerp_client_etl_spark.sinks.writers import (
     FWOutColumn,
     render_fixed_width_lines,
     write_fixed_width,
 )
-from cubicerp_client_etl_spark.sources.csv_source import read_csv_resource
-from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, read_fixed_width
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
 from cubicerp_client_etl_spark.sources.lines import read_lines
 
@@ -30,12 +35,23 @@ FW_OUT = [
     FWOutColumn("n_regionkey", 2, "rjust", "0"),
     FWOutColumn("forced_tag", 3, "center", "-", forced_value="X"),
 ]
-FW_IN = [
-    FWColumn("n_nationkey", 1, 4),
-    FWColumn("n_name", 5, 20),
-    FWColumn("n_regionkey", 25, 2),
-    FWColumn("forced_tag", 27, 3, strip=False),
-]
+FW_IN = (
+    ColumnSpec("n_nationkey", txt_position=1, txt_length=4),
+    ColumnSpec("n_name", txt_position=5, txt_length=20),
+    ColumnSpec("n_regionkey", txt_position=25, txt_length=2),
+    ColumnSpec("forced_tag", txt_position=27, txt_length=3),
+)
+
+
+def _extract(spark, resource: ResourceSpec):
+    """Read ``resource`` the way a job does (``interpreter.extract``)."""
+    job = JobSpec(
+        name="read",
+        extract=resource,
+        transform=TransformSpec(name="t"),
+        load=ResourceSpec(name="unused"),
+    )
+    return extract(spark, job)
 
 
 @pytest.fixture()
@@ -101,11 +117,24 @@ def test_fixed_width_roundtrip_with_header_footer(spark, nation_df, tmp_path):
     raw = open(files[0]).read().rstrip("\n").split("\n")
     assert raw[0] == "H2024010599" and raw[-1] == "F0000000003"
 
-    hdr = [FWColumn("h_tag", 1, 1), FWColumn("h_date", 2, 8), FWColumn("h_batch", 10, 2)]
-    ftr = [FWColumn("f_tag", 1, 1), FWColumn("f_count", 2, 10)]
-    back = read_fixed_width(
-        spark, out, FW_IN, header_columns=hdr, footer_columns=ftr
-    ).orderBy("n_nationkey")
+    hdr = (
+        ColumnSpec("h_tag", txt_position=1, txt_length=1),
+        ColumnSpec("h_date", txt_position=2, txt_length=8),
+        ColumnSpec("h_batch", txt_position=10, txt_length=2),
+    )
+    ftr = (
+        ColumnSpec("f_tag", txt_position=1, txt_length=1),
+        ColumnSpec("f_count", txt_position=2, txt_length=10),
+    )
+    res = ResourceSpec(
+        name="nation_fw",
+        f_type="txt",
+        f_filename=out,
+        columns=FW_IN,
+        header_columns=hdr,
+        footer_columns=ftr,
+    )
+    back = _extract(spark, res).orderBy("n_nationkey")
     rows = back.collect()
     assert len(rows) == 3  # header/footer excluded from body
     assert [int(r["n_nationkey"]) for r in rows] == [0, 1, 24]
@@ -153,15 +182,17 @@ def test_csv_header_footer_broadcast(spark, tmp_path):
         '1;"ARG;ENTINA";1\n'  # separator inside quotes
         "3;5340.25\n"
     )
-    df = read_csv_resource(
-        spark,
-        str(p),
-        ["n_nationkey", "n_name", "n_regionkey"],
-        sep=";",
-        quote='"',
-        header_columns=["file_date", "batch_no"],
-        footer_columns=["row_count", "total_amount"],
-    ).orderBy("_line_no")
+    res = ResourceSpec(
+        name="hf",
+        f_type="csv",
+        f_filename=str(p),
+        txt_separator=";",
+        txt_quote='"',
+        columns=tuple(map(ColumnSpec, ["n_nationkey", "n_name", "n_regionkey"])),
+        header_columns=tuple(map(ColumnSpec, ["file_date", "batch_no"])),
+        footer_columns=tuple(map(ColumnSpec, ["row_count", "total_amount"])),
+    )
+    df = _extract(spark, res).orderBy("_line_no")
     rows = df.collect()
     assert len(rows) == 2
     assert rows[1]["n_name"] == "ARG;ENTINA"

@@ -9,11 +9,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.functions import ngrams
 from cubicerp_client_etl_spark.operators.curation import (
     chunk_documents,
     decontaminate,
     repetition_stats,
-    shingles,
     unigram_freq_score,
 )
 
@@ -54,7 +54,7 @@ def test_repetition_dup_bigram_exact(spark):
 def test_shingles_short_doc_empty(spark):
     df = _docs(spark, [(1, "a b"), (2, "a b c")])
     out = df.select(
-        "doc_id", shingles(F.split("text", " "), 3).alias("sh")
+        "doc_id", ngrams(F.split("text", " "), 3).alias("sh")
     ).collect()
     got = {r["doc_id"]: r["sh"] for r in out}
     assert got[1] == []
@@ -248,7 +248,7 @@ def test_shingle_count_property(spark):
     got = {
         r["doc_id"]: r["n"]
         for r in df.select(
-            "doc_id", F.size(shingles(F.split("text", " "), 5)).alias("n")
+            "doc_id", F.size(ngrams(F.split("text", " "), 5)).alias("n")
         ).collect()
     }
     for i, n in enumerate(lengths):

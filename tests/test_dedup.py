@@ -5,14 +5,21 @@ evidence (their registry entries are rows-only by design)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cubicerp_client_etl_spark.catalog import load
+from cubicerp_client_etl_spark.functions import ngrams, space_tokens
 from cubicerp_client_etl_spark.operators.dedup import (
     hamming_distance,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingles,
     simhash_bits,
 )
 from tests.conftest import SF_SMOKE
@@ -296,11 +303,40 @@ def test_shingle_frequencies_counts_docs(spark):
 # ---- exact-Jaccard ground truth with the df_cap hot-shingle guard ---------
 
 
-def _py_shingles(text: str, n: int = 3) -> set[str]:
-    toks = text.strip().lower().split()
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's \s, as Spark's split sees it
+
+
+def _py_shingles(
+    text: str | None,
+    n: int = 3,
+    *,
+    tokens: list[str | None] | None = None,
+    whole_short: bool = True,
+) -> list[str]:
+    """Pure-Python shingler, in document order. Tokens are ``tokens`` or
+    the ``functions.word_tokens`` law (Spark ``trim`` strips spaces
+    only). A document shorter than ``n`` is one shingle, its non-NULL
+    tokens space-joined, under ``whole_short`` (``dedup.shingles``), and
+    no shingle otherwise (``functions.ngrams``).
+
+    An n-gram is a left fold of ``concat_ws(" ", acc, token)``, as the
+    ``zip_with`` chain builds it: a NULL token is skipped, but once the
+    first pair has rendered (as "" if both were NULL) the accumulator is
+    a string, so ``[NULL, NULL, "c"]`` gives " c"."""
+    toks = _JAVA_WS.split(text.strip(" ").lower()) if tokens is None else tokens
+
+    def concat_ws(*parts):
+        return " ".join(p for p in parts if p is not None)
+
+    def fold(ts):
+        acc = ts[0]
+        for t in ts[1:]:
+            acc = concat_ws(acc, t)
+        return concat_ws(acc)  # n = 1: the lone token renders too
+
     if len(toks) < n:
-        return {" ".join(toks)}
-    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        return [concat_ws(*toks)] if whole_short else []
+    return [fold(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
 def test_exact_jaccard_truth_df_cap_bounds_hot_shingle(spark):
@@ -605,3 +641,72 @@ def test_simhash_hot_chunk_cap_equivalence_and_boilerplate_drop(spark):
         simhash_chunk_candidates(df, "doc_id", "f", n_bits=33)
     with pytest.raises(ValueError):
         simhash_chunk_candidates(df, "doc_id", "f", n_bits=8, chunk_bits=8)
+
+
+# ---- the shingle family vs the pure-Python shingler ----------------------
+
+_SIZES = range(1, 6)
+_SHINGLE_SETTINGS = settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@_SHINGLE_SETTINGS
+@given(
+    docs=st.lists(
+        st.lists(st.sampled_from(["a", "b", "c", "", None]), max_size=7),
+        min_size=1,
+        max_size=6,
+    )
+)
+@example(docs=[[], [""], ["a", "a", "a", "a"], ["a", "b"], ["a", "b", "c"]])
+@example(docs=[[None], ["a", None, "b"], [None, None, "c", "d", "e", "f"]])
+def test_ngrams_and_shingles_match_python_on_token_arrays(spark, docs):
+    """``ngrams`` (short → empty) and ``dedup.shingles(tokens=...)``
+    (short → one whole-document shingle) against the Python model,
+    content AND order, for n = 1..5 — including NULL tokens, which
+    ``concat_ws`` skips at every n (so a lone NULL renders as "")."""
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, t array<string>")
+    got = df.select(
+        "i",
+        *[ngrams(F.col("t"), n).alias(f"g{n}") for n in _SIZES],
+        *[shingles(None, n, tokens=F.col("t")).alias(f"s{n}") for n in _SIZES],
+    ).collect()
+    for r in got:
+        toks = docs[r.i]
+        for n in _SIZES:
+            assert r[f"g{n}"] == _py_shingles(None, n, tokens=toks, whole_short=False)
+            assert r[f"s{n}"] == _py_shingles(None, n, tokens=toks)
+
+
+@_SHINGLE_SETTINGS
+@given(
+    texts=st.lists(
+        st.text(alphabet="abAB \t", max_size=12), min_size=1, max_size=6
+    )
+)
+@example(texts=["", " ", "a", "a a a a a", "a b c", "A b", " a\tb  c d e f "])
+def test_shingles_and_space_ngrams_match_python_on_text(spark, texts):
+    """The two tokenizers: ``dedup.shingles`` over ``word_tokens``
+    (lower, trim spaces, split on whitespace runs) and
+    ``ngrams(space_tokens)`` (verbatim single-space split), n = 1..5."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = df.select(
+        "i",
+        *[shingles("text", n).alias(f"s{n}") for n in _SIZES],
+        *[ngrams(space_tokens("text"), n).alias(f"g{n}") for n in _SIZES],
+    ).collect()
+    for r in got:
+        text = texts[r.i]
+        for n in _SIZES:
+            assert r[f"s{n}"] == _py_shingles(text, n)
+            assert r[f"g{n}"] == _py_shingles(
+                None, n, tokens=text.split(" "), whole_short=False
+            )
+
+
+def test_ngrams_rejects_size_below_one(spark):
+    with pytest.raises(ValueError):
+        ngrams(F.col("t"), 0)

@@ -1,7 +1,7 @@
 """C1 value-mapping decode: the literal-map expression
-(``value_mapping_expr``), the frame join (``value_mapping_decode``) and a
-plain-Python dict model of the reference's lookup (cubicerpetl.py:
-624-649) must give the same label for every input."""
+(``value_mapping_expr``) and a plain-Python dict model of the
+reference's lookup (cubicerpetl.py:624-649) must give the same label for
+every input."""
 
 from __future__ import annotations
 
@@ -10,10 +10,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.operators.lookups import (
-    value_mapping_decode,
-    value_mapping_expr,
-)
+from cubicerp_client_etl_spark.operators.lookups import value_mapping_expr
 
 
 def dict_decode(v, lines, default, return_null):
@@ -33,18 +30,6 @@ def _inputs(spark, values):
 def via_expr(spark, values, lines, default, return_null):
     df = _inputs(spark, values).select(
         "i", value_mapping_expr("v", lines, default, return_null).alias("out")
-    )
-    return [r.out for r in df.orderBy("i").collect()]
-
-
-def via_join(spark, values, lines, default, return_null):
-    mapping = spark.createDataFrame(
-        [(n, lb, False) for n, lb in lines]
-        + ([(None, default, True)] if default is not None else []),
-        "name string, label string, is_default boolean",
-    )
-    df = value_mapping_decode(
-        _inputs(spark, values), "v", mapping, out_col="out", return_null=return_null
     )
     return [r.out for r in df.orderBy("i").collect()]
 
@@ -69,7 +54,6 @@ def test_decode_rule_cases(spark, case):
     lines, default, return_null, want = CASES[case]
     assert [dict_decode(v, lines, default, return_null) for v in VALUES] == want
     assert via_expr(spark, VALUES, lines, default, return_null) == want
-    assert via_join(spark, VALUES, lines, default, return_null) == want
 
 
 names = st.sampled_from(["a", "b", "c", "d", None])
@@ -93,14 +77,11 @@ names = st.sampled_from(["a", "b", "c", "d", None])
 def test_expr_join_and_dict_agree(spark, values, lines, default, return_null):
     want = [dict_decode(v, lines, default, return_null) for v in values]
     assert via_expr(spark, values, lines, default, return_null) == want
-    assert via_join(spark, values, lines, default, return_null) == want
 
 
 def test_duplicate_raw_name_keeps_rows_and_last_label(spark):
     """A raw value listed twice: the expression, like the reference's
-    dict, keeps one row per input and takes the later line. (A mapping
-    frame has no line order, so ``value_mapping_decode`` is only
-    defined for unique raw values.)"""
+    dict, keeps one row per input and takes the later line."""
     lines = (("A", "first"), ("R", "Ret"), ("A", "last"))
     values = ["A", "R", "A"]
     want = [dict_decode(v, lines, None, False) for v in values]

@@ -235,11 +235,8 @@ def test_bloom_decontamination_is_superset_of_exact(spark):
     from pyspark.sql import functions as F
 
     from cubicerp_client_etl_spark.catalog import load
-    from cubicerp_client_etl_spark.operators.curation import (
-        _toks,
-        decontaminate,
-        shingles,
-    )
+    from cubicerp_client_etl_spark.functions import ngrams, space_tokens
+    from cubicerp_client_etl_spark.operators.curation import decontaminate
     from cubicerp_client_etl_spark.operators.sketches import (
         bloom_build,
         bloom_maybe_members,
@@ -251,9 +248,9 @@ def test_bloom_decontamination_is_superset_of_exact(spark):
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
     exact = {r.doc_id for r in decontaminate(corpus, bench, n=5).collect()}
 
-    bench_sh = bench.select(F.explode(shingles(_toks("text"), 5)).alias("sh"))
+    bench_sh = bench.select(F.explode(ngrams(space_tokens("text"), 5)).alias("sh"))
     corp_sh = corpus.select(
-        "doc_id", F.explode(shingles(_toks("text"), 5)).alias("sh")
+        "doc_id", F.explode(ngrams(space_tokens("text"), 5)).alias("sh")
     )
     bloom = bloom_build(bench_sh, "sh", m=65536, k=3, seed="d1")
     flagged = bloom_maybe_members(corp_sh, "sh", bloom, 65536, 3, "d1")

@@ -274,11 +274,8 @@ def test_stream_bloom_decontaminate_equals_batch_and_covers_exact(spark):
     drop EXACTLY the documents the batch Bloom pass flags (same
     portable md5 family), and — Bloom contract — everything the exact
     decontamination pass flags is dropped too."""
-    from cubicerp_client_etl_spark.operators.curation import (
-        _toks,
-        decontaminate,
-        shingles,
-    )
+    from cubicerp_client_etl_spark.functions import ngrams, space_tokens
+    from cubicerp_client_etl_spark.operators.curation import decontaminate
     from cubicerp_client_etl_spark.operators.sketches import (
         bloom_bitset,
         bloom_build,
@@ -293,7 +290,7 @@ def test_stream_bloom_decontaminate_equals_batch_and_covers_exact(spark):
     docs = load(spark, sf, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    bench_sh = bench.select(F.explode(shingles(_toks("text"), 5)).alias("sh"))
+    bench_sh = bench.select(F.explode(ngrams(space_tokens("text"), 5)).alias("sh"))
     bits = bloom_bitset(bloom_build(bench_sh, "sh", m=65536, k=3, seed="d1"), 65536)
 
     got = run_stream_to_memory(
