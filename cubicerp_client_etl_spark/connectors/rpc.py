@@ -8,29 +8,36 @@ network latency. Here the transport is batched and partition-parallel:
 * source (A2): the transport's ``search_read`` runs once on the driver
   (metadata-sized results — the reference's model too) and becomes a
   DataFrame; large extracts should land as files/JDBC instead.
-* sink (I1): ``rpc_apply_actions`` ships each Arrow batch to the
-  transport from inside ``mapInPandas`` — executors call the remote API
-  in parallel, ``batch_size`` rows per call, each row routed to
+* sink (I1): ``rpc_apply_actions`` is a per-chunk sender over
+  ``sinks.ledger.ship_chunks``, the shipping path every external sink
+  shares: executors call the remote API in parallel, one client per
+  partition, ``batch_size`` rows per chunk, each row routed to
   create/write/unlink by its merge action (a plain load is every row
   tagged ``inserted`` with no ``model_id``: batched creates). Per-ROW
-  failures are captured as ledger rows (level='error') instead of
+  failures come back as outcome rows (level='error') instead of
   aborting the job, preserving the reference's error-isolation
   semantics (:738-745) without try/except-per-row round-trips.
 
 The transport is a caller-supplied factory (pickled to executors, one
 client per partition — connection reuse the reference only had for
-metadata). No network library is baked in: openerplib/odoolib-style
-clients, HTTP sessions, or the in-memory mock used by the tests all fit
-the two-method protocol below.
+metadata), or a ``'module:factory'`` spec built by ``load_transport``.
+No network library is baked in: openerplib/odoolib-style clients, HTTP
+sessions, or the in-memory mock used by the tests all fit the protocol
+below; a client with a ``close()`` is closed when its partition ends.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any, Callable, Protocol, Sequence
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from functools import partial
+from importlib import import_module
+from typing import Any, Protocol, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from cubicerp_client_etl_spark.sinks.ledger import Outcome, ship_chunks
 
 
 class RpcTransport(Protocol):
@@ -41,10 +48,27 @@ class RpcTransport(Protocol):
         self, model: str, domain: Sequence, fields: Sequence[str]
     ) -> list[dict]: ...
 
-    def create_batch(self, model: str, rows: list[dict]) -> list[dict]:
-        """Returns one result dict per input row:
-        {'ok': bool, 'id': int | None, 'error': str | None}."""
-        ...
+    # each batch verb returns one result dict per input item:
+    # {'ok': bool, 'id': int | None, 'error': str | None}
+    def create_batch(self, model: str, rows: list[dict]) -> list[dict]: ...
+
+    def write_batch(
+        self, model: str, updates: list[tuple[int, dict]]
+    ) -> list[dict]: ...
+
+    def unlink(self, model: str, ids: list[int]) -> list[dict]: ...
+
+
+def load_transport(spec: str, config: str | None) -> Any:
+    """Build a transport from a ``'module:factory'`` spec importable where
+    it runs (driver or executor). The factory gets ``config`` — endpoint
+    settings as one string, e.g. ``connectors.xmlrpc.json_config_factory``'s
+    JSON — when one is given, and no argument otherwise."""
+    mod, _, attr = spec.partition(":")
+    if not attr:
+        raise ValueError(f"transport spec must be 'module:factory', got {spec!r}")
+    factory = getattr(import_module(mod), attr)
+    return factory(config) if config else factory()
 
 
 def rpc_extract(
@@ -64,92 +88,89 @@ def rpc_extract(
     return spark.createDataFrame(rows)  # type: ignore[arg-type]
 
 
+@contextmanager
+def _session(transport_factory: Callable[[], Any]) -> Iterator[Any]:
+    """One transport client for one partition, closed on exit if it
+    has a ``close()``."""
+    client = transport_factory()
+    try:
+        yield client
+    finally:
+        if hasattr(client, "close"):
+            client.close()
+
+
 def rpc_apply_actions(
     df: DataFrame,
     transport_factory: Callable[[], Any],
     model: str,
     pk_col: str,
-    id_col: str = "model_id",
-    action_col: str = "action",
     batch_size: int = 100,
 ) -> DataFrame:
     """I1 over RPC: route each merged row to the reference's verb by
-    its reprocess ACTION tag (operators.merge.apply_reprocess_mode
-    output) — ``inserted``/``updated`` rows with a recovered id get
-    ``write``, rows without get ``create``, ``deleted`` rows get
-    ``unlink``, ``kept`` rows ship nothing (cubicerpetl.py:494-537's
-    update mode: write with recovered id AND create without, unlink
-    for delete — batched per Arrow chunk instead of one RPC per row).
+    its reprocess ``action`` tag (operators.merge.apply_reprocess_mode
+    output) and its recovered server id ``model_id`` (optional column)
+    — batched per chunk instead of one RPC per row
+    (cubicerpetl.py:494-537):
 
-    Returns the ledger frame ``(pk, model_id, level, message)``;
-    executor-parallel, one transport client per partition.
+    * ``inserted``/``updated``: ``write`` with an id, ``create`` without;
+    * ``replaced`` (delete mode): ``unlink`` the matched id, then
+      ``create`` the staged row — one outcome carrying the new id; a
+      failed unlink is the row's error and skips its create;
+    * ``deleted``: ``unlink``; without an id it is an error;
+    * ``kept``: nothing ships.
+
+    Each chunk makes at most four batch calls, in this order: unlink of
+    replaced ids, create, write, unlink of deleted ids. Returns the
+    lazy outcome frame ``(pk, model_id, level, message)``
+    (``sinks.ledger.OUTCOME_SCHEMA``); executor-parallel, one transport
+    client per partition.
     """
-    cols = [c for c in df.columns if c not in (action_col, id_col)]
+    cols = [c for c in df.columns if c not in ("action", "model_id")]
 
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = transport_factory()
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size]
-                pks, ids, levels, msgs = [], [], [], []
+    def send(client, chunk: pd.DataFrame) -> list[Outcome]:
+        pks = [str(k) for k in chunk[pk_col]]
+        acts = chunk["action"].tolist()
+        ids = [
+            None if pd.isna(i) else int(i)
+            for i in chunk.get("model_id", [None] * len(chunk))
+        ]
+        rows = chunk[cols].to_dict("records")
+        out: dict[int, Outcome] = {}
+        unlinked: set[int] = set()  # replaced rows whose old record is gone
 
-                def emit(pk, result, verb):
-                    pks.append(str(pk))
-                    ids.append(result.get("id") if result.get("ok") else None)
-                    levels.append("info" if result.get("ok") else "error")
-                    msgs.append(
-                        f"Ok ({verb})"
-                        if result.get("ok")
-                        else str(result.get("error"))
-                    )
+        def call(method, idx, items, label):
+            if not idx:  # a transport need not have verbs it never gets
+                return
+            for i, r in zip(idx, getattr(client, method)(model, items)):
+                if r.get("ok"):
+                    verb = "replace" if i in unlinked else label
+                    out[i] = (pks[i], r.get("id"), "info", f"Ok ({verb})")
+                else:
+                    out[i] = (pks[i], None, "error", str(r.get("error")))
 
-                acts = chunk[action_col]
-                has_id = chunk[id_col].notna() if id_col in chunk else None
-                # creates: inserted/updated rows WITHOUT a recovered id
-                mask_create = acts.isin(["inserted", "updated"]) & ~(
-                    has_id if has_id is not None else False
-                )
-                sub = chunk[mask_create]
-                if len(sub):
-                    results = client.create_batch(
-                        model, sub[cols].to_dict("records")
-                    )
-                    for pk, r in zip(sub[pk_col], results):
-                        emit(pk, r, "create")
-                # writes: inserted/updated rows WITH a recovered id
-                mask_write = acts.isin(["inserted", "updated"]) & (
-                    has_id if has_id is not None else False
-                )
-                sub = chunk[mask_write]
-                if len(sub):
-                    updates = [
-                        (int(i), {c: row[c] for c in cols})
-                        for i, row in zip(
-                            sub[id_col], sub[cols].to_dict("records")
-                        )
-                    ]
-                    results = client.write_batch(model, updates)
-                    for pk, r in zip(sub[pk_col], results):
-                        emit(pk, r, "write")
-                # deletes
-                sub = chunk[acts == "deleted"]
-                if len(sub) and has_id is not None:
-                    idlist = [int(i) for i in sub[id_col] if pd.notna(i)]
-                    results = client.unlink(model, idlist)
-                    for pk, r in zip(sub[pk_col], results):
-                        emit(pk, r, "unlink")
-                # kept rows: ledger 'skip' without a round-trip
-                for pk in chunk[acts == "kept"][pk_col]:
-                    emit(pk, {"ok": True}, "kept, no-op")
-                yield pd.DataFrame(
-                    {
-                        "pk": pks,
-                        "model_id": pd.array(ids, dtype="Int64"),
-                        "level": levels,
-                        "message": msgs,
-                    }
-                )
+        n = range(len(acts))
+        replace = [i for i in n if acts[i] == "replaced" and ids[i] is not None]
+        call("unlink", replace, [ids[i] for i in replace], "unlink")
+        unlinked.update(i for i in replace if out[i][2] == "info")
+        create = [
+            i
+            for i in n
+            if i in unlinked
+            or (acts[i] in ("inserted", "updated", "replaced") and ids[i] is None)
+        ]
+        call("create_batch", create, [rows[i] for i in create], "create")
+        write = [
+            i for i in n if acts[i] in ("inserted", "updated") and ids[i] is not None
+        ]
+        call("write_batch", write, [(ids[i], rows[i]) for i in write], "write")
+        delete = [i for i in n if acts[i] == "deleted" and ids[i] is not None]
+        call("unlink", delete, [ids[i] for i in delete], "unlink")
+        for i in n:
+            if acts[i] == "deleted" and ids[i] is None:
+                out[i] = (pks[i], None, "error", "missing server id, nothing to unlink")
+            elif acts[i] == "kept":
+                out[i] = (pks[i], None, "info", "Ok (kept, no-op)")
+        return [out[i] for i in sorted(out)]
 
-    return df.mapInPandas(
-        send, schema="pk string, model_id long, level string, message string"
-    )
+    return ship_chunks(df, partial(_session, transport_factory), send, batch_size)

@@ -10,13 +10,14 @@ but ``xmlrpc.client``, so the engine needs no third-party RPC library
 and the transport is picklable into ``mapInPandas`` (one client per
 executor partition — ``rpc_apply_actions``'s contract).
 
-Error isolation: ``create_batch`` first tries ONE batched ``create``
-call (modern Odoo accepts a list of vals dicts — one round-trip per
-Arrow chunk, the whole point of the batched sink); if the server
-rejects the batch, it degrades to per-row creates so each row's
-failure is captured individually in the ledger instead of poisoning
-its neighbors — the reference's per-row semantics
-(cubicerpetl.py:738-745) paid only on the error path.
+Error isolation: ``create_batch`` and ``unlink`` first try ONE batched
+call (modern Odoo accepts a list of vals dicts or ids — one round-trip
+per shipped chunk, the whole point of the batched sink); if the server
+rejects the batch, they degrade to per-item calls, which ``write_batch``
+makes from the start. One per-item path, ``_per_item``, keeps each
+item's ``Fault`` as that row's outcome instead of poisoning its
+neighbors — the reference's per-row semantics (cubicerpetl.py:738-745)
+paid only on the error path.
 
 Tested against a REAL in-process XML-RPC server (stdlib
 SimpleXMLRPCServer serving authenticate/execute_kw over a loopback
@@ -115,67 +116,60 @@ class XmlRpcTransport:
         )
 
     def create_batch(self, model: str, rows: list[dict]) -> list[dict]:
+        """One batched ``create`` (modern Odoo takes a list of vals);
+        per-row creates if the server rejects the batch."""
         try:
             ids = self.execute_kw(model, "create", [list(rows)])
-            if not isinstance(ids, (list, tuple)):
-                ids = [ids]
-            return [{"ok": True, "id": int(i), "error": None} for i in ids]
         except xmlrpc.client.Fault:
-            # batch rejected: degrade to per-row creates so one bad row
-            # doesn't poison its neighbors (ledger-grade isolation)
-            out = []
-            for row in rows:
-                try:
-                    rid = self.execute_kw(model, "create", [[row]])
-                    if isinstance(rid, (list, tuple)):
-                        rid = rid[0]
-                    out.append({"ok": True, "id": int(rid), "error": None})
-                except xmlrpc.client.Fault as fault:
-                    out.append(
-                        {"ok": False, "id": None, "error": fault.faultString}
-                    )
-            return out
-
+            return self._per_item(model, "create", [([[row]], None) for row in rows])
+        if not isinstance(ids, (list, tuple)):
+            ids = [ids]
+        return [{"ok": True, "id": int(i), "error": None} for i in ids]
 
     def write_batch(
         self, model: str, updates: list[tuple[int, dict]]
     ) -> list[dict]:
-        """Per-id ``write`` calls with per-row fault capture — the
-        reference's update leg (cubicerpetl.py:728-746 writes one
-        record per call; here one call per ROW only because Odoo's
-        write takes one vals dict per call — the batch is the Arrow
-        chunk the caller iterates)."""
-        out = []
-        for rid, vals in updates:
-            try:
-                ok = self.execute_kw(model, "write", [[int(rid)], vals])
-                out.append({"ok": bool(ok), "id": int(rid), "error": None})
-            except xmlrpc.client.Fault as fault:
-                out.append(
-                    {"ok": False, "id": int(rid), "error": fault.faultString}
-                )
-        return out
+        """Per-id ``write`` calls — the reference's update leg
+        (cubicerpetl.py:728-746 writes one record per call); Odoo's
+        write takes one vals dict per call, so the batch is the chunk
+        the caller ships."""
+        return self._per_item(
+            model, "write", [([[int(rid)], vals], int(rid)) for rid, vals in updates]
+        )
 
     def unlink(self, model: str, ids: list[int]) -> list[dict]:
         """One batched ``unlink`` (the reference's delete leg,
         cubicerpetl.py:506-517: unlink(ids) then re-insert); per-id
-        degradation on a batch fault."""
+        unlinks if the server rejects the batch."""
+        ids = [int(i) for i in ids]
         try:
-            ok = self.execute_kw(model, "unlink", [[int(i) for i in ids]])
-            return [
-                {"ok": bool(ok), "id": int(i), "error": None} for i in ids
-            ]
+            ok = self.execute_kw(model, "unlink", [ids])
         except xmlrpc.client.Fault:
-            out = []
-            for i in ids:
-                try:
-                    ok = self.execute_kw(model, "unlink", [[int(i)]])
-                    out.append({"ok": bool(ok), "id": int(i), "error": None})
-                except xmlrpc.client.Fault as fault:
-                    out.append(
-                        {"ok": False, "id": int(i), "error": fault.faultString}
-                    )
-            return out
+            return self._per_item(model, "unlink", [([[i]], i) for i in ids])
+        return [{"ok": bool(ok), "id": i, "error": None} for i in ids]
+
+    def _per_item(self, model: str, method: str, items: list[tuple]) -> list[dict]:
+        """One ``method`` call per ``(args, id)`` item, each Fault kept as
+        that item's error so one bad row cannot poison its neighbors.
+        ``id`` None means the call returns the id (``create``)."""
+        out = []
+        for args, rid in items:
+            try:
+                res = self.execute_kw(model, method, args)
+            except xmlrpc.client.Fault as fault:
+                out.append({"ok": False, "id": rid, "error": fault.faultString})
+                continue
+            if rid is None:
+                rid, res = int(res[0] if isinstance(res, (list, tuple)) else res), True
+            out.append({"ok": bool(res), "id": rid, "error": None})
+        return out
+
+    def close(self) -> None:
+        """Close this client's connection; the next call re-authenticates."""
+        if self._models is not None:
+            self._models("close")()
+        self._uid = None
+        self._models = None
 
 
 def json_config_factory(config: str) -> "XmlRpcTransport":

@@ -45,8 +45,9 @@ def apply_reprocess_mode(
                        rows created (net: staged replaces matched).
 
     Returns the merged table, optionally with ``action_col`` ∈
-    {kept, inserted, updated, replaced, dropped_source} recording what the
-    per-row ledger (I7) would log.
+    {kept, inserted, updated, replaced} recording what the per-row
+    ledger (I7) would log (``replaced`` only in ``delete`` mode; a
+    staged row ``onlyupdate`` drops is absent, not tagged).
     """
     if mode not in REPROCESS_MODES:
         raise ValueError(f"unknown reprocess mode: {mode!r}")

@@ -35,6 +35,7 @@ from cubicerp_client_etl_spark.plans.spec import JobSpec, ResourceSpec, Transfor
 from cubicerp_client_etl_spark.sinks.ledger import (
     build_ledger,
     ledger_job_id,
+    ship_once,
     write_ledger,
 )
 from cubicerp_client_etl_spark.sinks.writers import (
@@ -78,14 +79,9 @@ def _rpc_transport_for(res: ResourceSpec):
     the resource's ServerSpec maps onto the stdlib Odoo-wire client
     (database = section name, cbc_xmlrpc.get_connection's shape)."""
     if res.rpc_transport:
-        from cubicerp_client_etl_spark.sources.rpc_datasource import _load_factory
+        from cubicerp_client_etl_spark.connectors.rpc import load_transport
 
-        factory = _load_factory(res.rpc_transport)
-        return (
-            factory(res.rpc_transport_config)
-            if res.rpc_transport_config
-            else factory()
-        )
+        return load_transport(res.rpc_transport, res.rpc_transport_config)
     if res.server is None or res.server.etl_type != "rpc":
         raise ValueError(
             f"rpc resource {res.name!r} needs rpc_transport or an "
@@ -291,14 +287,14 @@ def load_sink(
             out = out.join(id_map, job.pk_field, "left")
         if "model_id" not in out.columns:
             out = out.withColumn("model_id", F.lit(None).cast("long"))
-        rpc_ledger = rpc_apply_actions(
-            out,
-            lambda res=res: _rpc_transport_for(res),
-            res.rpc_model,
-            pk_col=job.pk_field,
+        rpc_ledger = ship_once(
+            rpc_apply_actions(
+                out,
+                lambda res=res: _rpc_transport_for(res),
+                res.rpc_model,
+                pk_col=job.pk_field,
+            )
         )
-        rpc_ledger = rpc_ledger.persist(StorageLevel.MEMORY_AND_DISK)
-        rpc_ledger.count()  # ship exactly once
         _append_ledger(
             job, rpc_ledger, "pk", level_col="level", message_col="message",
             model_id_col="model_id",

@@ -1,45 +1,67 @@
-"""DBAPI SQL sink with per-row error isolation (SURVEY I2).
+"""DBAPI SQL sinks with per-row error isolation (SURVEY I2).
 
 The reference's db load runs ``sql_query % row`` per row through a raw
 cursor (cubicerpetl/cubicerpetl.py:466-492) — string-templating row
 values into SQL text (injection by design, §4.4.5). The engine's form:
 **bind parameters**, partition-parallel connections, batched commits,
-and per-row error capture into the same ledger shape the RPC sink
-produces — load errors are data, not exceptions (cubicerpetl.py:738-745
-semantics, minus the per-row network round-trip).
+and per-row error capture into the outcome frame the RPC sink returns
+too — load errors are data, not exceptions (cubicerpetl.py:738-745
+semantics, minus the per-row network round-trip). Both sinks are
+per-chunk senders over ``sinks.ledger.ship_chunks``: one connection per
+partition, closed on exit; ``model_id`` is NULL (SQL targets assign no
+server id).
 
 Works with any DBAPI-2 driver importable on the executors. Targets
 with SQL savepoints (sqlite3, psycopg2, ...) get savepoint-scoped rows
 with batched commits; targets without them (e.g. duckdb) are detected
 per-connection and fall back to commit-per-row, which preserves row
-isolation at lower throughput. ``connect_factory`` must be a top-level
-callable or otherwise picklable.
+isolation at lower throughput. A rollback that fails too is logged as
+a warning. ``connect_factory`` must be a top-level callable or
+otherwise picklable.
 
-Delivery semantics: the load runs EXACTLY ONCE per call — the ledger
-is persisted and forced inside ``dbapi_load`` so later actions on the
-returned frame re-read the cached result instead of re-executing the
-inserts. Spark task retries/speculation can still re-run a partition
-whose executor died mid-batch, so for at-least-once-safe targets make
-``insert_sql`` idempotent (upsert / INSERT OR IGNORE keyed on the PK)
-and prefer ``spark.speculation=false`` on load jobs.
+Delivery semantics: the load runs EXACTLY ONCE per call — the outcome
+frame goes through ``sinks.ledger.ship_once`` inside the sink, so later
+actions on the returned frame re-read the cached result instead of
+re-executing the statements. Spark task retries/speculation can still
+re-run a partition whose executor died mid-batch, so for
+at-least-once-safe targets make ``insert_sql`` idempotent (upsert /
+INSERT OR IGNORE keyed on the PK) and prefer ``spark.speculation=false``
+on load jobs.
 
 Scale posture: one connection per partition (not per row); commit every
 ``batch_size`` rows so a mid-partition failure re-runs bounded work;
 per-row ``execute`` keeps error isolation — when the target supports
 savepoints-free batch inserts and you don't need row isolation, raise
-``batch_size`` and let executemany-style batching win. The returned
-ledger is a small (pk, level, message) frame: write it with
-sinks/ledger if you need it durable.
+``batch_size`` and let executemany-style batching win. Write the
+returned frame with sinks/ledger if you need it durable.
 """
 
 from __future__ import annotations
 
+import itertools
+import logging
+import time
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from functools import partial
 from typing import Any
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+
+from cubicerp_client_etl_spark.sinks.ledger import Outcome, ship_chunks, ship_once
+
+_log = logging.getLogger(__name__)
+
+
+def _rollback(conn: Any) -> None:
+    """Roll back after a failed row or chunk. A rollback that fails too
+    is logged, not raised: the failure is already the outcome."""
+    try:
+        conn.rollback()
+    except Exception as ex:  # noqa: BLE001 — the row's error is the outcome
+        _log.warning("rollback failed: %s: %s", type(ex).__name__, ex)
 
 
 def _supports_savepoints(cur: Any, conn: Any) -> bool:
@@ -49,11 +71,35 @@ def _supports_savepoints(cur: Any, conn: Any) -> bool:
         cur.execute("RELEASE SAVEPOINT cap_probe")
         return True
     except Exception:  # noqa: BLE001 — any failure means "no savepoints"
-        try:
-            conn.rollback()
-        except Exception:  # noqa: BLE001
-            pass
+        _rollback(conn)
         return False
+
+
+@contextmanager
+def _load_session(
+    connect_factory: Callable[[], Any],
+    begin_sql: str | None,
+    end_sql: str | None,
+    begin_delay: float,
+) -> Iterator[tuple]:
+    """One partition's connection for ``dbapi_load``: probe savepoints,
+    run ``begin_sql`` (+ delay), yield ``(conn, cursor, savepoints)``,
+    run ``end_sql`` after the partition's rows; closed on exit."""
+    conn = connect_factory()
+    try:
+        cur = conn.cursor()
+        sp = _supports_savepoints(cur, conn)
+        if begin_sql:
+            cur.execute(begin_sql)
+            conn.commit()
+            if begin_delay:
+                time.sleep(begin_delay)
+        yield conn, cur, sp
+        if end_sql:
+            cur.execute(end_sql)
+            conn.commit()
+    finally:
+        conn.close()
 
 
 def dbapi_load(
@@ -62,18 +108,19 @@ def dbapi_load(
     insert_sql: str,
     pk_col: str,
     batch_size: int = 500,
-    use_savepoints: bool | None = None,
     begin_sql: str | None = None,
     end_sql: str | None = None,
     begin_delay: float = 0.0,
 ) -> DataFrame:
     """Execute ``insert_sql`` (with ``?``/``%s`` placeholders matching
-    df's column order) once per row, parameterized. Returns the
-    ledger-shaped frame (pk, level, message), already materialized —
-    the inserts ran exactly once by the time this returns.
+    df's column order) once per row, parameterized, committing every
+    ``batch_size`` rows. Returns the outcome frame (one row per input
+    row, ``model_id`` NULL), already materialized — the inserts ran
+    exactly once by the time this returns.
 
-    ``use_savepoints``: True/False forces the row-isolation strategy;
-    None (default) probes the target connection once per partition.
+    Row isolation: savepoint-scoped rows where the target has
+    savepoints (probed once per connection), commit-per-row where it
+    has not.
 
     ``begin_sql``/``end_sql``/``begin_delay`` mirror the reference's
     load-side setup/teardown (cubicerpetl.py:466-492 runs them around
@@ -83,88 +130,44 @@ def dbapi_load(
     Statements take no bind parameters (setup/teardown DDL shape).
     """
     cols = df.columns
+    pk_at = cols.index(pk_col)
 
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
+    def send(session, chunk: pd.DataFrame) -> list[Outcome]:
+        conn, cur, sp = session
+        out = []
+        for vals in chunk[cols].itertuples(index=False, name=None):
+            pk = str(vals[pk_at])
+            if sp:
+                # savepoint-scoped row: a failure rolls back ONLY this
+                # row, never the commit-pending chunk — a plain
+                # rollback() here would silently discard rows already
+                # reported as 'info'.
+                cur.execute("SAVEPOINT row_sp")
+                try:
+                    cur.execute(insert_sql, vals)
+                    cur.execute("RELEASE SAVEPOINT row_sp")
+                except Exception as ex:  # noqa: BLE001 — per-row isolation
+                    cur.execute("ROLLBACK TO SAVEPOINT row_sp")
+                    cur.execute("RELEASE SAVEPOINT row_sp")
+                    out.append((pk, None, "error", str(ex)))
+                    continue
+            else:
+                # no savepoints on this target: commit-per-row is the
+                # only way a failed row can't take committed neighbors
+                # down with it.
+                try:
+                    cur.execute(insert_sql, vals)
+                    conn.commit()
+                except Exception as ex:  # noqa: BLE001 — per-row isolation
+                    _rollback(conn)
+                    out.append((pk, None, "error", str(ex)))
+                    continue
+            out.append((pk, None, "info", "Ok"))
+        conn.commit()
+        return out
 
-        conn = connect_factory()
-        try:
-            cur = conn.cursor()
-            sp = (
-                use_savepoints
-                if use_savepoints is not None
-                else _supports_savepoints(cur, conn)
-            )
-            if begin_sql:
-                cur.execute(begin_sql)
-                conn.commit()
-                if begin_delay:
-                    _time.sleep(begin_delay)
-            for pdf in batches:
-                pks, levels, messages = [], [], []
-                since_commit = 0
-                for rec in pdf[cols].itertuples(index=False):
-                    vals = tuple(rec)
-                    pk = str(getattr(rec, pk_col))
-                    if sp:
-                        # savepoint-scoped row: a failure rolls back ONLY
-                        # this row, never the committed-pending batch — a
-                        # plain rollback() here would silently discard rows
-                        # already reported as 'info'.
-                        cur.execute("SAVEPOINT row_sp")
-                        try:
-                            cur.execute(insert_sql, vals)
-                            cur.execute("RELEASE SAVEPOINT row_sp")
-                            pks.append(pk)
-                            levels.append("info")
-                            messages.append("Ok")
-                        except Exception as ex:  # noqa: BLE001 — per-row isolation
-                            cur.execute("ROLLBACK TO SAVEPOINT row_sp")
-                            cur.execute("RELEASE SAVEPOINT row_sp")
-                            pks.append(pk)
-                            levels.append("error")
-                            messages.append(str(ex))
-                            continue
-                        since_commit += 1
-                        if since_commit >= batch_size:
-                            conn.commit()
-                            since_commit = 0
-                    else:
-                        # no savepoints on this target: commit-per-row is
-                        # the only way a failed row can't take committed
-                        # neighbors down with it.
-                        try:
-                            cur.execute(insert_sql, vals)
-                            conn.commit()
-                            pks.append(pk)
-                            levels.append("info")
-                            messages.append("Ok")
-                        except Exception as ex:  # noqa: BLE001 — per-row isolation
-                            try:
-                                conn.rollback()
-                            except Exception:  # noqa: BLE001
-                                pass
-                            pks.append(pk)
-                            levels.append("error")
-                            messages.append(str(ex))
-                conn.commit()
-                yield pd.DataFrame(
-                    {"pk": pks, "level": levels, "message": messages}
-                )
-            if end_sql:
-                cur.execute(end_sql)
-                conn.commit()
-        finally:
-            conn.close()
-
-    ledger = df.mapInPandas(send, schema="pk string, level string, message string")
-    # Materialize exactly once: without this, EVERY action on the
-    # returned frame would lazily re-run the whole load (duplicating
-    # rows on PK-less targets). MEMORY_AND_DISK spills instead of
-    # evicting, so later actions read the cached ledger.
-    ledger = ledger.persist(StorageLevel.MEMORY_AND_DISK)
-    ledger.count()
-    return ledger
+    session = partial(_load_session, connect_factory, begin_sql, end_sql, begin_delay)
+    return ship_once(ship_chunks(df, session, send, batch_size))
 
 
 def merge_statements(
@@ -243,6 +246,30 @@ def merge_statements(
     return [f"{head} WHEN MATCHED THEN DELETE", append]
 
 
+_STAGE = "cubicerp_merge_stage"
+
+
+@contextmanager
+def _merge_session(
+    connect_factory: Callable[[], Any], table: str, collist: str
+) -> Iterator[tuple]:
+    """One partition's connection for ``dbapi_merge``: (re)create the
+    session-temp stage table with the target's column types, yield
+    ``(conn, cursor, chunk label)``; closed on exit."""
+    conn = connect_factory()
+    try:
+        cur = conn.cursor()
+        cur.execute(f"DROP TABLE IF EXISTS {_STAGE}")
+        cur.execute(
+            f"CREATE TEMP TABLE {_STAGE} AS SELECT {collist} FROM {table} WHERE 1=0"
+        )
+        conn.commit()
+        part = TaskContext.get().partitionId()
+        yield conn, cur, (f"batch:{part}:{n}" for n in itertools.count())
+    finally:
+        conn.close()
+
+
 def dbapi_merge(
     df: DataFrame,
     connect_factory: Callable[[], Any],
@@ -255,27 +282,16 @@ def dbapi_merge(
     """Apply one I1 reprocess mode to a LIVE DBAPI target table as
     SET-BASED SQL — the ``MERGE INTO`` expression of
     ``operators.merge.apply_reprocess_mode`` against a genuine
-    external sink instead of DataFrame staging (judge r10 item 7).
+    external sink instead of DataFrame staging.
 
-    Per partition: one connection; each Arrow batch is staged into a
-    session-temp table with ``executemany`` and then folded into the
-    target with ONE mode-derived statement — never a round-trip per
-    row (the reference's shape, cubicerpetl.py:494-537, at
-    one-RPC-per-row):
+    Per partition: one connection; each chunk of ``batch_size`` rows is
+    staged into a session-temp table with ``executemany`` and then
+    folded into the target with the mode-derived statement(s) of
+    ``merge_statements`` — never a round-trip per row (the reference's
+    shape, cubicerpetl.py:494-537, at one-RPC-per-row).
 
-    * ``insert``     -> ``INSERT INTO t SELECT * FROM stage``
-    * ``update``     -> ``INSERT ... ON CONFLICT (pk) DO UPDATE SET
-                        c = excluded.c, ...``   (upsert)
-    * ``noupdate``   -> ``INSERT ... ON CONFLICT (pk) DO NOTHING``
-    * ``onlyupdate`` -> ``UPDATE t SET c = s.c ... FROM stage s WHERE
-                        t.pk = s.pk``           (matched only)
-    * ``delete``     -> ``DELETE FROM t WHERE pk IN (SELECT pk FROM
-                        stage)`` then ``INSERT`` (staged replaces
-                        matched)
-
-    ``dialect`` picks the fold-statement family (see
-    ``merge_statements``): the default ``"upsert"`` emits the
-    ``ON CONFLICT``/``UPDATE ... FROM`` forms above for targets without
+    ``dialect`` picks the fold-statement family: the default
+    ``"upsert"`` emits ``ON CONFLICT``/``UPDATE ... FROM`` forms for targets without
     MERGE (duckdb 1.0, sqlite, Postgres); ``"merge"`` emits one ANSI
     ``MERGE INTO`` statement per mode for engines with it (DuckDB >=
     1.4, Spark SQL on Delta/Iceberg, most MPP warehouses — none ship in
@@ -285,11 +301,11 @@ def dbapi_merge(
     dialect require a PRIMARY KEY or unique index on ``pk`` (that's
     what ON CONFLICT arbitrates on).
 
-    Returns the materialized per-batch ledger ``(pk, level, message)``
-    — ``pk`` is ``batch:<i>`` (set-based statements trade per-row
-    ledger granularity for not paying per-row round-trips; use
-    ``dbapi_load`` when row-level error isolation matters more than
-    throughput).
+    Returns the materialized outcome frame with ONE row per chunk —
+    ``pk`` is ``batch:<partition>:<chunk>``, a failed chunk rolls back
+    whole (set-based statements trade per-row granularity for not
+    paying per-row round-trips; use ``dbapi_load`` when row-level
+    error isolation matters more than throughput).
 
     Single-writer embedded targets (duckdb/sqlite files) should get a
     ``df.coalesce(1)``; real JDBC warehouses take partition-parallel
@@ -300,56 +316,22 @@ def dbapi_merge(
         raise ValueError(f"pk column {pk!r} not in frame: {cols}")
     collist = ", ".join(cols)
     ph = ", ".join(["?"] * len(cols))
-    statements = merge_statements(
-        mode, table, "cubicerp_merge_stage", pk, cols, dialect
-    )
+    statements = merge_statements(mode, table, _STAGE, pk, cols, dialect)
 
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        conn = connect_factory()
-        stage = "cubicerp_merge_stage"
+    def send(session, chunk: pd.DataFrame) -> list[Outcome]:
+        conn, cur, labels = session
+        rows = list(chunk[cols].itertuples(index=False, name=None))
+        label = next(labels)
         try:
-            cur = conn.cursor()
-            cur.execute(f"DROP TABLE IF EXISTS {stage}")
-            # clone the target's column types for the stage table
-            cur.execute(
-                f"CREATE TEMP TABLE {stage} AS "
-                f"SELECT {collist} FROM {table} WHERE 1=0"
-            )
+            cur.execute(f"DELETE FROM {_STAGE}")
+            cur.executemany(f"INSERT INTO {_STAGE} ({collist}) VALUES ({ph})", rows)
+            for stmt in statements:
+                cur.execute(stmt)
             conn.commit()
-            for i, pdf in enumerate(batches):
-                pks, levels, messages = [], [], []
-                for lo in range(0, len(pdf), batch_size):
-                    chunk = pdf[cols].iloc[lo : lo + batch_size]
-                    rows = [tuple(r) for r in chunk.itertuples(index=False)]
-                    label = f"batch:{i}:{lo}"
-                    try:
-                        cur.execute(f"DELETE FROM {stage}")
-                        cur.executemany(
-                            f"INSERT INTO {stage} ({collist}) "
-                            f"VALUES ({ph})",
-                            rows,
-                        )
-                        for stmt in statements:
-                            cur.execute(stmt)
-                        conn.commit()
-                        pks.append(label)
-                        levels.append("info")
-                        messages.append(f"Ok ({len(rows)} rows, {mode})")
-                    except Exception as ex:  # noqa: BLE001 — batch isolation
-                        try:
-                            conn.rollback()
-                        except Exception:  # noqa: BLE001
-                            pass
-                        pks.append(label)
-                        levels.append("error")
-                        messages.append(str(ex))
-                yield pd.DataFrame(
-                    {"pk": pks, "level": levels, "message": messages}
-                )
-        finally:
-            conn.close()
+        except Exception as ex:  # noqa: BLE001 — chunk isolation
+            _rollback(conn)
+            return [(label, None, "error", str(ex))]
+        return [(label, None, "info", f"Ok ({len(rows)} rows, {mode})")]
 
-    ledger = df.mapInPandas(send, schema="pk string, level string, message string")
-    ledger = ledger.persist(StorageLevel.MEMORY_AND_DISK)
-    ledger.count()
-    return ledger
+    session = partial(_merge_session, connect_factory, table, collist)
+    return ship_once(ship_chunks(df, session, send, batch_size))

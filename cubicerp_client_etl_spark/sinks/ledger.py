@@ -1,4 +1,5 @@
-"""Run-ledger sink (SURVEY I7, C4, D2).
+"""Run-ledger sink and the external sinks' shipping path (SURVEY I1, I2,
+I7, C4, D2).
 
 The reference logs one ``etl.log`` row per processed row over RPC —
 one network round-trip each (cubicerpetl/cubicerpetl.py:783-811) — and
@@ -8,14 +9,26 @@ table written once per batch: schema matches the reference's fields
 (job/server/resource/model/model_id/pk/level/message/check/amount) plus
 a run timestamp, and reconciliation accumulators (D2) are one aggregate
 over it instead of driver-side counters.
+
+Every external sink (``connectors.rpc.rpc_apply_actions``,
+``sinks.dbapi.dbapi_load``/``dbapi_merge``) ships through
+``ship_chunks`` + ``ship_once`` and returns one frame,
+``OUTCOME_SCHEMA``, that ``build_ledger`` projects into ledger rows; a
+failed row is an ``error`` outcome, not an aborted job
+(cubicerpetl.py:738-745).
 """
 
 from __future__ import annotations
 
 import zlib
+from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager
+from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 LEDGER_COLUMNS = (
     "job_id",
@@ -30,6 +43,45 @@ LEDGER_COLUMNS = (
     "amount",
     "ts",
 )
+
+OUTCOME_SCHEMA = "pk string, model_id long, level string, message string"
+
+# one outcome: (pk, server id or None, "info" | "error", message)
+Outcome = tuple[str, Any, str, str]
+
+
+def ship_chunks(
+    df: DataFrame,
+    session: Callable[[], AbstractContextManager],
+    send: Callable[[Any, pd.DataFrame], list[Outcome]],
+    batch_size: int,
+) -> DataFrame:
+    """Ship ``df`` to an external target: per partition, ``session()``
+    opens one client (its exit closes it) and ``send(client, chunk)``
+    runs on every ``batch_size`` rows of each Arrow batch, returning
+    that chunk's outcomes. Lazy; see ``ship_once``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        with session() as client:
+            for pdf in batches:
+                for lo in range(0, len(pdf), batch_size):
+                    out = pd.DataFrame(
+                        send(client, pdf.iloc[lo : lo + batch_size]),
+                        columns=["pk", "model_id", "level", "message"],
+                    )
+                    yield out.astype({"model_id": "Int64"})
+
+    return df.mapInPandas(run, schema=OUTCOME_SCHEMA)
+
+
+def ship_once(outcomes: DataFrame) -> DataFrame:
+    """Run a sink's shipping exactly once: persist the outcome frame and
+    force it, so later actions re-read the cached outcomes instead of
+    re-sending every row (a PK-less target would get duplicates).
+    MEMORY_AND_DISK spills instead of evicting. The caller unpersists."""
+    outcomes = outcomes.persist(StorageLevel.MEMORY_AND_DISK)
+    outcomes.count()
+    return outcomes
 
 
 def ledger_job_id(job_name: str) -> int:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.sources.lines import numbered_lines
+
 
 def read_inline_payload(
     spark: SparkSession, payload_b64: str, encoding: str = "UTF-8"
@@ -22,8 +24,4 @@ def read_inline_payload(
     # scan for the payload
     df = spark.range(0, 1, 1, 1).select(F.lit(payload_b64).alias("b64"))
     text = F.decode(F.unbase64(F.col("b64")), encoding)
-    lines = F.split(F.regexp_replace(text, r"(\r?\n)+$", ""), r"\r?\n")
-    return df.select(
-        F.lit("<inline>").alias("file"),
-        F.posexplode(lines).alias("_line_no", "value"),
-    )
+    return df.select(F.lit("<inline>").alias("file"), numbered_lines(text))

@@ -34,10 +34,15 @@ def read_lines(spark: SparkSession, path: str, encoding: str = "UTF-8") -> DataF
     )
     if encoding.upper() not in ("UTF-8", "UTF8", "ASCII"):
         df = df.withColumn("value", F.decode(F.encode("value", "UTF-8"), encoding))
-    lines = F.split(F.regexp_replace("value", r"(\r?\n)+$", ""), r"\r?\n")
-    return df.select(
-        "file", F.posexplode(lines).alias("_line_no", "value")
-    )
+    return df.select("file", numbered_lines(F.col("value")))
+
+
+def numbered_lines(text: Column) -> Column:
+    """One text value → one row per line, ``(_line_no, value)`` with
+    0-based line numbers; a run of trailing newlines yields no phantom
+    line. The line splitter of every ordered-lines source."""
+    lines = F.split(F.regexp_replace(text, r"(\r?\n)+$", ""), r"\r?\n")
+    return F.posexplode(lines).alias("_line_no", "value")
 
 
 def split_header_footer(

@@ -25,26 +25,22 @@ Usage::
           .option("num_partitions", "8")
           .load())
 
-``transport`` names a zero-arg factory importable ON THE EXECUTORS
-returning an object with ``search_read(model, domain, fields)`` — the
-same protocol as connectors/rpc.RpcTransport. Domains are JSON (lists,
-not tuples, over the wire).
+``transport`` names a ``'module:factory'`` importable ON THE EXECUTORS
+(built by ``connectors.rpc.load_transport``; the factory gets the
+``transport_config`` option when one is set) returning an object with
+``search_read(model, domain, fields)`` — the same protocol as
+connectors/rpc.RpcTransport. Domains are JSON (lists, not tuples, over
+the wire).
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator, Sequence
-from importlib import import_module
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-
-def _load_factory(spec: str):
-    mod, _, attr = spec.partition(":")
-    if not attr:
-        raise ValueError(f"transport spec must be 'module:factory', got {spec!r}")
-    return getattr(import_module(mod), attr)
+from cubicerp_client_etl_spark.connectors.rpc import load_transport
 
 
 class _IdSlice(InputPartition):
@@ -79,15 +75,11 @@ class RpcModelReader(DataSourceReader):
         ]
 
     def read(self, partition: _IdSlice) -> Iterator[tuple]:
-        factory = _load_factory(self.transport_spec)
-        # DataSource options are the only channel to executors, and the
-        # factory name must be a zero-arg importable — endpoint config
-        # (URL, database, credentials or an INI path) rides the
+        # DataSource options are the only channel to executors: endpoint
+        # config (URL, database, credentials or an INI path) rides the
         # ``transport_config`` option string when the factory takes one
         # argument (e.g. connectors.xmlrpc.json_config_factory)
-        transport = (
-            factory(self.transport_config) if self.transport_config else factory()
-        )
+        transport = load_transport(self.transport_spec, self.transport_config)
         domain = list(self.domain)
         if partition.hi > partition.lo:
             domain = [["id", ">=", partition.lo], ["id", "<", partition.hi]] + domain

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import sqlite3
 
+import pytest
+
 from cubicerp_client_etl_spark.sinks.dbapi import dbapi_load
 
 DB = None  # set per-test via module global so the factory pickles
@@ -397,3 +399,84 @@ def test_dbapi_merge_dialect_merge_matrix(spark, tmp_path):
             ).collect()
         )
         assert got == want, (mode, got, want)
+
+
+# ---------------------------------------------------------------------------
+# One shipping path: every external sink returns the same outcome frame,
+# and a failing rollback is logged instead of swallowed.
+# ---------------------------------------------------------------------------
+
+
+def _outcome_frame(sink, spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double").coalesce(1)
+    if sink == "rpc_apply_actions":
+        from cubicerp_client_etl_spark.connectors.mock import MockTransport
+        from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions
+
+        return rpc_apply_actions(
+            df.withColumn("action", F.lit("inserted")), MockTransport, "res.partner", "k"
+        )
+    if sink == "dbapi_load":
+        db = str(tmp_path / "contract.db")
+        with sqlite3.connect(db) as conn:
+            conn.execute("CREATE TABLE tgt (k INTEGER PRIMARY KEY, v REAL)")
+        return dbapi_load(
+            df, _factory_path(db), "INSERT INTO tgt (k, v) VALUES (?, ?)", pk_col="k"
+        )
+    import duckdb
+
+    from cubicerp_client_etl_spark.sinks.dbapi import dbapi_merge
+
+    db = str(tmp_path / "contract.duckdb")
+    with duckdb.connect(db) as conn:
+        conn.execute("CREATE TABLE tgt (k BIGINT PRIMARY KEY, v DOUBLE)")
+    return dbapi_merge(df, _duck_factory(db), "tgt", "k", "update")
+
+
+@pytest.mark.parametrize("sink", ["rpc_apply_actions", "dbapi_load", "dbapi_merge"])
+def test_external_sinks_share_the_outcome_schema(spark, tmp_path, sink):
+    out = _outcome_frame(sink, spark, tmp_path)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("pk", "string"),
+        ("model_id", "bigint"),
+        ("level", "string"),
+        ("message", "string"),
+    ]
+    assert {r.level for r in out.collect()} == {"info"}
+
+
+def test_failed_rollback_is_logged_not_swallowed(caplog):
+    import logging
+
+    from cubicerp_client_etl_spark.sinks.dbapi import _rollback
+
+    class _LostConnection:
+        def rollback(self):
+            raise ConnectionError("server closed the connection")
+
+    with caplog.at_level(logging.WARNING, logger="cubicerp_client_etl_spark.sinks.dbapi"):
+        _rollback(_LostConnection())
+    assert "ConnectionError" in caplog.text
+    assert "server closed the connection" in caplog.text
+
+
+def test_dbapi_merge_labels_each_chunk_by_partition(spark, tmp_path):
+    """dbapi_merge writes one outcome per chunk, labelled
+    ``batch:<partition>:<chunk>`` so labels stay unique across
+    partitions."""
+    from cubicerp_client_etl_spark.sinks.dbapi import dbapi_merge
+
+    db = str(tmp_path / "labels.db")
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE tgt (k INTEGER PRIMARY KEY, v INTEGER)")
+    df = spark.range(10).selectExpr("id AS k", "id AS v").repartition(2, "k")
+    rows = dbapi_merge(df, _factory_path(db), "tgt", "k", "insert", batch_size=3).collect()
+    labels = [r.pk for r in rows]
+    assert len(labels) == len(set(labels))
+    assert all(r.level == "info" for r in rows)
+    assert sum(int(r.message.split()[1][1:]) for r in rows) == 10  # "Ok (<n> rows, ...)"
+    assert {lb.rsplit(":", 1)[0] for lb in labels} == {"batch:0", "batch:1"}
+    with sqlite3.connect(db) as conn:
+        assert conn.execute("SELECT COUNT(*) FROM tgt").fetchone()[0] == 10

@@ -826,3 +826,33 @@ def test_job_path_sources_build_no_python_frames():
     assert files
     offenders = [p.name for p in files if "createDataFrame(" in p.read_text()]
     assert offenders == []
+
+
+def _broad_handler(node) -> bool:
+    """A bare ``except`` or one that catches ``Exception``/``BaseException``."""
+    if node.type is None:
+        return True
+    names = node.type.elts if hasattr(node.type, "elts") else [node.type]
+    return any(getattr(n, "id", None) in ("Exception", "BaseException") for n in names)
+
+
+def test_package_has_no_silent_exception_swallows():
+    """Failures are loud: no broad ``except`` in the package whose body is
+    only ``pass``."""
+    import ast
+    import pathlib
+
+    import cubicerp_client_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = sorted(root.rglob("*.py"))
+    assert files
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in files
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.ExceptHandler)
+        and _broad_handler(node)
+        and all(isinstance(stmt, ast.Pass) for stmt in node.body)
+    ]
+    assert offenders == []

@@ -332,17 +332,18 @@ def test_live_xmlrpc_partitioned_datasource(spark):
 def test_live_xmlrpc_apply_actions_matrix(spark):
     """I1 over RPC, end-to-end live: merged rows route to the
     reference's verbs by action tag — create (no recovered id), write
-    (recovered id), unlink (deleted), no-op (kept) — with a failed
-    write captured as a ledger error while its neighbors commit."""
+    (recovered id), unlink (deleted), unlink-then-create (replaced),
+    no-op (kept) — with a failed write captured as a ledger error while
+    its neighbors commit, a deleted row without an id reported as an
+    error, and exactly one outcome per pk."""
     from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions
     from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
 
     srv, state, port = _start_server()
     try:
         # pre-existing target records the merge "recovered" ids for
-        state.store[50] = {"id": 50, "name": "old50", "v": 1}
-        state.store[51] = {"id": 51, "name": "old51", "v": 1}
-        state.store[52] = {"id": 52, "name": "old52", "v": 1}
+        for rid in (50, 51, 52, 53):
+            state.store[rid] = {"id": rid, "name": f"old{rid}", "v": 1}
         url = f"http://127.0.0.1:{port}"
 
         def factory(u=url):
@@ -353,23 +354,63 @@ def test_live_xmlrpc_apply_actions_matrix(spark):
                 ("a", None, "inserted", "newA", 10),
                 ("b", 50, "updated", "newB", 20),
                 ("c", 51, "updated", "newC", -9),  # server rejects v<0
+                ("g", None, "deleted", "oldG", 0),  # no server id to unlink
                 ("d", 52, "deleted", "oldD", 0),
                 ("e", None, "kept", "keepE", 5),
+                ("f", 53, "replaced", "newF", 6),  # delete mode
             ],
             "pk string, model_id long, action string, name string, v long",
         ).coalesce(1)
-        ledger = rpc_apply_actions(merged, factory, "res.partner", "pk")
-        rows = {r.pk: (r.level, r.message) for r in ledger.collect()}
+        ledger = rpc_apply_actions(merged, factory, "res.partner", "pk").collect()
+        assert sorted(r.pk for r in ledger) == list("abcdefg")  # one row per pk
+        rows = {r.pk: (r.level, r.message, r.model_id) for r in ledger}
         assert rows["a"][0] == "info" and "create" in rows["a"][1]
         assert rows["b"][0] == "info" and "write" in rows["b"][1]
         assert rows["c"][0] == "error" and "negative v" in rows["c"][1]
-        assert rows["d"][0] == "info" and "unlink" in rows["d"][1]
+        assert rows["d"] == ("info", "Ok (unlink)", 52)
         assert rows["e"][0] == "info" and "kept" in rows["e"][1]
+        assert rows["g"][0] == "error" and "missing server id" in rows["g"][1]
+        assert rows["g"][2] is None
+        assert rows["f"][0] == "info" and "replace" in rows["f"][1]
         assert state.store[50]["name"] == "newB"  # write applied
         assert state.store[51]["name"] == "old51"  # failed write untouched
         assert 52 not in state.store  # unlinked
+        assert 53 not in state.store  # replaced: old record unlinked ...
+        assert state.store[rows["f"][2]]["name"] == "newF"  # ... new one created
         created = [r for r in state.store.values() if r.get("name") == "newA"]
         assert len(created) == 1  # created exactly once
+    finally:
+        srv.shutdown()
+
+
+def test_live_xmlrpc_replace_with_failed_unlink_skips_create(spark):
+    """A replaced row whose unlink fails keeps the unlink's error as its
+    outcome and is not created; its chunk neighbor is replaced."""
+    from cubicerp_client_etl_spark.connectors.rpc import rpc_apply_actions
+    from cubicerp_client_etl_spark.connectors.xmlrpc import XmlRpcTransport
+
+    srv, state, port = _start_server()
+    try:
+        state.store[60] = {"id": 60, "name": "old60", "v": 1}
+        url = f"http://127.0.0.1:{port}"
+
+        def factory(u=url):
+            return XmlRpcTransport(u, "erp", "admin", "secret")
+
+        merged = spark.createDataFrame(
+            [("p", 60, "replaced", "newP", 1), ("q", 61, "replaced", "newQ", 2)],
+            "pk string, model_id long, action string, name string, v long",
+        ).coalesce(1)
+        rows = {
+            r.pk: (r.level, r.message, r.model_id)
+            for r in rpc_apply_actions(merged, factory, "res.partner", "pk").collect()
+        }
+        assert rows["q"] == ("error", "missing id 61", None)
+        assert rows["p"][:2] == ("info", "Ok (replace)")
+        assert state.store[rows["p"][2]]["name"] == "newP" and 60 not in state.store
+        assert not [r for r in state.store.values() if r.get("name") == "newQ"]
+        # batched unlink rejected -> per-id unlinks, then ONE create
+        assert state.create_calls == [1]
     finally:
         srv.shutdown()
 
