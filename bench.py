@@ -42,7 +42,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cubicerp_client_etl_spark.queries import REGISTRY
-from cubicerp_client_etl_spark.session import get_spark
+from cubicerp_client_etl_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -276,8 +276,8 @@ def main() -> None:
     # r15 item 8), so non-default core counts get a _c{cpus} suffix the
     # prev-medians lookup never matches.
     local_round = (prev_round or 0) + 1
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    suffix = "" if cpus == "32" else f"_c{cpus}"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+    suffix = "" if cpus == DEFAULT_CPUS else f"_c{cpus}"
     local_path = os.path.join(here, f"BENCH_LOCAL_r{local_round}{suffix}.json")
     try:
         with open(local_path, "w") as fh:

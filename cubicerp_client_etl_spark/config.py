@@ -9,7 +9,8 @@ win over file values, mirroring the reference's argument precedence.
 
 Recognized section keys (all optional): ``etl_type`` (fs|db|rpc),
 ``fs_path``, ``fs_protocol`` (file|ftp), ``host``, ``port``,
-``username``, ``password``, ``spool_dir``, ``db_url``, ``encoding``.
+``username``, ``password``, ``spool_dir``, ``encoding``. The db family
+runs its SQL in Spark SQL, so a section carries no JDBC url.
 """
 
 from __future__ import annotations
@@ -50,7 +51,6 @@ def server_spec_from_ini(
         "login": sec.get("username", "anonymous"),
         "password": sec.get("password", ""),
         "spool_dir": sec.get("spool_dir", None),
-        "db_url": sec.get("db_url", ""),
         "encoding": sec.get("encoding", "UTF-8"),
     }
     values.update(overrides)

@@ -2,9 +2,14 @@
 
 Exact dedup is a keyed window/aggregate; near-dup is the classic
 shingle → MinHash → LSH-band → bucket-join pipeline, built entirely from
-DataFrame ops (explode / xxhash64 / groupBy / self-join on band key) so
-it scales as shuffles on bounded-size keys instead of an O(n²) compare.
+DataFrame ops (explode / md5 / groupBy / self-join on band key) so it
+scales as shuffles on bounded-size keys instead of an O(n²) compare.
 A 100 TB corpus never forms candidate pairs outside shared LSH buckets.
+
+One hash family: every sketch here (MinHash, LSH band keys, SimHash)
+is built from md5 hex digests, which the DuckDB oracle recomputes
+bit-for-bit, so each fingerprint and candidate set is checkable
+cross-engine.
 """
 
 from __future__ import annotations
@@ -143,7 +148,6 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 32,
     shingle_n: int = 3,
-    portable: bool = False,
     hashes_per_digest: int = 1,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -157,18 +161,15 @@ def minhash_signatures(
     One explode + one groupBy with k min-aggregates — a single shuffle on
     the document id.
 
-    Hash family: the default is xxhash64(shingle, seed_i) — the fast
-    JVM-native path, deterministic across runs and cluster layouts.
-    ``portable=True`` switches to ``md5(shingle || '|' || i)`` compared
-    AS A STRING: the min over a uniformly-distributed hex string is just
-    as valid a MinHash (any total order over a uniform hash family
-    works), and md5+string-min is bit-identically replayable in any
-    engine (the DuckDB oracle for the window query replays it exactly).
-    ~2-3× slower than xxhash64 — use the default in production.
+    Hash family: h_i is ``md5(shingle || '|' || i)`` compared AS A
+    STRING: the min over a uniformly-distributed hex string is a valid
+    MinHash (any total order over a uniform hash family works), and
+    md5+string-min is bit-identically replayable in any engine (the
+    DuckDB oracle replays it exactly).
 
-    ``hashes_per_digest`` (portable mode only, r11): carve several
-    hashes out of EACH md5 digest instead of one md5 per hash —
-    ``hashes_per_digest=4`` makes h_i the 8-hex-char substring
+    ``hashes_per_digest`` (r11): carve several hashes out of EACH md5
+    digest instead of one md5 per hash — ``hashes_per_digest=4`` makes
+    h_i the 8-hex-char substring
     ``substr(md5(shingle || '|' || i//4), 8*(i%4)+1, 8)``, cutting md5
     calls per shingle 4x (32 hashes from 8 digests). A 32-bit (8 hex)
     uniform hash is a valid minhash key at any realistic per-doc
@@ -198,7 +199,7 @@ def minhash_signatures(
         )
         .distinct()
     )
-    if portable and hashes_per_digest > 1:
+    if hashes_per_digest > 1:
         if hashes_per_digest not in (2, 4):
             raise ValueError("hashes_per_digest must be 1, 2 or 4")
         width = 32 // hashes_per_digest  # hex chars per carved hash
@@ -222,14 +223,9 @@ def minhash_signatures(
             ).alias(f"h{i}")
             for i in range(num_hashes)
         ]
-    elif portable:
-        aggs = [
-            F.min(F.md5(F.concat(F.col("__sh"), F.lit(f"|{i}")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
     else:
         aggs = [
-            F.min(F.xxhash64(F.col("__sh"), F.lit(i))).alias(f"h{i}")
+            F.min(F.md5(F.concat(F.col("__sh"), F.lit(f"|{i}")))).alias(f"h{i}")
             for i in range(num_hashes)
         ]
     return sh.groupBy(id_col).agg(*aggs)
@@ -240,7 +236,6 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     hot_band_cap: int | None = None,
 ) -> DataFrame:
     """Band the signature and self-join on (band_id, band_hash): documents
@@ -266,10 +261,9 @@ def lsh_candidate_pairs(
     expected to absorb the cluster — the oracle queries (q082/q209)
     run uncapped.
 
-    ``portable=True`` pairs with ``minhash_signatures(portable=True)``:
-    the band key becomes ``md5(h_i || '|' || … )`` over the band's
-    string minhashes — engine-replayable (two docs collide iff the band's
-    minhash tuples are equal, in either family).
+    The band key is ``md5(h_i || '|' || … )`` over the band's string
+    minhashes — engine-replayable (two docs collide iff the band's
+    minhash tuples are equal).
     """
     if hot_band_cap is not None and hot_band_cap < 1:
         raise ValueError("hot_band_cap must be >= 1")
@@ -277,13 +271,11 @@ def lsh_candidate_pairs(
     band_cols = []
     for b in range(bands):
         cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        bh = (
-            F.md5(F.concat_ws("|", *cols))
-            if portable
-            else F.xxhash64(*cols)
-        )
         band_cols.append(
-            F.struct(F.lit(b).alias("band_id"), bh.alias("band_hash"))
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.md5(F.concat_ws("|", *cols)).alias("band_hash"),
+            )
         )
     # Both self-join sides (and the hot-bucket census when capped) read
     # the banded frame; checkpoint so the signature aggregate — the
@@ -367,87 +359,56 @@ def jaccard_pairs(
     )
 
 
-def simhash_bits(text_col: Column | str, n_bits: int = 64) -> Column:
-    """SimHash fingerprint as an ``n_bits``-char '0'/'1' string: for each
-    bit position, sum ±1 over token hashes, keep the sign.
-
-    Built as one aggregate over the token array per row (no explode, no
-    shuffle): fold token hashes into an n-slot ones-counter, then
-    collapse to bits (counter position i holds the count of tokens with
-    hash bit 63-i set; sign test 2·ones > n_tokens ≡ Σ±1 > 0). Bit
-    extraction is a JVM long ``bitwiseAND`` against a literal mask
-    array — integer ops only, no bin()/lpad()/substr string machinery
-    in the per-token hot loop (the earlier form built a 64-char string
-    per token·bit; this one is pure whole-stage-codegen arithmetic).
-    Hamming distance between two fingerprints is then a zip_with sum —
-    see ``hamming_distance``.
-    """
-    toks = word_tokens(text_col)
-    # masks[i] = 1 << (63-i) as SIGNED int64 (top bit is the negative
-    # literal), matching bin()'s big-endian rendering bit order
-    def _signed(m: int) -> int:
-        return m - (1 << 64) if m >= (1 << 63) else m
-
-    masks = F.array(
-        *[F.lit(_signed(1 << (63 - i))).cast("long") for i in range(n_bits)]
-    )
+def _simhash_votes(toks: Column, n_bits: int) -> Column:
+    """The single-digest SimHash fold: ``array<long>`` of ``n_bits``
+    counters, counter i = how many tokens have hex digit i of
+    ``md5(token)`` >= '8' (a uniform Bernoulli(½) vote). One ``md5``
+    per token (``transform``), then one ``aggregate`` fold — the
+    digests array is materialized as the fold's input, immune to
+    CollapseProject re-duplication. Tokens vote with multiplicity.
+    Requires ``n_bits <= 32`` (one digest has 32 hex digits)."""
+    digs = F.transform(toks, lambda t: F.md5(t))
     zeros = F.array_repeat(F.lit(0).cast("long"), n_bits)
-    # hash once per token (transform), THEN fold — keeps the hash out
-    # of the 64-wide per-position lambda
-    tok_hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    ones = F.aggregate(
-        tok_hashes,
+    pos = F.array(*[F.lit(i + 1) for i in range(n_bits)])
+    return F.aggregate(
+        digs,
         zeros,
-        lambda acc, h: F.zip_with(
+        lambda acc, d: F.zip_with(
             acc,
-            masks,
-            lambda a, m: a
-            + F.when(h.bitwiseAND(m) != 0, F.lit(1))
+            pos,
+            lambda a, p: a
+            + F.when(F.substring(d, p, F.lit(1)) >= "8", F.lit(1))
             .otherwise(F.lit(0))
             .cast("long"),
         ),
     )
-    n_toks = F.size(toks).cast("long")
-    bits = F.transform(
-        ones, lambda o: F.when(o * 2 > n_toks, F.lit("1")).otherwise(F.lit("0"))
-    )
-    return F.array_join(bits, "")
 
 
 def simhash_bits_portable(
     text_col: Column | str, n_bits: int = 16, single_digest: bool = False
 ) -> Column:
-    """Engine-portable SimHash fingerprint as an ``n_bits``-char
-    '0'/'1' string.
-
-    Same vote semantics as ``simhash_bits`` (per bit: sum ±1 over token
-    hashes, keep the sign), in two md5 families:
+    """SimHash fingerprint as an ``n_bits``-char '0'/'1' string: per
+    bit, sum ±1 over token votes and keep the sign (bit set iff
+    2·ones > n_tokens), in two md5 vote families:
 
     - default (``single_digest=False``): bit i's vote is the top bit of
       the first hex digit of ``md5(token || '|' || i)`` (char >= '8' ⇔
       set — uniform Bernoulli(½)). ``n_bits`` md5 calls per token.
-    - ``single_digest=True`` (the r11 fast portable family): ONE
-      ``md5(token)`` per token; bit i's vote is hex digit i of that
-      digest (>= '8'). The 32 hex digits of one digest give up to 32
-      independent Bernoulli(½) votes, so a 32-bit fingerprint costs
-      1/32 of the md5 work of the per-bit family — and the wider
-      fingerprint lets chunk blocking use 8-bit chunks (256-way
-      buckets) instead of 4-bit (16-way), collapsing candidate-pair
-      density ~16x (q050's (birth q204) measured wall was the dense pair join, not
-      the hashing). Computed as one ``aggregate`` fold over
-      ``transform(toks, md5)`` so md5 runs once per token — the
-      digests array is materialized as the fold's input, immune to
-      CollapseProject re-duplication. Requires ``n_bits <= 32``.
+    - ``single_digest=True`` (the r11 fast family): ONE ``md5(token)``
+      per token; bit i's vote is hex digit i of that digest (the
+      ``_simhash_votes`` fold, shared with ``simhash_int_portable``).
+      A 32-bit fingerprint costs 1/32 of the md5 work of the per-bit
+      family — and the wider fingerprint lets chunk blocking use 8-bit
+      chunks (256-way buckets) instead of 4-bit (16-way), collapsing
+      candidate-pair density ~16x (q050's (birth q204) measured wall
+      was the dense pair join, not the hashing). Requires
+      ``n_bits <= 32``.
 
-    Tokens vote with multiplicity (no distinct), matching the xxhash64
-    variant. Exact integer vote counting means any engine that computes
-    the same md5 strings produces the identical fingerprint — the DuckDB
-    oracle replays both families bit-for-bit, which the xxhash64 family
-    can't (xxhash64 exists only in Spark).
-
-    Keep ``simhash_bits`` (one xxhash64 + mask arithmetic per token)
-    for production; these are the cross-engine-checkable variants.
-    Map-only, whole-stage codegen; no shuffle, no Python.
+    Tokens vote with multiplicity (no distinct). Exact integer vote
+    counting means any engine that computes the same md5 strings
+    produces the identical fingerprint — the DuckDB oracle replays
+    both families bit-for-bit. Map-only, whole-stage codegen; no
+    shuffle, no Python.
     """
     toks = word_tokens(text_col)
     n_toks = F.size(toks).cast("long")
@@ -455,23 +416,8 @@ def simhash_bits_portable(
     if single_digest:
         if n_bits > 32:
             raise ValueError("single_digest simhash supports n_bits <= 32")
-        digs = F.transform(toks, lambda t: F.md5(t))
-        zeros = F.array_repeat(F.lit(0).cast("long"), n_bits)
-        pos = F.array(*[F.lit(i + 1) for i in range(n_bits)])
-        ones_arr = F.aggregate(
-            digs,
-            zeros,
-            lambda acc, d: F.zip_with(
-                acc,
-                pos,
-                lambda a, p: a
-                + F.when(F.substring(d, p, F.lit(1)) >= "8", F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long"),
-            ),
-        )
         bits_arr = F.transform(
-            ones_arr,
+            _simhash_votes(toks, n_bits),
             lambda o: F.when(o * 2 > n_toks, F.lit("1")).otherwise(F.lit("0")),
         )
         return F.array_join(bits_arr, "")
@@ -494,17 +440,18 @@ def simhash_bits_portable(
 def simhash_int_portable(
     text_col: Column | str, n_bits: int = 32, tokens: Column | None = None
 ) -> Column:
-    """Single-digest portable SimHash packed into one BIGINT (bit i of
-    the fingerprint is bit ``n_bits-1-i`` of the long, i.e. the bits
+    """Single-digest SimHash packed into one BIGINT (bit i of the
+    fingerprint is bit ``n_bits-1-i`` of the long, i.e. the bits
     string read as a base-2 number).
 
-    Same vote family as ``simhash_bits_portable(single_digest=True)``
-    — vote i = hex digit i of ``md5(token)`` >= '8' — but the output
-    is an integer, so chunk blocking becomes shift/mask arithmetic and
-    Hamming distance one ``bit_count(a ^ b)``: at q050's (birth q204) measured
-    density (millions of candidate pairs) the 32-char string zip_with
-    per pair was the wall; xor+popcount is ~free and shuffles 8 bytes
-    instead of 32+ per row. DuckDB replays it exactly:
+    Same vote fold as ``simhash_bits_portable(single_digest=True)``
+    (``_simhash_votes``: vote i = hex digit i of ``md5(token)`` >= '8')
+    — but the output is an integer, so chunk blocking becomes
+    shift/mask arithmetic and Hamming distance one ``bit_count(a ^ b)``:
+    at q050's (birth q204) measured density (millions of candidate
+    pairs) the 32-char string zip_with per pair was the wall;
+    xor+popcount is ~free and shuffles 8 bytes instead of 32+ per row.
+    DuckDB replays it exactly:
     ``SUM(CASE WHEN 2*o > n THEN 1::BIGINT << (n_bits-1-i) END)`` and
     ``bit_count(xor(a, b))``. Requires ``n_bits <= 32``.
 
@@ -516,27 +463,12 @@ def simhash_int_portable(
         raise ValueError("simhash_int_portable supports n_bits <= 32")
     toks = word_tokens(text_col) if tokens is None else tokens
     n_toks = F.size(toks).cast("long")
-    digs = F.transform(toks, lambda t: F.md5(t))
-    zeros = F.array_repeat(F.lit(0).cast("long"), n_bits)
-    pos = F.array(*[F.lit(i + 1) for i in range(n_bits)])
-    ones_arr = F.aggregate(
-        digs,
-        zeros,
-        lambda acc, d: F.zip_with(
-            acc,
-            pos,
-            lambda a, p: a
-            + F.when(F.substring(d, p, F.lit(1)) >= "8", F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long"),
-        ),
-    )
     weights = F.array(
         *[F.lit(1 << (n_bits - 1 - i)).cast("long") for i in range(n_bits)]
     )
     return F.aggregate(
         F.zip_with(
-            ones_arr,
+            _simhash_votes(toks, n_bits),
             weights,
             lambda o, w: F.when(o * 2 > n_toks, w).otherwise(F.lit(0).cast("long")),
         ),
@@ -692,10 +624,13 @@ def _setsim_prefix_tokens(
     codes for the verify intersection.
 
     Token codes (r16): ``freq`` assigns every distinct shingle an
-    int64 via ``monotonically_increasing_id()``, FROZEN by the freq
-    checkpoint so every consumer sees one consistent assignment. The
-    map is injective by construction (partition-id ⊕ per-partition
-    counter), so ``|A ∩ B|`` over code arrays equals the intersection
+    int64 via ``monotonically_increasing_id()``. Every ``_code``
+    reader takes the codes through the ``ordered`` pin, which joins
+    each token to its code once, so every consumer sees one
+    consistent assignment (the freq pin alone does not freeze them;
+    see the note at the ``freq`` build). The map is injective by
+    construction (partition-id ⊕ per-partition counter), so
+    ``|A ∩ B|`` over code arrays equals the intersection
     size over the shingle strings EXACTLY — the verify then hashes
     8-byte longs instead of ~20-char strings (measured the dominant
     setsim cost at sf1), and the candidate equi-join keys narrow the
@@ -720,6 +655,16 @@ def _setsim_prefix_tokens(
         .transform(pin)
     )
 
+    # ``_code`` numbers the post-shuffle rows, so a recompute of freq
+    # may number them differently. The freq pin does not rule that out:
+    # a lazy reliable checkpoint computes freq once for the first job
+    # that reads it and again to write the checkpoint files, and later
+    # readers see the second numbering. The codes stay consistent only
+    # because nothing reads ``_code`` from freq but the ``ordered``
+    # aggregate below, which attaches each code to its token; ``pref``
+    # and ``codes`` both take their codes through the ``ordered`` pin.
+    # (A localCheckpoint keeps the first computation's blocks, so on
+    # the local posture the freq pin would freeze the codes too.)
     freq = (
         base.select(F.explode("_set").alias("_t"))
         .groupBy("_t")

@@ -8,7 +8,10 @@ hot loop.
 Scale posture: brute force is broadcast(probes) × facts — linear in the
 corpus, no shuffle, fine for any corpus size when the probe set is small.
 For large × large (all-pairs) the random-hyperplane LSH path buckets
-vectors first so candidate pairs only form within buckets.
+vectors first so candidate pairs only form within buckets. The
+hyperplanes are drawn from md5 (``hyperplane_lsh_bucket_portable``), the
+one hash family of the sketch operators, so every bucket key replays
+bit-for-bit in the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -247,7 +250,8 @@ def all_pairs_cosine(
 
     The exact form is an O(n²) theta join: correct, oracle-checkable,
     and a scale-killer. Above ``max_exact_rows`` the operator
-    auto-switches to the hyperplane-LSH form — bucket both sides and
+    auto-switches to the hyperplane-LSH form
+    (``hyperplane_lsh_bucket_portable``) — bucket both sides and
     only compare within buckets (an equi-join on the bucket key, the
     shape that survives 100 TB; recall < 1 is the documented trade,
     tunable via ``n_planes``). Callers that need the exact pairs at
@@ -266,7 +270,9 @@ def all_pairs_cosine(
             "id_a", "id_b", F.round(F.col("cos"), 6).alias("sim")
         )
     else:
-        bucketed = hyperplane_lsh_bucket(df, vec_col, n_planes=n_planes, dim=dim)
+        bucketed = hyperplane_lsh_bucket_portable(
+            df, vec_col, n_planes=n_planes, dim=dim
+        )
         a = bucketed.select(
             F.col(id_col).alias("id_a"),
             as_double(vec_col).alias("va"),
@@ -286,41 +292,6 @@ def all_pairs_cosine(
     )
 
 
-def hyperplane_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    dim: int = 64,
-    out_col: str = "lsh_bucket",
-) -> DataFrame:
-    """Random-hyperplane (SimHash-for-vectors) LSH bucket id.
-
-    Hyperplane m's component d is a deterministic pseudo-random ±1
-    derived from xxhash64(m, d) — no stored model, identical on every
-    executor. Sign pattern of the n projections is the bucket key, so
-    all-pairs similarity only compares within buckets (recall is tuned
-    by n_planes / multiple tables).
-    """
-    v = as_double(vec_col)
-
-    def signed_component(m: int):
-        # factory so the lambda keeps exactly 2 params (PySpark derives
-        # the HOF arity from the Python signature — defaults count)
-        return lambda x, d: F.when(
-            F.xxhash64(F.lit(m), d).bitwiseAND(F.lit(1)) == 1, x
-        ).otherwise(-x)
-
-    bits = []
-    for m in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.lit(dim - 1)), signed_component(m)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.withColumn(out_col, F.concat(*bits))
-
-
 def hyperplane_lsh_bucket_portable(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -328,17 +299,17 @@ def hyperplane_lsh_bucket_portable(
     dim: int = 64,
     out_col: str = "lsh_bucket",
 ) -> DataFrame:
-    """Engine-portable random-hyperplane LSH bucket id.
-
-    Two changes vs ``hyperplane_lsh_bucket`` make the bucket key exactly
-    replayable in any engine (the DuckDB window-query oracle recomputes
-    it bit-for-bit):
+    """Random-hyperplane (SimHash-for-vectors) LSH bucket id: the sign
+    pattern of ``n_planes`` projections is the bucket key, so
+    all-pairs similarity only compares within buckets (recall is tuned
+    by ``n_planes``). Two choices make the key exactly replayable in any
+    engine (the DuckDB window-query oracle recomputes it bit-for-bit):
 
     * the hyperplane is Rademacher ±1 with the sign drawn from
-      ``md5(f"{m},{d}")`` (top bit of the first hex digit) instead of
-      xxhash64 — md5 is universal across engines. The ±1 signs are
-      PRECOMPUTED driver-side (hashlib gives the same md5) and embedded
-      as literal arrays: zero per-row hashing, just a dot product.
+      ``md5(f"{m},{d}")`` (top bit of the first hex digit) — md5 is
+      universal across engines. The ±1 signs are PRECOMPUTED
+      driver-side (hashlib gives the same md5) and embedded as literal
+      arrays: zero per-row hashing, just a dot product.
     * the projection is computed in EXACT int64 over quantized
       components ``floor(v[d]·1e6 + 0.5)`` — integer addition is
       associative, so the sign test is independent of summation order

@@ -1,4 +1,5 @@
-"""Count-min sketch with an engine-portable, deterministic hash family.
+"""Portable sketches: count-min, linear counting, Bloom filter and
+HyperLogLog, all over one deterministic md5 hash family.
 
 The CMS answers "how often does token X appear?" over a corpus too
 large to hold exact per-token counts: a depth×width counter grid where
@@ -14,11 +15,14 @@ broadcast join. Counts are additive, so sketches of corpus shards (or
 stream micro-batches) merge by a further groupBy-sum — the property
 that makes CMS the standard streaming/heavy-hitter sketch.
 
-Hash family: bucket = int(first 8 hex chars of md5(token|cms<seed>|<row>))
+Hash family: every sketch hashes with ``functions.md5_hash32`` (the
+first 8 hex chars of an md5 digest as an integer) over the key and a
+per-sketch salt — e.g. CMS bucket = md5_hash32(token|cms<seed>|<row>)
 mod width — the repo's portable-hash technique (operators/sampling.py),
-so DuckDB replays the sketch EXACTLY: unlike sketch libraries with
-opaque native hashing, every bucket and every estimate is
-oracle-checkable cross-engine.
+so DuckDB replays each sketch EXACTLY: unlike sketch libraries with
+opaque native hashing, every bucket, register and estimate is
+oracle-checkable cross-engine. The HLL bucket/rank projection lives in
+one helper (``_hll_bucket_rho``) shared with the streaming registers.
 """
 
 from __future__ import annotations
@@ -261,6 +265,38 @@ _HLL_RMAX = _HLL_RBITS + 1  # rho when the low bits are all zero
 HLL_ALPHA_E6 = 709_000
 
 
+def _hll_bucket_rho(
+    df: DataFrame, key_col: str, seed: str, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Project each row of ``df`` onto its HLL register update
+    ``(*keep, bucket int, _rho int)``: with ``h = md5_hash32(key ||
+    '|hll<seed>')``, bucket = the top ``HLL_P`` bits of h and rho = the
+    leading-zero rank of the remaining ``_HLL_RBITS`` bits (``_HLL_RMAX``
+    when they are all zero). The one projection behind the batch,
+    keyed and streaming register builds."""
+    from cubicerp_client_etl_spark.functions import md5_hash32
+
+    h = md5_hash32(
+        F.concat(F.col(key_col).cast("string"), F.lit(f"|hll{seed}"))
+    )
+    b = df.select(*keep, h.alias("_h")).select(
+        *keep,
+        F.expr(f"_h div {1 << _HLL_RBITS}").cast("int").alias("bucket"),
+        F.expr(f"_h % {1 << _HLL_RBITS}").alias("_r"),
+    )
+    return b.select(
+        *keep,
+        "bucket",
+        F.when(F.col("_r") == 0, F.lit(_HLL_RMAX))
+        .otherwise(
+            F.lit(_HLL_RMAX)
+            - F.length(F.conv(F.col("_r").cast("string"), 10, 2))
+        )
+        .cast("int")
+        .alias("_rho"),
+    )
+
+
 def hll_registers(df: DataFrame, key_col: str, seed: str = "1") -> DataFrame:
     """HyperLogLog register table over ``df[key_col]`` — ALL ``HLL_M``
     rows ``(bucket int, m_rho int)``, absent buckets as 0 (Flajolet,
@@ -276,22 +312,7 @@ def hll_registers(df: DataFrame, key_col: str, seed: str = "1") -> DataFrame:
     Plan: one map-side projection + a 64-group max (map-side partial) —
     the shuffle carries at most m rows per partition at any scale.
     """
-    from cubicerp_client_etl_spark.functions import md5_hash32
-
-    h = md5_hash32(
-        F.concat(F.col(key_col).cast("string"), F.lit(f"|hll{seed}"))
-    )
-    b = df.select(h.alias("_h")).select(
-        F.expr(f"_h div {1 << _HLL_RBITS}").cast("int").alias("bucket"),
-        F.expr(f"_h % {1 << _HLL_RBITS}").alias("_r"),
-    )
-    rho = b.select(
-        "bucket",
-        F.when(F.col("_r") == 0, F.lit(_HLL_RMAX))
-        .otherwise(F.lit(_HLL_RMAX) - F.length(F.conv(F.col("_r").cast("string"), 10, 2)))
-        .cast("int")
-        .alias("_rho"),
-    )
+    rho = _hll_bucket_rho(df, key_col, seed)
     maxed = rho.groupBy("bucket").agg(F.max("_rho").alias("_mr"))
     allb = df.sparkSession.range(HLL_M).select(F.col("id").cast("int").alias("bucket"))
     return (
@@ -311,23 +332,7 @@ def hll_estimate(registers: DataFrame) -> DataFrame:
     apply the small-range linear-counting correction (the float-free
     occupancy form lives in ``occupancy_sketch``).
     """
-    num = HLL_ALPHA_E6 * HLL_M * HLL_M * (1 << _HLL_RMAX)
-    return registers.agg(
-        F.lit(HLL_M).cast("bigint").alias("m"),
-        F.sum(F.when(F.col("m_rho") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("v_zero"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RMAX} - m_rho)"))
-        .cast("bigint")
-        .alias("denom"),
-    ).select(
-        "m",
-        "v_zero",
-        "denom",
-        F.expr(f"CAST({num} AS BIGINT) div (denom * 1000000)")
-        .cast("bigint")
-        .alias("hll_est"),
-    )
+    return _hll_estimate(registers)
 
 
 def hll_registers_by(
@@ -343,27 +348,7 @@ def hll_registers_by(
     oracle-replays. The register spine is (distinct groups × HLL_M),
     built by a cross join against the 64-row bucket range — bounded by
     group count, never by data."""
-    from cubicerp_client_etl_spark.functions import md5_hash32
-
-    h = md5_hash32(
-        F.concat(F.col(key_col).cast("string"), F.lit(f"|hll{seed}"))
-    )
-    b = df.select(F.col(group_col), h.alias("_h")).select(
-        group_col,
-        F.expr(f"_h div {1 << _HLL_RBITS}").cast("int").alias("bucket"),
-        F.expr(f"_h % {1 << _HLL_RBITS}").alias("_r"),
-    )
-    rho = b.select(
-        group_col,
-        "bucket",
-        F.when(F.col("_r") == 0, F.lit(_HLL_RMAX))
-        .otherwise(
-            F.lit(_HLL_RMAX)
-            - F.length(F.conv(F.col("_r").cast("string"), 10, 2))
-        )
-        .cast("int")
-        .alias("_rho"),
-    )
+    rho = _hll_bucket_rho(df, key_col, seed, keep=(group_col,))
     maxed = rho.groupBy(group_col, "bucket").agg(F.max("_rho").alias("_mr"))
     groups = df.select(group_col).distinct()
     spine = groups.crossJoin(
@@ -390,9 +375,15 @@ def hll_estimate_by(registers: DataFrame, group_col: str) -> DataFrame:
     """Collapse ``hll_registers_by`` tables to one row per group
     ``(group, m, v_zero, denom, hll_est)`` — the same exact-integer
     harmonic-mean estimate as the global ``hll_estimate``, keyed."""
+    return _hll_estimate(registers, group_col)
+
+
+def _hll_estimate(registers: DataFrame, *keys: str) -> DataFrame:
+    """The one HLL estimate aggregate, grouped by ``keys`` (none = one
+    global row): ``hll_estimate`` and ``hll_estimate_by`` share it."""
     num = HLL_ALPHA_E6 * HLL_M * HLL_M * (1 << _HLL_RMAX)
     return (
-        registers.groupBy(group_col)
+        registers.groupBy(*keys)
         .agg(
             F.lit(HLL_M).cast("bigint").alias("m"),
             F.sum(F.when(F.col("m_rho") == 0, 1).otherwise(0))
@@ -403,7 +394,7 @@ def hll_estimate_by(registers: DataFrame, group_col: str) -> DataFrame:
             .alias("denom"),
         )
         .select(
-            group_col,
+            *keys,
             "m",
             "v_zero",
             "denom",

@@ -20,6 +20,7 @@ run, goes through ``sinks.ledger.build_ledger`` under one stable job id.
 from __future__ import annotations
 
 import logging
+import os
 import traceback
 from functools import partial
 
@@ -38,6 +39,7 @@ from cubicerp_client_etl_spark.sinks.ledger import (
     ship_once,
     write_ledger,
 )
+from cubicerp_client_etl_spark.sinks.dbf import write_dbf
 from cubicerp_client_etl_spark.sinks.writers import (
     FWOutColumn,
     write_csv_resource,
@@ -59,6 +61,20 @@ def _ftp_server(res: ResourceSpec):
     if srv is not None and srv.etl_type == "fs" and srv.fs_protocol == "ftp":
         return srv
     return None
+
+
+def _resolve_file(res: ResourceSpec, run_date: str) -> tuple[str, str]:
+    """``(path, encoding)`` of a file resource, for extract and load
+    alike. The path is ``f_filename`` date-rendered (H4/H5) and, on a
+    'file' server, joined under its ``fs_path`` (the reference's
+    fs_path/filename, SURVEY A7; an absolute f_filename stays as is).
+    The encoding is the resource's, else the server's, else UTF-8."""
+    path = render_date_template(res.f_filename, run_date) if res.f_filename else ""
+    srv = res.server
+    if path and srv is not None and srv.etl_type == "fs" and srv.fs_protocol == "file":
+        path = os.path.join(srv.fs_path, path)
+    encoding = res.encoding or (srv.encoding if srv is not None else "") or "UTF-8"
+    return path, encoding
 
 
 def _ftp_transport(server):
@@ -97,13 +113,12 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     """Resource → DataFrame (SURVEY A3/A4/A6/A9 dispatch, date-templated
     paths per H4/H5; A7 FTP staging; A1 begin/end hooks)."""
     res = job.extract
-    path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
+    path, encoding = _resolve_file(res, job.run_date)
     ftp_server = _ftp_server(res)
     if ftp_server is not None and res.f_filename:
         # A7: stage the remote file into the local spool; everything
         # downstream is the normal parallel read over the staged copy.
         path = _ftp_transport(ftp_server).fetch(res.f_filename, job.run_date)
-    encoding = res.encoding or "UTF-8"
 
     delegated = res.etl_type == "rpc" and res.rpc_model
     if delegated:
@@ -302,7 +317,7 @@ def load_sink(
         rpc_ledger.unpersist()
         return merged
 
-    path = render_date_template(res.f_filename, job.run_date) if res.f_filename else ""
+    path, _ = _resolve_file(res, job.run_date)
     ftp_server = _ftp_server(res)
     if ftp_server is not None:
         # I6: render the single-file output into the local spool, then
@@ -312,12 +327,11 @@ def load_sink(
                 "FTP load supports single-file formats (csv/txt/dbf); "
                 f"{res.f_type} is a directory layout — use a distributed FS"
             )
-        import os as _os
-
         transport = _ftp_transport(ftp_server)
         remote_name = path or res.f_filename
-        path = _os.path.join(transport.spool_dir, _os.path.basename(remote_name))
+        path = os.path.join(transport.spool_dir, os.path.basename(remote_name))
     to_write = merged.drop("action")
+    pk_order = [job.pk_field] if job.pk_field in to_write.columns else None
     if res.f_type == "parquet":
         write_parquet(to_write, path)
     elif res.f_type == "orc":
@@ -344,23 +358,31 @@ def load_sink(
                 )
                 for c in res.columns
             ],
-            order_by=[job.pk_field] if job.pk_field in to_write.columns else None,
+            order_by=pk_order,
         )
+    elif res.f_type == "dbf":
+        # I5: one dBase file, streamed driver-side in pk order
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        write_dbf(to_write.orderBy(*pk_order) if pk_order else to_write, path)
     else:
         raise ValueError(f"unsupported load resource: {res}")
 
     if ftp_server is not None:
-        # the Spark writers produce a directory; the single part file
-        # inside (single_file/ordered mode ⇒ exactly one) is the upload
-        import glob as _glob
+        upload = path
+        if res.f_type != "dbf":
+            # the Spark writers produce a directory; the single part
+            # file inside (single_file/ordered mode ⇒ exactly one) is
+            # the upload
+            import glob as _glob
 
-        parts = sorted(_glob.glob(f"{path}/part-*"))
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"FTP load expected exactly one part file in {path}, "
-                f"found {len(parts)}"
-            )
-        transport.put(parts[0], remote_name)
+            parts = sorted(_glob.glob(f"{path}/part-*"))
+            if len(parts) != 1:
+                raise RuntimeError(
+                    f"FTP load expected exactly one part file in {path}, "
+                    f"found {len(parts)}"
+                )
+            upload = parts[0]
+        transport.put(upload, remote_name)
 
     _append_ledger(job, merged, job.pk_field, message_col="action")
     return merged

@@ -34,12 +34,16 @@ from typing import Any, Callable, Literal
 @dataclass(frozen=True)
 class ServerSpec:
     """Connector endpoint (etl.server). etl_type selects the family:
-    'fs' local/posix or FTP paths, 'db' JDBC, 'rpc' external API.
+    'fs' local/posix or FTP paths, 'db' SQL run in Spark SQL, 'rpc'
+    external API.
 
     fs_protocol mirrors the reference's server dispatch
-    (cubicerpetl.py:181-187): 'file' reads fs_path directly; 'ftp'
+    (cubicerpetl.py:181-187): 'file' resolves a resource's f_filename
+    under fs_path (the reference's fs_path/filename, SURVEY A7); 'ftp'
     stages through transports.ftp.FtpTransport (fetch to a local
-    spool before the parallel read, put after the single-file write)."""
+    spool before the parallel read, put after the single-file write).
+    ``encoding`` is the server-wide file encoding; a resource's own
+    ``encoding`` wins over it (``interpreter._resolve_file``)."""
 
     name: str
     etl_type: Literal["fs", "db", "rpc"] = "fs"
@@ -50,9 +54,7 @@ class ServerSpec:
     login: str = "anonymous"
     password: str = ""
     spool_dir: str | None = None  # ftp staging dir; None → temp dir
-    db_url: str = ""  # JDBC url for etl_type='db'
     encoding: str = "UTF-8"
-    options: dict[str, str] = field(default_factory=dict)
 
 
 @dataclass(frozen=True)

@@ -142,12 +142,11 @@ def q146_ngram_jaccard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q082 (birth q032) — MinHash + LSH near-dup candidates (L-dedup2): the scale path.
-# Window variant uses the PORTABLE md5-string hash family
-# (minhash_signatures(portable=True)): min over md5 hex strings is a
-# valid MinHash under any total order, and DuckDB replays the whole
-# pipeline — shingles → 32 min-hashes → 8 band keys → bucket self-join
-# → exact-Jaccard verify — value-for-value. Production keeps the
-# xxhash64 family (recall-tested in tests/test_dedup.py).
+# minhash_signatures hashes with the md5-string family: min over md5
+# hex strings is a valid MinHash under any total order, and DuckDB
+# replays the whole pipeline — shingles → 32 min-hashes → 8 band keys
+# → bucket self-join → exact-Jaccard verify — value-for-value (the same
+# family is recall-tested in tests/test_dedup.py).
 # --------------------------------------------------------------------------
 @register(
     "q082_minhash_lsh_candidates",
@@ -207,19 +206,19 @@ def q082_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("doc_id") + 1000000
         )
     )
-    sigs = dd.minhash_signatures(dupped, "doc_id", "text", num_hashes=32, portable=True)
-    pairs = dd.lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8, portable=True)
+    sigs = dd.minhash_signatures(dupped, "doc_id", "text", num_hashes=32)
+    pairs = dd.lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8)
     verified = dd.jaccard_pairs(dupped, pairs, "doc_id", "text")
     return verified.filter(F.col("jaccard") >= 0.8).orderBy("id_a", "id_b")
 
 
 # --------------------------------------------------------------------------
-# q183 — SimHash fingerprints (L-dedup): window variant uses the PORTABLE
-# md5 bit family (simhash_bits_portable, 16 bits): per bit i a token
-# votes ±1 by the top bit of md5(token || '|' || i); exact integer vote
-# counting makes the fingerprint engine-replayable — the oracle
-# recomputes it bit-for-bit in DuckDB. Production keeps the 64-bit
-# xxhash64 mask-arithmetic variant (pinned in tests/test_dedup.py).
+# q183 — SimHash fingerprints (L-dedup): the per-bit md5 vote family
+# (simhash_bits_portable, 16 bits): per bit i a token votes ±1 by the
+# top bit of md5(token || '|' || i); exact integer vote counting makes
+# the fingerprint engine-replayable — the oracle recomputes it
+# bit-for-bit in DuckDB (the single-digest fold is pinned in
+# tests/test_dedup.py).
 # --------------------------------------------------------------------------
 @register(
     "q183_simhash",
@@ -316,12 +315,12 @@ def q026_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q209 (birth q035) — LSH-bucketed near-neighbor (the scale path): hyperplane buckets
-# first, pairs only within buckets. Window variant uses the PORTABLE
-# Rademacher-md5 bucketer (hyperplane_lsh_bucket_portable): ±1 signs
-# from md5(f"{m},{d}"), projections in exact int64 over
-# floor(v·1e6 + 0.5) quantized components — the bucket key is
+# first, pairs only within buckets, by the Rademacher-md5 bucketer
+# (hyperplane_lsh_bucket_portable, also all_pairs_cosine's guarded
+# branch): ±1 signs from md5(f"{m},{d}"), projections in exact int64
+# over floor(v·1e6 + 0.5) quantized components — the bucket key is
 # bit-identical in DuckDB, so the oracle replays bucketing AND the
-# within-bucket cosine filter. Production keeps the xxhash64 bucketer.
+# within-bucket cosine filter.
 # --------------------------------------------------------------------------
 @register(
     "q209_lsh_bucketed_pairs",

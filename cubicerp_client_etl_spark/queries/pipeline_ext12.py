@@ -233,7 +233,6 @@ def q040_neardup_candidate_datasheet(
         "doc_id",
         "text",
         num_hashes=32,
-        portable=True,
         hashes_per_digest=4,
         tokens_col="_tk",
     )

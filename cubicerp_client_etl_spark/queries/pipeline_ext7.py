@@ -626,9 +626,9 @@ def q262_lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = dd.exact_jaccard_truth(
         dupped, "doc_id", "text", shingle_n=3, threshold_e6=500000, df_cap=64
     ).select("id_a", "id_b").transform(pin)
-    sigs = dd.minhash_signatures(dupped, "doc_id", "text", num_hashes=32, portable=True)
+    sigs = dd.minhash_signatures(dupped, "doc_id", "text", num_hashes=32)
     cand = dd.lsh_candidate_pairs(
-        sigs, "doc_id", num_hashes=32, bands=8, portable=True
+        sigs, "doc_id", num_hashes=32, bands=8
     ).transform(pin)
     nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     ncand = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
@@ -3074,9 +3074,7 @@ def q203_lsh_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("doc_id") + 1000000
         )
     )
-    sigs = dd.minhash_signatures(
-        dupped, "doc_id", "text", num_hashes=32, portable=True
-    )
+    sigs = dd.minhash_signatures(dupped, "doc_id", "text", num_hashes=32)
     bands = sigs.select(
         "doc_id",
         F.explode(
@@ -3609,8 +3607,7 @@ def q207_dedup_family_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # minhash-lsh family (q032 config)
     sigs = dd.minhash_signatures(
-        planted, "doc_id", "text", num_hashes=32, portable=True,
-        hashes_per_digest=4,
+        planted, "doc_id", "text", num_hashes=32, hashes_per_digest=4,
     )
     bands = sigs.select(
         "doc_id",

@@ -13,7 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local core count when $SPARK_GRAFT_CPUS is unset (bench.py names its
+# non-default-core artifacts against it)
+DEFAULT_CPUS = "32"
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
 
 
 def get_spark(
@@ -27,7 +30,7 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     # numpy/BLAS inside Python workers must be single-threaded: Spark
     # already runs one worker per core, so a default-threaded OpenBLAS
     # (32 threads × 32 workers) oversubscribes the box ~1000x and the

@@ -390,8 +390,8 @@ def stream_count_min(
     width: int = 64,
     seed: str = "1",
 ) -> DataFrame:
-    """Streaming count-min sketch over document tokens — the online
-    form of ``operators/sketches.cms_build``.
+    """Streaming count-min sketch over document tokens — the batch
+    ``operators/sketches.cms_build`` over the space-split tokens.
 
     Because CMS counters are ADDITIVE, the streaming build is literally
     the same bounded groupBy running in update mode: Spark's state
@@ -401,19 +401,10 @@ def stream_count_min(
     foreachBatch consumer reads the live sketch; estimates use the
     batch ``cms_estimate`` unchanged on the materialized grid.
     """
-    from cubicerp_client_etl_spark.operators.sketches import cms_bucket
+    from cubicerp_client_etl_spark.operators.sketches import cms_build
 
     tokens = docs.select(F.explode(F.split(F.col(text_col), " ")).alias("token"))
-    expanded = tokens.withColumn(
-        "rw", F.explode(F.array(*[F.lit(i) for i in range(depth)]))
-    )
-    return (
-        expanded.select(
-            "rw", cms_bucket(F.col("token"), F.col("rw"), width, seed).alias("bucket")
-        )
-        .groupBy("rw", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    return cms_build(tokens, "token", depth=depth, width=width, seed=seed)
 
 
 def stream_decontaminate_bloom(
@@ -560,36 +551,18 @@ def stream_hll_registers(
     keys: DataFrame, key_col: str, seed: str = "1"
 ) -> DataFrame:
     """Streaming HyperLogLog registers — the online form of
-    ``operators/sketches.hll_registers``, exactly as
-    ``stream_count_min`` is for the CMS: HLL registers merge by MAX,
-    so the streaming build is the same bounded groupBy running in
-    update mode. The state store holds at most ``sketches.HLL_M``
+    ``operators/sketches.hll_registers`` (the same bucket/rho
+    projection, ``sketches._hll_bucket_rho``), as ``stream_count_min``
+    is for the CMS: HLL registers merge by MAX, so the streaming build
+    is the same bounded groupBy running in update mode. The state store holds at most ``sketches.HLL_M``
     (bucket, max-rho) rows — fixed size, independent of stream
     length, no watermark. The consumer pads absent buckets with 0 and
     feeds ``sketches.hll_estimate`` unchanged (batch == stream
     registers pinned by tests/test_streaming.py).
     """
-    from cubicerp_client_etl_spark.functions import md5_hash32
-    from cubicerp_client_etl_spark.operators import sketches as sk
+    from cubicerp_client_etl_spark.operators.sketches import _hll_bucket_rho
 
-    rbits = 32 - sk.HLL_P
-    rmax = rbits + 1
-    h = md5_hash32(
-        F.concat(F.col(key_col).cast("string"), F.lit(f"|hll{seed}"))
-    )
-    b = keys.select(h.alias("_h")).select(
-        F.expr(f"_h div {1 << rbits}").cast("int").alias("bucket"),
-        F.expr(f"_h % {1 << rbits}").alias("_r"),
-    )
-    rho = b.select(
-        "bucket",
-        F.when(F.col("_r") == 0, F.lit(rmax))
-        .otherwise(
-            F.lit(rmax) - F.length(F.conv(F.col("_r").cast("string"), 10, 2))
-        )
-        .cast("int")
-        .alias("_rho"),
-    )
+    rho = _hll_bucket_rho(keys, key_col, seed)
     return rho.groupBy("bucket").agg(F.max("_rho").alias("m_rho"))
 
 

@@ -1,7 +1,10 @@
 """L-dedup unit tests: pinned SimHash fingerprints (hash-family
 stability), Hamming-distance properties, and MinHash-LSH recall against
 exact n-gram Jaccard — the oracle-less operators' promised unit-level
-evidence (their registry entries are rows-only by design)."""
+evidence (their registry entries are rows-only by design). Every sketch
+runs the one md5 hash family the DuckDB oracle replays; the tests pin
+that family and check its two SimHash packings and its two MinHash
+digest carvings against each other."""
 
 from __future__ import annotations
 
@@ -20,20 +23,17 @@ from cubicerp_client_etl_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     shingles,
-    simhash_bits,
+    simhash_int_portable,
 )
 from tests.conftest import SF_SMOKE
 
-# Pinned against the engine-defined hash family (xxhash64 over
-# whitespace tokens, 64 planes, sign of 2*ones-n). Any change to the
-# fold (bit order, hash seed, tie rule) must show up here, loudly.
+# Pinned against the single-digest md5 SimHash (vote i = hex digit i
+# of md5(token) >= '8', 32 bits, sign of 2*ones-n, packed big-endian
+# into a BIGINT). Any change to the fold (bit order, digest, tie rule)
+# must show up here, loudly.
 PINNED = {
-    "the quick brown fox": (
-        "0001011010000000000000110010100010110000000000001000000011011000"
-    ),
-    "pack my box with five dozen liquor jugs": (
-        "0010001010100001010001101000100110000100100010101100000010000110"
-    ),
+    "the quick brown fox": 0x61724228,
+    "pack my box with five dozen liquor jugs": 0x0B82AC95,
 }
 
 
@@ -43,7 +43,9 @@ def test_simhash_pinned_fingerprints(spark):
     )
     got = {
         r.text: r.s
-        for r in df.select("text", simhash_bits("text").alias("s")).collect()
+        for r in df.select(
+            "text", simhash_int_portable("text", 32).alias("s")
+        ).collect()
     }
     assert got == PINNED
 
@@ -419,10 +421,10 @@ def test_exact_jaccard_truth_capped_universe_consistency(spark):
 
 
 # ---------------------------------------------------------------------------
-# r11 (VERDICT r10 item 3): production xxhash64 families vs the portable
-# md5 families, equivalence-tested on CANDIDATE SETS — never hash values
-# (the families are different hash functions by design; what must agree
-# is the operational output: which pairs the blocking surfaces).
+# The md5 families' alternative forms, checked against each other: the
+# SimHash fold's string and integer packings, and MinHash with one digest
+# per hash vs four hashes carved per digest — on CANDIDATE SETS where
+# the hash values legitimately differ.
 # ---------------------------------------------------------------------------
 
 SF_001 = "/root/testdata/sf0.01"
@@ -470,90 +472,86 @@ def _chunk_candidates(fp):
     )
 
 
-def test_simhash_production_vs_portable_candidate_sets(spark):
-    """Production (one xxhash64 per token) and portable (one md5 per
-    token, single-digest) SimHash at 32 bits, chunk-blocked 4x8:
-    (a) each family's candidate set is pigeonhole-COMPLETE for its own
-    fingerprints — every planted pair within Hamming<=3 is a candidate;
-    (b) identical-text plants have Hamming 0 in BOTH families, so the
-    identical-plant hit sets are EQUAL across families."""
-    from cubicerp_client_etl_spark.operators.dedup import (
-        simhash_int_portable,
-    )
+def test_simhash_string_and_int_forms_agree_bit_for_bit(spark):
+    """The two packings of the single-digest SimHash fold — the 32-char
+    '0'/'1' string (``simhash_bits_portable(single_digest=True)``) and
+    the BIGINT (``simhash_int_portable``) — agree bit for bit on every
+    document. Over the integer form, 4x8 chunk blocking is
+    pigeonhole-COMPLETE: every planted pair within Hamming<=3 is a
+    candidate, and identical-text plants have Hamming 0."""
+    from cubicerp_client_etl_spark.operators.dedup import simhash_bits_portable
 
     dupped, plants = _planted_docs(spark)
     planted_ids = set(
         r.id_a for r in plants.collect()
     )
 
-    hit_sets = {}
-    for fam, fp_col in (
-        ("portable_md5", simhash_int_portable("text", n_bits=32)),
-        (
-            "production_xxhash64",
-            F.conv(simhash_bits("text", n_bits=32), 2, 10).cast("long"),
-        ),
-    ):
-        fp = dupped.select("doc_id", fp_col.alias("f"))
-        cand = _chunk_candidates(fp)
-        # direct Hamming over ALL planted pairs (ground truth per family)
-        fa = fp.select(F.col("doc_id").alias("id_a"), F.col("f").alias("_fa"))
-        fb = fp.select(F.col("doc_id").alias("id_b"), F.col("f").alias("_fb"))
-        ham = (
-            plants.join(fa, "id_a")
-            .join(fb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).alias("h"),
-            )
+    bits = simhash_bits_portable("text", n_bits=32, single_digest=True)
+    forms = dupped.select(
+        "doc_id",
+        simhash_int_portable("text", n_bits=32).alias("f"),
+        bits.alias("bits"),
+    )
+    mismatched = forms.where(
+        (F.length("bits") != 32)
+        | ~F.conv(F.col("bits"), 2, 10).cast("long").eqNullSafe(F.col("f"))
+    )
+    assert mismatched.count() == 0
+    assert forms.count() == dupped.count()
+
+    fp = forms.select("doc_id", "f")
+    cand = _chunk_candidates(fp)
+    # direct Hamming over ALL planted pairs (ground truth)
+    fa = fp.select(F.col("doc_id").alias("id_a"), F.col("f").alias("_fa"))
+    fb = fp.select(F.col("doc_id").alias("id_b"), F.col("f").alias("_fb"))
+    ham = (
+        plants.join(fa, "id_a")
+        .join(fb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).alias("h"),
         )
-        near = {(r.id_a, r.id_b) for r in ham.where(F.col("h") <= 3).collect()}
-        zero = {(r.id_a, r.id_b) for r in ham.where(F.col("h") == 0).collect()}
-        cand_planted = {
-            (r.id_a, r.id_b)
-            for r in cand.where(F.col("id_b") == F.col("id_a") + 1000000)
-            .collect()
-            if r.id_a in planted_ids
-        }
-        # (a) pigeonhole completeness wrt the family's OWN fingerprints
-        assert near <= cand_planted, fam
-        # identical text => identical fingerprint in ANY family
-        assert zero == {(i, i + 1000000) for i in planted_ids}, fam
-        hit_sets[fam] = zero
-    # (b) the identical-plant candidate sets agree across families
-    assert hit_sets["portable_md5"] == hit_sets["production_xxhash64"]
+    )
+    near = {(r.id_a, r.id_b) for r in ham.where(F.col("h") <= 3).collect()}
+    zero = {(r.id_a, r.id_b) for r in ham.where(F.col("h") == 0).collect()}
+    cand_planted = {
+        (r.id_a, r.id_b)
+        for r in cand.where(F.col("id_b") == F.col("id_a") + 1000000)
+        .collect()
+        if r.id_a in planted_ids
+    }
+    # pigeonhole completeness wrt the fingerprints
+    assert near <= cand_planted
+    # identical text => identical fingerprint
+    assert zero == {(i, i + 1000000) for i in planted_ids}
 
 
-def test_minhash_production_vs_portable_candidate_sets(spark):
-    """Production xxhash64 MinHash vs the portable grouped-digest md5
-    family (hashes_per_digest=4): identical-text plants have Jaccard 1,
-    so EVERY band matches in BOTH families — the planted candidate sets
-    must be equal (and complete)."""
+def test_minhash_digest_carving_candidate_sets(spark):
+    """MinHash with one md5 per hash (``hashes_per_digest=1``) vs four
+    8-hex hashes carved from each digest (``hashes_per_digest=4``):
+    identical-text plants have Jaccard 1, so EVERY band matches under
+    both carvings — the planted candidate sets must be equal (and
+    complete)."""
     dupped, plants = _planted_docs(spark)
     expected = {
         (r.id_a, r.id_b) for r in plants.collect()
     }
     got = {}
-    for fam, kw in (
-        ("production_xxhash64", dict()),
-        ("portable_md5_grouped", dict(portable=True, hashes_per_digest=4)),
-    ):
+    for per_digest in (1, 4):
         sigs = minhash_signatures(
-            dupped, "doc_id", "text", num_hashes=32, **kw
+            dupped, "doc_id", "text", num_hashes=32,
+            hashes_per_digest=per_digest,
         )
-        cand = lsh_candidate_pairs(
-            sigs, "doc_id", num_hashes=32, bands=8,
-            portable=bool(kw.get("portable")),
-        )
-        got[fam] = {
+        cand = lsh_candidate_pairs(sigs, "doc_id", num_hashes=32, bands=8)
+        got[per_digest] = {
             (r.id_a, r.id_b)
             for r in cand.where(
                 F.col("id_b") == F.col("id_a") + 1000000
             ).collect()
         } & expected
-        assert got[fam] == expected, fam
-    assert got["production_xxhash64"] == got["portable_md5_grouped"]
+        assert got[per_digest] == expected, per_digest
+    assert got[1] == got[4]
 
 
 # ---- SimHash chunk blocking (shared operator behind q204) -----------------

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from ftp_stub import StubFtpServer
 
 from cubicerp_client_etl_spark.config import server_spec_from_ini
@@ -19,6 +20,7 @@ from cubicerp_client_etl_spark.plans.spec import (
     ServerSpec,
     TransformSpec,
 )
+from cubicerp_client_etl_spark.sources.dbf import read_dbf
 from cubicerp_client_etl_spark.transports.ftp import FtpTransport
 
 
@@ -57,9 +59,11 @@ def test_ftp_fetch_put_roundtrip(tmp_path):
         assert "out_15.txt" in t.listdir()
 
 
-def test_ftp_job_extract_and_load(spark, tmp_path):
-    """End-to-end: extract a CSV from FTP, transform, load a CSV back to
-    FTP — the reference's fs_protocol='ftp' lifecycle."""
+@pytest.mark.parametrize("load_type", ["csv", "dbf"])
+def test_ftp_job_extract_and_load(spark, tmp_path, load_type):
+    """End-to-end: extract a CSV from FTP, transform, load a CSV (or a
+    single-file DBF) back to FTP — the reference's fs_protocol='ftp'
+    lifecycle."""
     root = tmp_path / "remote"
     root.mkdir()
     (root / "src_2024.csv").write_text("1,apple\n2,banana\n3,cherry\n")
@@ -85,17 +89,26 @@ def test_ftp_job_extract_and_load(spark, tmp_path):
             ),
             load=ResourceSpec(
                 name="dst",
-                f_type="csv",
-                f_filename="dst_{aaaa}.csv",
+                f_type=load_type,
+                f_filename=f"dst_{{aaaa}}.{load_type}",
                 server=server,
             ),
             run_date="2024-06-01",
             pk_field="id",
         )
         run_job(spark, job)
-        assert (root / "dst_2024.csv").exists()
-        body = (root / "dst_2024.csv").read_text().strip().splitlines()
-        assert sorted(body) == ["1,APPLE", "2,BANANA", "3,CHERRY"]
+        uploaded = root / f"dst_2024.{load_type}"
+        assert uploaded.exists()
+        if load_type == "csv":
+            body = uploaded.read_text().strip().splitlines()
+            assert sorted(body) == ["1,APPLE", "2,BANANA", "3,CHERRY"]
+        else:
+            back = read_dbf(spark, str(uploaded)).collect()
+            assert [(r.id, r.fruit_uc) for r in back] == [
+                ("1", "APPLE"),
+                ("2", "BANANA"),
+                ("3", "CHERRY"),
+            ]
 
 
 def test_ini_bootstrap_builds_server_spec(tmp_path, monkeypatch):

@@ -332,3 +332,76 @@ def test_orc_and_xml_resource_roundtrip(spark, tmp_path):
     got = {(r.n_nationkey, r.n_name_uc) for r in back.collect()}
     want = {(r.n_nationkey, r.n_name.upper()) for r in src.collect()}
     assert got == want
+
+
+def test_dbf_load_roundtrips_through_read_dbf(spark, tmp_path):
+    """I5: a ``dbf`` load resource writes one dBase file, in pk order,
+    that ``sources.dbf.read_dbf`` reads back."""
+    from cubicerp_client_etl_spark.sources.dbf import read_dbf
+
+    src = spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
+    out = str(tmp_path / "nation.dbf")
+    job = JobSpec(
+        name="dbf-load",
+        extract=ResourceSpec(
+            name="src", f_type="parquet", f_filename=f"{SF_SMOKE}/nation.parquet"
+        ),
+        transform=TransformSpec(
+            name="t",
+            fields=(
+                FieldSpec("key", value="CAST(n_nationkey AS BIGINT)"),
+                FieldSpec("name_uc", value="upper(n_name)"),
+            ),
+        ),
+        load=ResourceSpec(name="dst", f_type="dbf", f_filename=out),
+        pk_field="key",
+    )
+    run_job(spark, job)
+    back = [
+        (r.key, r.name_uc)
+        for r in read_dbf(spark, out, schema="key bigint, name_uc string").collect()
+    ]
+    want = sorted((int(r.n_nationkey), r.n_name.upper()) for r in src.collect())
+    assert back == want
+
+
+def test_file_server_resolves_paths_under_fs_path(spark, tmp_path, monkeypatch):
+    """A7: under a 'file' ServerSpec, a relative ``f_filename`` resolves
+    below the server's ``fs_path`` (not the working directory) on both
+    extract and load, and the server's encoding decodes the extract
+    when the resource names none."""
+    from cubicerp_client_etl_spark.plans.spec import ServerSpec
+
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "src_2024.csv").write_bytes("1,café\n2,naïve\n".encode("latin-1"))
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    monkeypatch.chdir(elsewhere)
+    server = ServerSpec(name="local", fs_path=str(data), encoding="ISO-8859-1")
+    job = JobSpec(
+        name="fs-path-job",
+        extract=ResourceSpec(
+            name="src",
+            f_type="csv",
+            f_filename="src_{aaaa}.csv",
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+            server=server,
+        ),
+        transform=TransformSpec(
+            name="t",
+            fields=(FieldSpec("id"), FieldSpec("word_uc", value="upper(word)")),
+        ),
+        load=ResourceSpec(
+            name="dst", f_type="csv", f_filename="out_{aaaa}", server=server
+        ),
+        run_date="2024-06-01",
+        pk_field="id",
+    )
+    run_job(spark, job)
+    assert not (elsewhere / "out_2024").exists()
+    back = spark.read.csv(str(data / "out_2024")).collect()
+    assert sorted((r[0], r[1]) for r in back) == [
+        ("1", "CAFÉ"),
+        ("2", "NAÏVE"),
+    ]

@@ -856,3 +856,24 @@ def test_package_has_no_silent_exception_swallows():
         and all(isinstance(stmt, ast.Pass) for stmt in node.body)
     ]
     assert offenders == []
+
+
+def test_sketch_operators_use_one_hash_family():
+    """The similarity sketches hash only with md5 (the family the DuckDB
+    oracle replays): no ``xxhash64`` or ``hash`` call in the dedup,
+    similarity or sketch operators."""
+    import ast
+    import pathlib
+
+    import cubicerp_client_etl_spark as pkg
+
+    ops = pathlib.Path(pkg.__file__).parent / "operators"
+    offenders = [
+        f"{name}:{node.lineno}"
+        for name in ("dedup.py", "similarity.py", "sketches.py")
+        for node in ast.walk(ast.parse((ops / name).read_text(), name))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        in ("xxhash64", "hash")
+    ]
+    assert offenders == []
