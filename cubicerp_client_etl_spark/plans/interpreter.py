@@ -19,6 +19,7 @@ run, goes through ``sinks.ledger.build_ledger`` under one stable job id.
 
 from __future__ import annotations
 
+import codecs
 import logging
 import os
 import traceback
@@ -49,7 +50,7 @@ from cubicerp_client_etl_spark.sinks.writers import (
 from cubicerp_client_etl_spark.sources.csv_source import csv_columns, read_csv_resource
 from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, fixed_width_columns
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import parse_lines, read_lines
+from cubicerp_client_etl_spark.sources.lines import parse_texts, read_texts
 from cubicerp_client_etl_spark.checkpointing import pin_eager
 
 _log = logging.getLogger(__name__)
@@ -68,13 +69,38 @@ def _resolve_file(res: ResourceSpec, run_date: str) -> tuple[str, str]:
     alike. The path is ``f_filename`` date-rendered (H4/H5) and, on a
     'file' server, joined under its ``fs_path`` (the reference's
     fs_path/filename, SURVEY A7; an absolute f_filename stays as is).
-    The encoding is the resource's, else the server's, else UTF-8."""
+    The encoding is the resource's, else the server's, else UTF-8, and
+    comes back under Spark's charset name (``_spark_charset``)."""
     path = render_date_template(res.f_filename, run_date) if res.f_filename else ""
     srv = res.server
     if path and srv is not None and srv.etl_type == "fs" and srv.fs_protocol == "file":
         path = os.path.join(srv.fs_path, path)
     encoding = res.encoding or (srv.encoding if srv is not None else "") or "UTF-8"
-    return path, encoding
+    return path, _spark_charset(encoding)
+
+
+# Python's canonical codec name → the name Spark's ``decode`` accepts
+_SPARK_CHARSETS = {
+    "utf-8": "UTF-8",
+    "ascii": "US-ASCII",
+    "iso8859-1": "ISO-8859-1",
+    "utf-16": "UTF-16",
+    "utf-16-be": "UTF-16BE",
+    "utf-16-le": "UTF-16LE",
+    "utf-32": "UTF-32",
+}
+
+
+def _spark_charset(encoding: str) -> str:
+    """A declared encoding under Spark's name for it: the reference
+    takes Python codec names ('utf8', 'latin1', 'ascii'), and Spark's
+    ``decode`` accepts only its own spellings. A name outside that set
+    passes through unchanged for the CSV reader/writer (Java charsets)."""
+    try:
+        canonical = codecs.lookup(encoding).name
+    except LookupError:
+        return encoding
+    return _SPARK_CHARSETS.get(canonical, encoding)
 
 
 def _ftp_transport(server):
@@ -136,8 +162,8 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             schema=res.rpc_schema or None,
         )
     elif job.job_type == "online" and job.input_payload_b64 is not None:
-        # A6: the inline payload is one more lines frame for the file
-        # codecs, header/footer broadcast included
+        # A6: the inline payload is one more (file, text) frame for the
+        # file codecs, header/footer included
         df = _parse_text(
             res, read_inline_payload(spark, job.input_payload_b64, encoding)
         )
@@ -175,7 +201,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             encoding=encoding,
         )
     elif res.f_type in ("csv", "txt"):
-        df = _parse_text(res, read_lines(spark, path, encoding))
+        df = _parse_text(res, read_texts(spark, path, encoding))
     elif res.f_type == "dbf":
         from cubicerp_client_etl_spark.sources.dbf import read_dbf
 
@@ -199,21 +225,21 @@ def _fw_in(c) -> FWColumn:
     return FWColumn(c.name, c.txt_position, c.txt_length)
 
 
-def _parse_text(res: ResourceSpec, lines: DataFrame) -> DataFrame:
-    """Ordered lines (a file's or an inline payload's) → body rows per
-    the resource's csv/txt physics and header/footer columns."""
+def _parse_text(res: ResourceSpec, texts: DataFrame) -> DataFrame:
+    """``(file, text)`` rows (files' or an inline payload's) → body rows
+    per the resource's csv/txt physics and header/footer columns."""
     if res.f_type == "csv":
         to_col = lambda c: c.name  # noqa: E731
-        project = partial(csv_columns, sep=res.txt_separator, quote=res.txt_quote)
+        parse = partial(csv_columns, sep=res.txt_separator, quote=res.txt_quote)
     elif res.f_type == "txt":
-        to_col, project = _fw_in, fixed_width_columns
+        to_col, parse = _fw_in, fixed_width_columns
     else:
         raise ValueError(f"line payload needs csv/txt physics, got {res.f_type}")
     header, footer = (
         [to_col(c) for c in cols] if cols else None
         for cols in (res.header_columns, res.footer_columns)
     )
-    return parse_lines(lines, project, [to_col(c) for c in res.columns], header, footer)
+    return parse_texts(texts, parse, [to_col(c) for c in res.columns], header, footer)
 
 
 # ------------------------------------------------------------------- transform
@@ -264,6 +290,14 @@ def load_sink(
     the merged frame (with the per-row action tag) for inspection."""
     res = job.load
     mode = job.transform.reprocess
+    path, encoding = _resolve_file(res, job.run_date)
+    if res.f_type == "txt" and encoding != "UTF-8":
+        # Spark's text writer always writes UTF-8: refuse before the
+        # merge runs rather than write a file in the wrong encoding
+        raise ValueError(
+            f"fixed-width load cannot write encoding {encoding!r}: "
+            "the text writer only writes UTF-8"
+        )
     # C4 shape: the target's recovered server ids (model_id) are load
     # METADATA, not merge payload — pull the (pk -> model_id) map out
     # before the merge (staged rows never carry one) and re-attach it
@@ -317,7 +351,6 @@ def load_sink(
         rpc_ledger.unpersist()
         return merged
 
-    path, _ = _resolve_file(res, job.run_date)
     ftp_server = _ftp_server(res)
     if ftp_server is not None:
         # I6: render the single-file output into the local spool, then
@@ -347,6 +380,7 @@ def load_sink(
         write_csv_resource(
             to_write, path, sep=res.txt_separator, quote=res.txt_quote,
             header=res.txt_header, single_file=ftp_server is not None,
+            encoding=encoding,
         )
     elif res.f_type == "txt":
         write_fixed_width(
@@ -361,7 +395,8 @@ def load_sink(
             order_by=pk_order,
         )
     elif res.f_type == "dbf":
-        # I5: one dBase file, streamed driver-side in pk order
+        # I5: one dBase file, streamed driver-side in pk order (always
+        # latin-1, whatever the resolved encoding)
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         write_dbf(to_write.orderBy(*pk_order) if pk_order else to_write, path)
     else:

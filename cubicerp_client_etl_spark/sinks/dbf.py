@@ -87,7 +87,10 @@ def _encode_value(v, f: DbfField) -> bytes:
 def write_dbf(df: DataFrame, path: str, specs: list[DbfField] | None = None) -> int:
     """Write ``df`` to a single .dbf file at ``path`` (local filesystem).
     Returns the record count. Streams partitions driver-side — bounded
-    memory, but single-writer by format design (see module docstring)."""
+    memory, but single-writer by format design (see module docstring).
+    Character fields are always latin-1 (an unencodable character
+    becomes ``?``), whatever encoding the load resource or its server
+    declares."""
     specs = specs or _infer_specs(df)
     record_len = 1 + sum(f.length for f in specs)
     header_len = 32 + 32 * len(specs) + 1

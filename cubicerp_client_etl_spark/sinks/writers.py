@@ -55,7 +55,8 @@ def write_fixed_width(
 ) -> None:
     """Render + write. With header/footer (or an explicit order) output
     is a single ordered file, matching the reference's sequential writer;
-    otherwise each partition writes independently."""
+    otherwise each partition writes independently. The output is UTF-8:
+    Spark's text writer writes no other encoding."""
     if header_line is None and footer_line is None and not order_by:
         render_fixed_width_lines(df, columns).write.mode("overwrite").text(path)
         return
@@ -105,11 +106,15 @@ def write_csv_resource(
     quote: str = '"',
     header: bool = False,
     single_file: bool = False,
+    encoding: str = "UTF-8",
 ) -> None:
     """CSV sink (I4): native writer — quoting via uniVocity, parallel by
-    default; ``single_file`` for the reference's sequential layout."""
+    default; ``single_file`` for the reference's sequential layout;
+    ``encoding`` is the file's byte encoding."""
     out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").csv(path, sep=sep, quote=quote, header=header)
+    out.write.mode("overwrite").csv(
+        path, sep=sep, quote=quote, header=header, encoding=encoding
+    )
 
 
 def write_parquet(

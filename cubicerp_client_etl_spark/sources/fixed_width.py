@@ -4,10 +4,11 @@ The reference slices each line with per-column ``slice(txt_position-1,
 txt_position+txt_lenght-1)`` specs from ``etl.resource.column``
 (cubicerpetl/cubicerpetl.py:228-248 — `lenght` [sic] is the reference's
 own field name). Here each column is one ``substring`` expression —
-pure Catalyst projection over the ordered line read. The job path
-(``plans.interpreter._parse_text`` → ``sources.lines.parse_lines``)
-parses header/footer rows with their own slice specs and broadcasts
-them onto every body row, the reference's semantics at :235-240.
+pure Catalyst projection over a file's ordered lines. The job path
+(``plans.interpreter._parse_text`` → ``sources.lines.parse_texts``)
+parses the file's first and last line with the header/footer slice
+specs and carries them onto every body row, the reference's semantics
+at :235-240.
 """
 
 from __future__ import annotations
@@ -29,9 +30,8 @@ class FWColumn:
     length: int
 
 
-def fixed_width_columns(cols: list[FWColumn]) -> list[Column]:
-    """Slice one line's ``value`` into the declared, space-trimmed fields."""
-    return [
-        F.trim(F.substring("value", c.position, c.length)).alias(c.name)
-        for c in cols
-    ]
+def fixed_width_columns(line: Column, cols: list[FWColumn]) -> Column:
+    """Slice one line into a struct of the declared, space-trimmed fields."""
+    return F.struct(
+        *[F.trim(F.substring(line, c.position, c.length)).alias(c.name) for c in cols]
+    )

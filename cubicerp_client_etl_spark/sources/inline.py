@@ -3,8 +3,9 @@
 Online jobs carry their file content in the job record itself
 (``base64.b64decode(job['input_file'])`` feeding the CSV/TXT parsers,
 cubicerpetl/cubicerpetl.py:205-214). Here the decoded payload becomes a
-one-file DataFrame of ordered lines, so the downstream codec path is
-byte-for-byte the same as the file-based one.
+one-file ``(file, text)`` frame, the shape ``sources.lines.read_texts``
+gives a file, so the downstream codec path (``parse_texts``) is the
+same as the file-based one.
 """
 
 from __future__ import annotations
@@ -12,16 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.sources.lines import numbered_lines
-
 
 def read_inline_payload(
     spark: SparkSession, payload_b64: str, encoding: str = "UTF-8"
 ) -> DataFrame:
-    """base64 text payload → (file='<inline>', _line_no, value) lines,
-    the same shape sources.lines.read_lines produces."""
+    """base64 text payload → one ``(file='<inline>', text)`` row."""
     # range + lit keeps the one-row frame in the JVM: no Python-pickled
     # scan for the payload
     df = spark.range(0, 1, 1, 1).select(F.lit(payload_b64).alias("b64"))
     text = F.decode(F.unbase64(F.col("b64")), encoding)
-    return df.select(F.lit("<inline>").alias("file"), numbered_lines(text))
+    return df.select(F.lit("<inline>").alias("file"), text.alias("text"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import base64
 import glob
+import gzip
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,7 +24,7 @@ from cubicerp_client_etl_spark.sinks.writers import (
     write_fixed_width,
 )
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import read_lines
+from cubicerp_client_etl_spark.sources.lines import read_texts, split_lines
 
 NATION_ROWS = [(0, "ALGERIA", 0), (1, "ARGENTINA", 1), (24, "UNITED STATES", 1)]
 
@@ -204,13 +205,136 @@ def test_inline_base64_equals_file_parse(spark, tmp_path):
     content = "a;1\nb;2\nc;3\n"
     p = tmp_path / "plain.csv"
     p.write_text(content)
-    via_file = read_lines(spark, str(p)).select("_line_no", "value").collect()
     payload = base64.b64encode(content.encode()).decode()
-    via_inline = (
-        read_inline_payload(spark, payload).select("_line_no", "value").collect()
-    )
-    assert sorted(map(tuple, via_file)) == sorted(map(tuple, via_inline))
 
+    def lines(texts):
+        return sorted(
+            map(tuple, texts.select(F.posexplode(split_lines(F.col("text")))).collect())
+        )
+
+    via_file = lines(read_texts(spark, str(p)))
+    assert via_file == [(0, "a;1"), (1, "b;2"), (2, "c;3")]
+    assert lines(read_inline_payload(spark, payload)) == via_file
+    # an empty file and an empty payload both have no lines
+    empty = tmp_path / "empty.csv"
+    empty.write_text("")
+    assert lines(read_texts(spark, str(empty))) == []
+    assert lines(read_inline_payload(spark, "")) == []
+
+
+def test_empty_payload_with_header_footer_has_no_rows(spark):
+    """An empty inline payload has no lines: with header and footer
+    declared it yields no rows (not an out-of-range line index)."""
+    job = JobSpec(
+        name="empty_online",
+        job_type="online",
+        input_payload_b64="",
+        extract=ResourceSpec(
+            name="in", f_type="csv", txt_separator=";",
+            columns=(ColumnSpec("k"),),
+            header_columns=(ColumnSpec("batch"),),
+            footer_columns=(ColumnSpec("n"),),
+        ),
+        transform=TransformSpec(name="t"),
+        load=ResourceSpec(name="unused"),
+    )
+    df = extract(spark, job)
+    assert df.columns == ["file", "_line_no", "k", "batch", "n"]
+    assert df.collect() == []
+
+
+@pytest.mark.parametrize("compressed", [False, True])
+@pytest.mark.parametrize("encoding", ["ISO-8859-1", "UTF-8"])
+def test_text_extracts_decode_once(spark, tmp_path, encoding, compressed):
+    """A file is decoded from its bytes with the declared encoding, once,
+    after a ``.gz`` file is decompressed: a csv-with-footer extract and a
+    txt extract both yield the original words."""
+    suffix, write = (".gz", gzip.open) if compressed else ("", open)
+
+    def put(name, text):
+        path = tmp_path / (name + suffix)
+        with write(path, "wb") as fh:
+            fh.write(text.encode(encoding))
+        return str(path)
+
+    csv = put("rows.csv", "1;caf\u00e9\n2;na\u00efve\n2;tot\u00e9\n")
+    csv_rows = _extract(
+        spark,
+        ResourceSpec(
+            name="csv",
+            f_type="csv",
+            f_filename=csv,
+            txt_separator=";",
+            encoding=encoding,
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+            footer_columns=(ColumnSpec("n"), ColumnSpec("tag")),
+        ),
+    ).orderBy("_line_no").collect()
+    assert [(r.id, r.word, r.tag) for r in csv_rows] == [
+        ("1", "caf\u00e9", "tot\u00e9"),
+        ("2", "na\u00efve", "tot\u00e9"),
+    ]
+    txt = put("rows.txt", "1caf\u00e9 \n2na\u00efve\n")
+    txt_rows = _extract(
+        spark,
+        ResourceSpec(
+            name="txt",
+            f_type="txt",
+            f_filename=txt,
+            encoding=encoding,
+            columns=(
+                ColumnSpec("id", txt_position=1, txt_length=1),
+                ColumnSpec("word", txt_position=2, txt_length=5),
+            ),
+        ),
+    ).orderBy("_line_no").collect()
+    assert [(r.id, r.word) for r in txt_rows] == [
+        ("1", "caf\u00e9"),
+        ("2", "na\u00efve"),
+    ]
+
+
+def test_invalid_utf8_byte_becomes_replacement_char(spark, tmp_path):
+    """A UTF-8 extract with an invalid byte does not fail the job: the
+    byte reads as U+FFFD, as the text source has always read it."""
+    p = tmp_path / "bad.csv"
+    p.write_bytes(b"H;1\n1;ab\xffc\nT;1\n")
+    rows = _extract(
+        spark,
+        ResourceSpec(
+            name="bad", f_type="csv", f_filename=str(p), txt_separator=";",
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+            header_columns=(ColumnSpec("h"), ColumnSpec("batch")),
+            footer_columns=(ColumnSpec("t"), ColumnSpec("n")),
+        ),
+    ).collect()
+    assert [(r.id, r.word, r.batch, r.n) for r in rows] == [
+        ("1", "ab\ufffdc", "1", "1")
+    ]
+
+
+@pytest.mark.parametrize(
+    "declared, content_encoding",
+    [("utf8", "utf-8"), ("UTF8", "utf-8"), ("latin1", "latin-1"), ("ascii", "ascii")],
+)
+def test_python_codec_names_read_text_extracts(
+    spark, tmp_path, declared, content_encoding
+):
+    """Encodings are declared with Python codec names, as in the
+    reference; each resolves to the charset Spark decodes with."""
+    word = "na\u00efve" if content_encoding != "ascii" else "naive"
+    p = tmp_path / "rows.csv"
+    p.write_bytes(f"1;{word}\nT;1\n".encode(content_encoding))
+    rows = _extract(
+        spark,
+        ResourceSpec(
+            name="named", f_type="csv", f_filename=str(p), txt_separator=";",
+            encoding=declared,
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+            footer_columns=(ColumnSpec("t"), ColumnSpec("n")),
+        ),
+    ).collect()
+    assert [(r.id, r.word, r.n) for r in rows] == [("1", word, "1")]
 
 def test_csv_plain_path_roundtrip(spark, tmp_path, nation_df):
     from cubicerp_client_etl_spark.sinks.writers import write_csv_resource

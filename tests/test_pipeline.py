@@ -368,8 +368,8 @@ def test_dbf_load_roundtrips_through_read_dbf(spark, tmp_path):
 def test_file_server_resolves_paths_under_fs_path(spark, tmp_path, monkeypatch):
     """A7: under a 'file' ServerSpec, a relative ``f_filename`` resolves
     below the server's ``fs_path`` (not the working directory) on both
-    extract and load, and the server's encoding decodes the extract
-    when the resource names none."""
+    extract and load, and the server's encoding decodes the extract and
+    encodes the load when the resource names none."""
     from cubicerp_client_etl_spark.plans.spec import ServerSpec
 
     data = tmp_path / "data"
@@ -400,8 +400,64 @@ def test_file_server_resolves_paths_under_fs_path(spark, tmp_path, monkeypatch):
     )
     run_job(spark, job)
     assert not (elsewhere / "out_2024").exists()
-    back = spark.read.csv(str(data / "out_2024")).collect()
+    # the load writes in the server's encoding too
+    back = spark.read.csv(str(data / "out_2024"), encoding="ISO-8859-1").collect()
     assert sorted((r[0], r[1]) for r in back) == [
         ("1", "CAFÉ"),
         ("2", "NAÏVE"),
     ]
+    written = b"".join(p.read_bytes() for p in (data / "out_2024").glob("part-*"))
+    assert "CAFÉ".encode("latin-1") in written
+    assert "NAÏVE".encode("latin-1") in written
+
+
+def test_txt_load_refuses_non_utf8_encoding(spark, tmp_path):
+    """Spark's text writer only writes UTF-8, so a fixed-width load whose
+    resolved encoding is anything else raises, naming the encoding,
+    before any output is written."""
+    src = tmp_path / "src.csv"
+    src.write_text("1,a\n")
+    out = tmp_path / "out_txt"
+    job = JobSpec(
+        name="latin-txt-load",
+        extract=ResourceSpec(
+            name="src", f_type="csv", f_filename=str(src),
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+        ),
+        transform=TransformSpec(name="t", fields=(FieldSpec("id"), FieldSpec("word"))),
+        load=ResourceSpec(
+            name="dst", f_type="txt", f_filename=str(out), encoding="ISO-8859-1",
+            columns=(ColumnSpec("id", txt_length=2), ColumnSpec("word", txt_length=4)),
+        ),
+        pk_field="id",
+        ledger_path=str(tmp_path / "ledger"),
+    )
+    with pytest.raises(ValueError, match="ISO-8859-1"):
+        run_job(spark, job)
+    assert not out.exists()
+    assert not (tmp_path / "ledger").exists()
+
+
+def test_txt_load_accepts_python_utf8_name(spark, tmp_path):
+    """'utf8', the Python codec name, is UTF-8: a fixed-width load that
+    declares it writes its rows."""
+    src = tmp_path / "src.csv"
+    src.write_text("1,a\n")
+    out = tmp_path / "out_txt"
+    job = JobSpec(
+        name="utf8-txt-load",
+        extract=ResourceSpec(
+            name="src", f_type="csv", f_filename=str(src),
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+        ),
+        transform=TransformSpec(name="t", fields=(FieldSpec("id"), FieldSpec("word"))),
+        load=ResourceSpec(
+            name="dst", f_type="txt", f_filename=str(out), encoding="utf8",
+            columns=(ColumnSpec("id", txt_length=2), ColumnSpec("word", txt_length=4)),
+        ),
+        pk_field="id",
+        ledger_path=str(tmp_path / "ledger"),
+    )
+    run_job(spark, job)
+    written = "".join(p.read_text() for p in out.glob("part-*"))
+    assert written.splitlines() == ["1 a   "]

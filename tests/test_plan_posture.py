@@ -814,6 +814,41 @@ def test_online_mapped_job_plans_without_rdd_scan_or_join(spark):
     assert "Join" not in plan, plan
 
 
+def test_header_footer_extract_is_one_narrow_scan(spark, tmp_path):
+    """A csv/txt extract with header and footer reads each file once and
+    slices its own lines: the executed plan has no window, no join and
+    a single file scan."""
+    from cubicerp_client_etl_spark.plans.interpreter import extract
+    from cubicerp_client_etl_spark.plans.spec import (
+        ColumnSpec,
+        JobSpec,
+        ResourceSpec,
+        TransformSpec,
+    )
+
+    for i in range(2):
+        (tmp_path / f"part-{i}.csv").write_text(f"H;{i}\n1;a\n2;b\nT;2\n")
+    job = JobSpec(
+        name="hf",
+        extract=ResourceSpec(
+            name="in", f_type="csv", f_filename=str(tmp_path), txt_separator=";",
+            columns=(ColumnSpec("k"), ColumnSpec("v")),
+            header_columns=(ColumnSpec("hrec"), ColumnSpec("batch")),
+            footer_columns=(ColumnSpec("trec"), ColumnSpec("n")),
+        ),
+        transform=TransformSpec(name="t"),
+        load=ResourceSpec(name="out"),
+    )
+    df = extract(spark, job)
+    assert sorted((r.batch, r.k, r.n) for r in df.collect()) == [
+        ("0", "1", "2"), ("0", "2", "2"), ("1", "1", "2"), ("1", "2", "2")
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "Join" not in plan, plan
+    assert plan.count("FileScan") == 1, plan
+
+
 def test_job_path_sources_build_no_python_frames():
     """Driver-side literals on the ETL job path are JVM expressions: no
     module under ``plans/`` or ``sources/`` calls ``createDataFrame``."""
