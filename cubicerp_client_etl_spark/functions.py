@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.compilers.sqltext import as_column, literal
+
 MONEY = "decimal(18,4)"
 
 
@@ -71,40 +73,47 @@ def dsum_charge(ep: str, disc: str, tax: str) -> Column:
 # --- fixed-width string physics (SURVEY H1; ref cubicerpetl.py:555-562) ---
 
 
-def fw_render(col: Column, length: int, align: str = "ljust", fill: str = " ") -> Column:
-    """Render one fixed-width field: pad to ``length`` with ``fill`` per
-    ``align`` ∈ {ljust, rjust, center}, then hard-truncate to ``length``.
+def fw_render_sql(value: str, length: int, align: str = "ljust", fill: str = " ") -> str:
+    """SQL text rendering the SQL ``value`` expression as one fixed-width
+    field: pad to ``length`` with ``fill`` per ``align`` ∈ {ljust, rjust,
+    center}, then hard-truncate to ``length``; NULL renders as padding.
 
     Matches the reference's semantics including the rjust quirk of keeping
     the *last* n characters on overflow (``str(val)[-n:]``,
     cubicerpetl.py:558), while ljust/center keep the first n.
     """
-    s = col.cast("string")
-    s = F.coalesce(s, F.lit(""))
+    s = f"coalesce(CAST(({value}) AS STRING), '')"
+    pad = literal(fill)
     if align == "rjust":
-        padded = F.lpad(s, length, fill)
-        # lpad already truncates keeping the LAST n? No — lpad truncates
-        # keeping the first n. Emulate the reference: overflow keeps tail.
-        return F.when(
-            F.length(s) > length, F.substring(s, -length, length)
-        ).otherwise(padded)
+        # lpad truncates keeping the FIRST n; the reference's overflow
+        # keeps the tail
+        return (
+            f"CASE WHEN length({s}) > {length} THEN substring({s}, {-length}, {length})"
+            f" ELSE lpad({s}, {length}, {pad}) END"
+        )
     if align == "center":
         # Python str.center semantics (the reference calls str.center,
         # cubicerpetl.py:561): left = marg//2 + (marg & width & 1) — the
         # extra fill char goes LEFT when both margin and width are odd.
-        # Column.substr accepts Column positions, so slide a window over
+        # substr takes a computed position, so slide a window over
         # fill || s || fill — pure codegen'd expressions, no UDF.
-        marg = F.lit(length) - F.length(s)
-        odd_bonus = (
-            (marg % 2) * F.lit(length % 2)
-        )  # 1 iff margin odd AND width odd
-        left = (F.floor(marg / 2) + odd_bonus).cast("int")
-        padded_full = F.concat(F.lit(fill * length), s, F.lit(fill * length))
-        start = F.lit(length + 1) - left
-        padded = padded_full.substr(start, F.lit(length))
-        return F.when(F.length(s) >= length, F.substring(s, 1, length)).otherwise(padded)
+        marg = f"({length} - length({s}))"
+        left = f"CAST(floor({marg} / 2) + ({marg} % 2) * {length % 2} AS INT)"
+        padded_full = f"concat({literal(fill * length)}, {s}, {literal(fill * length)})"
+        padded = f"substr({padded_full}, {length + 1} - {left}, {length})"
+        return (
+            f"CASE WHEN length({s}) >= {length} THEN substring({s}, 1, {length})"
+            f" ELSE {padded} END"
+        )
     # ljust (default)
-    return F.substring(F.rpad(s, length, fill), 1, length)
+    return f"substring(rpad({s}, {length}, {pad}), 1, {length})"
+
+
+def fw_render(
+    col: Column | str, length: int, align: str = "ljust", fill: str = " "
+) -> Column:
+    """``fw_render_sql`` as a Column over a column name or a Column."""
+    return as_column(col, lambda value: fw_render_sql(value, length, align, fill))
 
 
 def md5_hash32(key: Column) -> Column:

@@ -18,17 +18,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.compilers.sqltext import as_column, literal
 
-def value_mapping_expr(
-    val: Column | str,
+
+def value_mapping_sql(
+    value: str,
     lines: Iterable[tuple[str | None, str | None]],
     default: str | None = None,
     return_null: bool = False,
-) -> Column:
-    """Decode ``val`` through driver-side mapping ``lines`` — ``(raw
-    value, label)`` pairs — as one expression (C1): ``try_element_at``
-    over a literal ``create_map``, so the decode is part of the
-    projection and no join, broadcast or Python-built frame is planned.
+) -> str:
+    """SQL text decoding the SQL expression ``value`` through driver-side
+    mapping ``lines`` — ``(raw value, label)`` pairs — as one expression
+    (C1): ``try_element_at`` over a literal ``map``, so the decode is part
+    of the projection and no join, broadcast or Python-built frame is
+    planned, and the whole map reaches the JVM in the projection's one
+    parse.
 
     ``lines`` fold into a dict like the reference's (a later line for the
     same raw value wins); a line with a ``None`` raw value never matches.
@@ -40,18 +44,32 @@ def value_mapping_expr(
     * unmatched input → ``default`` if given, otherwise the original
       value passes through.
     """
-    val = F.col(val) if isinstance(val, str) else val
     table = {name: label for name, label in lines if name is not None}
+    text = f"CAST(({value}) AS STRING)"
+    dflt = f"CAST({literal(default)} AS STRING)"
     if table:
-        literal = F.create_map(
-            *[F.lit(x).cast("string") for kv in table.items() for x in kv]
+        pairs = ", ".join(
+            f"CAST({literal(x)} AS STRING)" for kv in table.items() for x in kv
         )
-        label = F.try_element_at(literal, val.cast("string"))
+        label = f"try_element_at(map({pairs}), {text})"
     else:
-        label = F.lit(None).cast("string")
-    dflt = F.lit(default).cast("string")
-    return F.when(val.isNull(), F.lit(None) if return_null else dflt).otherwise(
-        F.coalesce(label, dflt, val.cast("string"))
+        label = "CAST(NULL AS STRING)"
+    if_null = "NULL" if return_null else dflt
+    return (
+        f"CASE WHEN ({value}) IS NULL THEN {if_null}"
+        f" ELSE coalesce({label}, {dflt}, {text}) END"
+    )
+
+
+def value_mapping_expr(
+    val: Column | str,
+    lines: Iterable[tuple[str | None, str | None]],
+    default: str | None = None,
+    return_null: bool = False,
+) -> Column:
+    """``value_mapping_sql`` as a Column over a column name or a Column."""
+    return as_column(
+        val, lambda value: value_mapping_sql(value, lines, default, return_null)
     )
 
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.compilers.sqltext import ident
+
 REPROCESS_MODES = ("insert", "update", "noupdate", "onlyupdate", "delete")
 
 
@@ -52,52 +54,54 @@ def apply_reprocess_mode(
     if mode not in REPROCESS_MODES:
         raise ValueError(f"unknown reprocess mode: {mode!r}")
 
+    # SQL text, one parse per projection (compilers.sqltext)
     cols = target.columns
+
+    def tagged(action: str) -> list[str]:
+        return [f"{action} AS {ident(action_col)}"] if action_col else []
+
     if mode == "insert":
-        merged = target.select(*cols).withColumn("__act", F.lit("kept")).unionByName(
-            staged.select(*cols).withColumn("__act", F.lit("inserted"))
+        names = [ident(c) for c in cols]
+        return target.selectExpr(*names, *tagged("'kept'")).unionByName(
+            staged.selectExpr(*names, *tagged("'inserted'"))
         )
-    else:
-        t = target.alias("t")
-        s = staged.alias("s")
-        j = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "full_outer")
-        t_pk, s_pk = F.col(f"t.{pk}"), F.col(f"s.{pk}")
-        matched = t_pk.isNotNull() & s_pk.isNotNull()
-        t_only = s_pk.isNull()
-        s_only = t_pk.isNull()
 
-        if mode == "update":
-            take_staged = matched | s_only
-            keep_target = t_only
-            act = (
-                F.when(matched, "updated").when(s_only, "inserted").otherwise("kept")
-            )
-        elif mode == "noupdate":
-            take_staged = s_only
-            keep_target = matched | t_only
-            act = F.when(s_only, "inserted").otherwise("kept")
-        elif mode == "onlyupdate":
-            take_staged = matched
-            keep_target = t_only
-            act = F.when(matched, "updated").otherwise("kept")
-        else:  # delete: unlink matched target, then create all staged
-            take_staged = matched | s_only
-            keep_target = t_only
-            act = (
-                F.when(matched, "replaced").when(s_only, "inserted").otherwise("kept")
-            )
+    t_pk, s_pk = f"t.{ident(pk)}", f"s.{ident(pk)}"
+    j = target.alias("t").join(
+        staged.alias("s"), F.expr(f"{t_pk} = {s_pk}"), "full_outer"
+    )
+    matched = f"({t_pk} IS NOT NULL AND {s_pk} IS NOT NULL)"
+    t_only = f"{s_pk} IS NULL"
+    s_only = f"{t_pk} IS NULL"
+    if mode == "update":
+        take_staged = f"({matched} OR {s_only})"
+        keep_target = t_only
+        act = (
+            f"CASE WHEN {matched} THEN 'updated' WHEN {s_only} THEN 'inserted'"
+            " ELSE 'kept' END"
+        )
+    elif mode == "noupdate":
+        take_staged = s_only
+        keep_target = f"({matched} OR {t_only})"
+        act = f"CASE WHEN {s_only} THEN 'inserted' ELSE 'kept' END"
+    elif mode == "onlyupdate":
+        take_staged = matched
+        keep_target = t_only
+        act = f"CASE WHEN {matched} THEN 'updated' ELSE 'kept' END"
+    else:  # delete: unlink matched target, then create all staged
+        take_staged = f"({matched} OR {s_only})"
+        keep_target = t_only
+        act = (
+            f"CASE WHEN {matched} THEN 'replaced' WHEN {s_only} THEN 'inserted'"
+            " ELSE 'kept' END"
+        )
 
-        picked = [
-            F.when(take_staged, F.col(f"s.{c}"))
-            .when(keep_target, F.col(f"t.{c}"))
-            .alias(c)
-            for c in cols
-        ]
-        merged = j.filter(take_staged | keep_target).select(*picked, act.alias("__act"))
-
-    if action_col:
-        return merged.withColumnRenamed("__act", action_col)
-    return merged.drop("__act")
+    picked = [
+        f"CASE WHEN {take_staged} THEN s.{ident(c)}"
+        f" WHEN {keep_target} THEN t.{ident(c)} END AS {ident(c)}"
+        for c in cols
+    ]
+    return j.filter(f"{take_staged} OR {keep_target}").selectExpr(*picked, *tagged(act))
 
 
 def recover_ids_from_ledger(

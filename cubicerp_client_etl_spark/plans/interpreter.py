@@ -23,6 +23,7 @@ import codecs
 import logging
 import os
 import traceback
+from contextlib import contextmanager
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +31,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from cubicerp_client_etl_spark.compilers.domain import compile_domain
+from cubicerp_client_etl_spark.compilers.sqltext import ident, literal
 from cubicerp_client_etl_spark.compilers.template import render_date_template
-from cubicerp_client_etl_spark.operators.lookups import value_mapping_expr
+from cubicerp_client_etl_spark.operators.lookups import value_mapping_sql
 from cubicerp_client_etl_spark.operators.merge import apply_reprocess_mode
 from cubicerp_client_etl_spark.plans.spec import JobSpec, ResourceSpec, TransformSpec
 from cubicerp_client_etl_spark.sinks.ledger import (
@@ -50,7 +52,11 @@ from cubicerp_client_etl_spark.sinks.writers import (
 from cubicerp_client_etl_spark.sources.csv_source import csv_columns, read_csv_resource
 from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, fixed_width_columns
 from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import parse_texts, read_texts
+from cubicerp_client_etl_spark.sources.lines import (
+    DECODE_CHARSETS,
+    parse_texts,
+    read_texts,
+)
 from cubicerp_client_etl_spark.checkpointing import pin_eager
 
 _log = logging.getLogger(__name__)
@@ -79,28 +85,49 @@ def _resolve_file(res: ResourceSpec, run_date: str) -> tuple[str, str]:
     return path, _spark_charset(encoding)
 
 
-# Python's canonical codec name → the name Spark's ``decode`` accepts
-_SPARK_CHARSETS = {
-    "utf-8": "UTF-8",
-    "ascii": "US-ASCII",
-    "iso8859-1": "ISO-8859-1",
-    "utf-16": "UTF-16",
-    "utf-16-be": "UTF-16BE",
-    "utf-16-le": "UTF-16LE",
-    "utf-32": "UTF-32",
-}
-
-
 def _spark_charset(encoding: str) -> str:
     """A declared encoding under Spark's name for it: the reference
     takes Python codec names ('utf8', 'latin1', 'ascii'), and Spark's
     ``decode`` accepts only its own spellings. A name outside that set
-    passes through unchanged for the CSV reader/writer (Java charsets)."""
+    passes through unchanged: the csv source and writer, like ``decode``,
+    take such a (Java) charset only under ``spark.sql.legacy.javaCharsets``."""
     try:
         canonical = codecs.lookup(encoding).name
     except LookupError:
         return encoding
-    return _SPARK_CHARSETS.get(canonical, encoding)
+    return DECODE_CHARSETS.get(canonical, encoding)
+
+
+_JAVA_CHARSETS = "spark.sql.legacy.javaCharsets"
+
+
+def _decodable(spark: SparkSession, encoding: str) -> str:
+    """``encoding`` if Spark's ``decode`` takes it — a text extract
+    (header/footer csv, txt, inline payload) decodes its bytes with it —
+    else a ValueError, raised while the plan is built rather than from
+    the first Spark job. ``decode`` takes the ``DECODE_CHARSETS`` names,
+    or any Java charset under ``spark.sql.legacy.javaCharsets``."""
+    charsets = DECODE_CHARSETS.values()
+    if encoding in charsets or spark.conf.get(_JAVA_CHARSETS) == "true":
+        return encoding
+    raise ValueError(
+        f"text extract encoding {encoding!r} is not one Spark's decode "
+        f"accepts: {', '.join(charsets)} (or any Java charset with "
+        f"{_JAVA_CHARSETS}=true)"
+    )
+
+
+@contextmanager
+def _described(spark: SparkSession, description: str):
+    """Label the Spark jobs of one job-path action with
+    ``description`` (``setJobDescription``), then restore the caller's."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)
 
 
 def _ftp_transport(server):
@@ -164,9 +191,10 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     elif job.job_type == "online" and job.input_payload_b64 is not None:
         # A6: the inline payload is one more (file, text) frame for the
         # file codecs, header/footer included
-        df = _parse_text(
-            res, read_inline_payload(spark, job.input_payload_b64, encoding)
+        payload = read_inline_payload(
+            spark, job.input_payload_b64, _decodable(spark, encoding)
         )
+        df = _parse_text(res, payload)
     elif res.etl_type == "db" and res.sql_query:
         # A1 re-owned: the reference ships this SQL to the source DB
         # wrapped in optional begin/end statements with a settle delay
@@ -201,7 +229,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             encoding=encoding,
         )
     elif res.f_type in ("csv", "txt"):
-        df = _parse_text(res, read_texts(spark, path, encoding))
+        df = _parse_text(res, read_texts(spark, path, _decodable(spark, encoding)))
     elif res.f_type == "dbf":
         from cubicerp_client_etl_spark.sources.dbf import read_dbf
 
@@ -212,12 +240,21 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     if res.domain and not delegated:
         df = df.filter(compile_domain(list(res.domain)))
     # B3: defaults fill NULL holes (reference merges defaults *under*
-    # extracted values, cubicerpetl.py:330-335 — same outcome over NULLs)
-    for k, v in res.row_default_value.items():
-        if k in df.columns:
-            df = df.withColumn(k, F.coalesce(F.col(k), F.lit(v)))
-        else:
-            df = df.withColumn(k, F.lit(v))
+    # extracted values, cubicerpetl.py:330-335 — same outcome over NULLs),
+    # in one projection
+    defaults = res.row_default_value
+    if defaults:
+        cols = df.columns
+        kept = [
+            f"coalesce({ident(c)}, {literal(defaults[c])}) AS {ident(c)}"
+            if c in defaults
+            else ident(c)
+            for c in cols
+        ]
+        added = [
+            f"{literal(v)} AS {ident(k)}" for k, v in defaults.items() if k not in cols
+        ]
+        df = df.selectExpr(*kept, *added)
     return df
 
 
@@ -246,10 +283,12 @@ def _parse_text(res: ResourceSpec, texts: DataFrame) -> DataFrame:
 def transform(df: DataFrame, spec: TransformSpec, job: JobSpec) -> DataFrame:
     """Field program → one select (B1/B2/B9/C1, K-hooks).
 
-    Expressions are SQL strings compiled with F.expr — declarative and
-    optimizer-visible (never exec'd Python, SURVEY §4.4.6). A mapped
-    field decodes inside the same select: its mapping is a literal map
-    expression (``value_mapping_expr``), not a frame to join.
+    Expressions are SQL strings — declarative and optimizer-visible
+    (never exec'd Python, SURVEY §4.4.6) — and the whole field program,
+    mapped fields included, reaches the JVM as one ``selectExpr``. A
+    mapped field decodes inside that select: its mapping is a literal
+    map expression (``value_mapping_sql``), not a frame to join. A
+    ``field_name`` (or a bare field's own name) is one source column.
     """
     if "pre" in job.python_hooks:  # K1 — explicit, registered, typed
         df = job.python_hooks["pre"](df)
@@ -258,19 +297,18 @@ def transform(df: DataFrame, spec: TransformSpec, job: JobSpec) -> DataFrame:
     out_cols = []
     for f_ in spec.fields:
         if f_.value:
-            expr = F.expr(render_date_template(f_.value, job.run_date))
-        elif f_.field_name:
-            expr = F.col(f_.field_name)
+            # the newline ends a trailing -- comment before the paren
+            expr = f"({render_date_template(f_.value, job.run_date)}\n)"
         else:
-            expr = F.col(f_.name)
+            expr = ident(f_.field_name or f_.name)
         if f_.mapping:
             m = mappings[f_.mapping]
-            expr = value_mapping_expr(
+            expr = value_mapping_sql(
                 expr, m.lines, m.default, m.return_null or f_.search_null
             )
-        out_cols.append(expr.alias(f_.name))
+        out_cols.append(f"{expr} AS {ident(f_.name)}")
 
-    out = df.select(*out_cols)
+    out = df.selectExpr(*out_cols)
 
     if spec.filter_domain:  # B7 continue_on, declaratively
         out = out.filter(compile_domain(list(spec.filter_domain)))
@@ -336,14 +374,15 @@ def load_sink(
             out = out.join(id_map, job.pk_field, "left")
         if "model_id" not in out.columns:
             out = out.withColumn("model_id", F.lit(None).cast("long"))
-        rpc_ledger = ship_once(
-            rpc_apply_actions(
-                out,
-                lambda res=res: _rpc_transport_for(res),
-                res.rpc_model,
-                pk_col=job.pk_field,
+        with _described(merged.sparkSession, f"etl {job.name}: rpc ship"):
+            rpc_ledger = ship_once(
+                rpc_apply_actions(
+                    out,
+                    lambda res=res: _rpc_transport_for(res),
+                    res.rpc_model,
+                    pk_col=job.pk_field,
+                )
             )
-        )
         _append_ledger(
             job, rpc_ledger, "pk", level_col="level", message_col="message",
             model_id_col="model_id",
@@ -365,42 +404,8 @@ def load_sink(
         path = os.path.join(transport.spool_dir, os.path.basename(remote_name))
     to_write = merged.drop("action")
     pk_order = [job.pk_field] if job.pk_field in to_write.columns else None
-    if res.f_type == "parquet":
-        write_parquet(to_write, path)
-    elif res.f_type == "orc":
-        to_write.write.mode("overwrite").orc(path)
-    elif res.f_type == "xml":
-        (
-            to_write.write.mode("overwrite")
-            .option("rowTag", res.xml_row_tag)
-            .format("xml")
-            .save(path)
-        )
-    elif res.f_type == "csv":
-        write_csv_resource(
-            to_write, path, sep=res.txt_separator, quote=res.txt_quote,
-            header=res.txt_header, single_file=ftp_server is not None,
-            encoding=encoding,
-        )
-    elif res.f_type == "txt":
-        write_fixed_width(
-            to_write,
-            path,
-            [
-                FWOutColumn(
-                    c.name, c.txt_length, c.txt_align, c.txt_fill_char, c.forced_value
-                )
-                for c in res.columns
-            ],
-            order_by=pk_order,
-        )
-    elif res.f_type == "dbf":
-        # I5: one dBase file, streamed driver-side in pk order (always
-        # latin-1, whatever the resolved encoding)
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        write_dbf(to_write.orderBy(*pk_order) if pk_order else to_write, path)
-    else:
-        raise ValueError(f"unsupported load resource: {res}")
+    with _described(merged.sparkSession, f"etl {job.name}: load write"):
+        _write_file(to_write, res, path, encoding, pk_order, ftp_server is not None)
 
     if ftp_server is not None:
         upload = path
@@ -423,6 +428,52 @@ def load_sink(
     return merged
 
 
+def _write_file(
+    df: DataFrame,
+    res: ResourceSpec,
+    path: str,
+    encoding: str,
+    order_by: list[str] | None,
+    single_file: bool,
+) -> None:
+    """Write ``df`` to ``path`` per the load resource's file type."""
+    if res.f_type == "parquet":
+        write_parquet(df, path)
+    elif res.f_type == "orc":
+        df.write.mode("overwrite").orc(path)
+    elif res.f_type == "xml":
+        (
+            df.write.mode("overwrite")
+            .option("rowTag", res.xml_row_tag)
+            .format("xml")
+            .save(path)
+        )
+    elif res.f_type == "csv":
+        write_csv_resource(
+            df, path, sep=res.txt_separator, quote=res.txt_quote,
+            header=res.txt_header, single_file=single_file, encoding=encoding,
+        )
+    elif res.f_type == "txt":
+        write_fixed_width(
+            df,
+            path,
+            [
+                FWOutColumn(
+                    c.name, c.txt_length, c.txt_align, c.txt_fill_char, c.forced_value
+                )
+                for c in res.columns
+            ],
+            order_by=order_by,
+        )
+    elif res.f_type == "dbf":
+        # I5: one dBase file, streamed driver-side in pk order (always
+        # latin-1, whatever the resolved encoding)
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        write_dbf(df.orderBy(*order_by) if order_by else df, path)
+    else:
+        raise ValueError(f"unsupported load resource: {res}")
+
+
 def _append_ledger(job: JobSpec, rows: DataFrame, pk_col: str, **cols) -> None:
     """Append ``rows`` to the job's run ledger (if it has one) under the
     job's stable ledger id — the one writer for loads and failed runs."""
@@ -430,7 +481,8 @@ def _append_ledger(job: JobSpec, rows: DataFrame, pk_col: str, **cols) -> None:
         ledger = build_ledger(
             rows, ledger_job_id(job.name), pk_col, model=job.load.name, **cols
         )
-        write_ledger(ledger, job.ledger_path)
+        with _described(rows.sparkSession, f"etl {job.name}: ledger append"):
+            write_ledger(ledger, job.ledger_path)
 
 
 def run_job(

@@ -40,7 +40,7 @@ GROUP BY 1
 def q286_value_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     label = value_mapping_expr(
-        li.l_returnflag, [("A", "Accepted"), ("R", "Returned")], "Unknown"
+        "l_returnflag", [("A", "Accepted"), ("R", "Returned")], "Unknown"
     )
     return li.groupBy(label.alias("flag_label")).agg(
         F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("sum_qty")

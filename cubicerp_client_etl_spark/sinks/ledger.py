@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from cubicerp_client_etl_spark.compilers.sqltext import ident, literal
+
 LEDGER_COLUMNS = (
     "job_id",
     "server_id",
@@ -102,23 +104,24 @@ def build_ledger(
 ) -> DataFrame:
     """Project a processed batch into ledger rows (row outcome capture
     without exceptions: level/message come from action columns that the
-    merge/load operators tag, not from try/except-per-row)."""
-    return rows.select(
-        F.lit(job_id).cast("long").alias("job_id"),
-        F.lit(None).cast("long").alias("server_id"),
-        F.lit(None).cast("long").alias("resource_id"),
-        F.lit(model).alias("model"),
-        (F.col(model_id_col) if model_id_col else F.lit(None)).cast("long").alias(
-            "model_id"
-        ),
-        F.col(pk_col).cast("string").alias("pk"),
-        (F.col(level_col) if level_col else F.lit("info")).alias("level"),
-        (F.col(message_col) if message_col else F.lit("Ok")).alias("message"),
-        F.lit(True).alias("check"),
-        (F.col(amount_col) if amount_col else F.lit(None)).cast("double").alias(
-            "amount"
-        ),
-        F.current_timestamp().alias("ts"),
+    merge/load operators tag, not from try/except-per-row). One
+    ``selectExpr``: the projection reaches the JVM as SQL text."""
+
+    def col_or(name: str | None, default: str) -> str:
+        return ident(name) if name else default
+
+    return rows.selectExpr(
+        f"CAST({job_id} AS BIGINT) AS job_id",
+        "CAST(NULL AS BIGINT) AS server_id",
+        "CAST(NULL AS BIGINT) AS resource_id",
+        f"{literal(model)} AS model",
+        f"CAST({col_or(model_id_col, 'NULL')} AS BIGINT) AS model_id",
+        f"CAST({ident(pk_col)} AS STRING) AS pk",
+        f"{col_or(level_col, literal('info'))} AS level",
+        f"{col_or(message_col, literal('Ok'))} AS message",
+        "true AS `check`",
+        f"CAST({col_or(amount_col, 'NULL')} AS DOUBLE) AS amount",
+        "current_timestamp() AS ts",
     )
 
 

@@ -1,7 +1,7 @@
 """File sinks (SURVEY I3, I4, I8).
 
-Fixed-width rendering composes ``functions.fw_render`` per column into
-one ``concat`` expression (H1/H11; reference semantics at
+Fixed-width rendering composes ``functions.fw_render_sql`` per column
+into the SQL text of one ``concat`` expression (H1/H11; reference semantics at
 cubicerpetl/cubicerpetl.py:548-586 including forced values and the
 rjust-keeps-tail truncation). Header/footer emission (from the first and
 last body row, :421-425,433-437) forces single-file output — the writer
@@ -15,7 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cubicerp_client_etl_spark.functions import fw_render
+from cubicerp_client_etl_spark.compilers.sqltext import ident, literal
+from cubicerp_client_etl_spark.functions import fw_render_sql
 
 
 @dataclass(frozen=True)
@@ -31,18 +32,24 @@ class FWOutColumn:
     forced_value: str | None = None  # B4: overrides row data at write
 
 
-def _fixed_width_line(columns: list[FWOutColumn]) -> Column:
-    """One ``concat`` of every column's ``fw_render``: the rendered line."""
-    pieces: list[Column] = []
-    for c in columns:
-        src = F.lit(c.forced_value) if c.forced_value is not None else F.col(c.name)
-        pieces.append(fw_render(src, c.length, c.align, c.fill))
-    return F.concat(*pieces)
+def _fixed_width_line(columns: list[FWOutColumn]) -> str:
+    """SQL text of one ``concat`` of every column's ``fw_render_sql``:
+    the rendered line."""
+    pieces = [
+        fw_render_sql(
+            literal(c.forced_value) if c.forced_value is not None else ident(c.name),
+            c.length,
+            c.align,
+            c.fill,
+        )
+        for c in columns
+    ]
+    return f"concat({', '.join(pieces)})"
 
 
 def render_fixed_width_lines(df: DataFrame, columns: list[FWOutColumn]) -> DataFrame:
     """Project df → single-column ('value') DataFrame of rendered lines."""
-    return df.select(_fixed_width_line(columns).alias("value"))
+    return df.selectExpr(f"{_fixed_width_line(columns)} AS value")
 
 
 def write_fixed_width(
@@ -56,7 +63,8 @@ def write_fixed_width(
     """Render + write. With header/footer (or an explicit order) output
     is a single ordered file, matching the reference's sequential writer;
     otherwise each partition writes independently. The output is UTF-8:
-    Spark's text writer writes no other encoding."""
+    Spark's text writer writes no other encoding. Every projection
+    reaches the JVM as SQL text (``selectExpr``)."""
     if header_line is None and footer_line is None and not order_by:
         render_fixed_width_lines(df, columns).write.mode("overwrite").text(path)
         return
@@ -67,32 +75,23 @@ def write_fixed_width(
     # file is one task either way; repartition(1) + a partition-local
     # sort skips the range-partition sampling job a global orderBy adds.
     spark = df.sparkSession
-    keys = list(order_by or [])
-    body = df.select(
-        _fixed_width_line(columns).alias("value"),
-        F.lit(1).alias("__ord"),
-        *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)],
+    keys = [f"__k{i}" for i in range(len(order_by or []))]
+    out = df.selectExpr(
+        f"{_fixed_width_line(columns)} AS value",
+        "1 AS __ord",
+        *[f"{ident(k)} AS {alias}" for k, alias in zip(order_by or [], keys)],
     )
-    parts = [body]
-    null_keys = [F.lit(None).alias(f"__k{i}") for i in range(len(keys))]
-    if header_line is not None:
-        parts.append(
-            spark.range(1).select(
-                F.lit(header_line).alias("value"), F.lit(0).alias("__ord"), *null_keys
+    null_keys = [f"NULL AS {alias}" for alias in keys]
+    for line, ord_ in ((header_line, 0), (footer_line, 2)):
+        if line is not None:
+            out = out.unionByName(
+                spark.range(1).selectExpr(
+                    f"{literal(line)} AS value", f"{ord_} AS __ord", *null_keys
+                )
             )
-        )
-    if footer_line is not None:
-        parts.append(
-            spark.range(1).select(
-                F.lit(footer_line).alias("value"), F.lit(2).alias("__ord"), *null_keys
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     (
         out.repartition(1)
-        .sortWithinPartitions("__ord", *[f"__k{i}" for i in range(len(keys))])
+        .sortWithinPartitions("__ord", *keys)
         .select("value")
         .write.mode("overwrite")
         .text(path)

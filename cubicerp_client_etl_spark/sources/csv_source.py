@@ -12,16 +12,18 @@ parses each line once with ``csv_columns``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from cubicerp_client_etl_spark.compilers.sqltext import ident, literal
 
 
-def csv_columns(line: Column, names: list[str], sep: str, quote: str) -> Column:
-    """Parse one CSV line into a struct of ``names`` via one from_csv
-    (JVM-side uniVocity parser — handles quoting/escapes, unlike a
-    naive split)."""
-    schema = ", ".join(f"`{n}` string" for n in names)
-    return F.from_csv(line, F.lit(schema), {"sep": sep, "quote": quote})
+def csv_columns(line: str, names: list[str], sep: str, quote: str) -> str:
+    """SQL text parsing the SQL ``line`` expression into a struct of
+    ``names`` via one from_csv (JVM-side uniVocity parser — handles
+    quoting/escapes, unlike a naive split)."""
+    schema = ", ".join(f"{ident(n)} string" for n in names)
+    options = f"map('quote', {literal(quote)}, 'sep', {literal(sep)})"
+    return f"from_csv({line}, {literal(schema)}, {options})"
 
 
 def read_csv_resource(

@@ -15,8 +15,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from cubicerp_client_etl_spark.compilers.sqltext import ident
 
 
 @dataclass(frozen=True)
@@ -30,8 +29,11 @@ class FWColumn:
     length: int
 
 
-def fixed_width_columns(line: Column, cols: list[FWColumn]) -> Column:
-    """Slice one line into a struct of the declared, space-trimmed fields."""
-    return F.struct(
-        *[F.trim(F.substring(line, c.position, c.length)).alias(c.name) for c in cols]
+def fixed_width_columns(line: str, cols: list[FWColumn]) -> str:
+    """SQL text slicing the SQL ``line`` expression into a struct of the
+    declared, space-trimmed fields."""
+    fields = ", ".join(
+        f"trim(substring({line}, {c.position}, {c.length})) AS {ident(c.name)}"
+        for c in cols
     )
+    return f"struct({fields})"

@@ -13,13 +13,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cubicerp_client_etl_spark.sources.lines import decoded_sql
+
 
 def read_inline_payload(
     spark: SparkSession, payload_b64: str, encoding: str = "UTF-8"
 ) -> DataFrame:
-    """base64 text payload → one ``(file='<inline>', text)`` row."""
+    """base64 text payload → one ``(file='<inline>', text)`` row, decoded
+    as ``read_texts`` decodes a file's bytes (``decoded_sql``: an invalid
+    UTF-8 byte reads as U+FFFD in both)."""
     # range + lit keeps the one-row frame in the JVM: no Python-pickled
-    # scan for the payload
+    # scan for the payload; the payload stays one literal, so multi-MB
+    # text never goes through the SQL parser
     df = spark.range(0, 1, 1, 1).select(F.lit(payload_b64).alias("b64"))
-    text = F.decode(F.unbase64(F.col("b64")), encoding)
-    return df.select(F.lit("<inline>").alias("file"), text.alias("text"))
+    return df.selectExpr(
+        "'<inline>' AS file", f"{decoded_sql('unbase64(b64)', encoding)} AS text"
+    )

@@ -75,6 +75,32 @@ def test_pipeline_slice_end_to_end(spark, tmp_path):
     }
 
 
+def test_job_actions_carry_job_descriptions(spark, tmp_path, monkeypatch):
+    """The load write and the ledger append run under a description that
+    names the job and the action, and the caller's description is back
+    afterwards."""
+    sc = spark.sparkContext
+    seen = []
+    set_description = type(sc).setJobDescription
+
+    def record(self, value):
+        seen.append(value)
+        set_description(self, value)
+
+    monkeypatch.setattr(type(sc), "setJobDescription", record)
+    sc.setJobDescription("caller")
+    try:
+        run_job(spark, _job(tmp_path)).unpersist()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        set_description(sc, None)
+    assert seen == [
+        "caller",
+        "etl slice71: load write", "caller",
+        "etl slice71: ledger append", "caller",
+    ]
+
+
 @pytest.mark.parametrize(
     "mode,expect",
     [

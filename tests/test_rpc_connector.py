@@ -517,6 +517,61 @@ def test_declared_rpc_job_lifecycle_end_to_end(spark, tmp_path):
         srv.shutdown()
 
 
+def test_declared_rpc_job_labels_its_ship_and_ledger(spark, tmp_path, monkeypatch):
+    """The RPC load's shipping and its ledger append run under job
+    descriptions naming the job, and the caller's description is back
+    afterwards."""
+    from cubicerp_client_etl_spark.plans.interpreter import run_job
+    from cubicerp_client_etl_spark.plans.spec import (
+        ColumnSpec,
+        FieldSpec,
+        JobSpec,
+        ResourceSpec,
+        ServerSpec,
+        TransformSpec,
+    )
+
+    sc = spark.sparkContext
+    seen = []
+    set_description = type(sc).setJobDescription
+
+    def record(self, value):
+        seen.append(value)
+        set_description(self, value)
+
+    srv, state, port = _start_server()
+    try:
+        state.store[10] = {"id": 10, "name": "src10", "amount": 1.0, "active": True}
+        server = ServerSpec(name="erp", etl_type="rpc", fs_host="127.0.0.1",
+                            fs_port=port, login="admin", password="secret")
+        job = JobSpec(
+            name="rpc_labels",
+            extract=ResourceSpec(
+                name="in", etl_type="rpc", rpc_model="res.partner",
+                rpc_schema="id long, name string", server=server,
+                columns=(ColumnSpec("id"), ColumnSpec("name")),
+            ),
+            transform=TransformSpec(
+                name="t",
+                fields=(FieldSpec("pk", value="CAST(id AS STRING)"),
+                        FieldSpec("name", value="UPPER(name)")),
+            ),
+            load=ResourceSpec(name="out", etl_type="rpc", rpc_model="res.partner",
+                              server=server),
+            pk_field="pk",
+            ledger_path=str(tmp_path / "ledger"),
+        )
+        before = sc.getLocalProperty("spark.job.description")
+        monkeypatch.setattr(type(sc), "setJobDescription", record)
+        run_job(spark, job).unpersist()
+        assert sc.getLocalProperty("spark.job.description") == before
+    finally:
+        srv.shutdown()
+    assert seen == [
+        "etl rpc_labels: rpc ship", before, "etl rpc_labels: ledger append", before
+    ]
+
+
 class _JobServer(_OdooLikeServer):
     """The loopback server plus the ``etl.job`` registry: the sweep's
     search_read honors its domain, ``action_start``/``action_done``
