@@ -15,16 +15,20 @@ to get wrong. The package's one cron sweep is ``run_ready_jobs``
 (ready→running→done|error over the live transport, per-job isolation,
 loopback-server-tested). Every ledger row, from a load or a failed
 run, goes through ``sinks.ledger.build_ledger`` under one stable job id.
+Every csv/txt file, inline payload and load obeys the rules of the one
+text codec (``sources.lines.check_text_resource``), checked while the
+plan is built: files and payloads are read by
+``sources.lines.read_text_resource``, a plain csv file by
+``spark.read.csv``, and the spec's ``ColumnSpec``s go to the codec and
+the fixed-width writer as they are.
 """
 
 from __future__ import annotations
 
-import codecs
 import logging
 import os
 import traceback
 from contextlib import contextmanager
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,19 +48,11 @@ from cubicerp_client_etl_spark.sinks.ledger import (
 )
 from cubicerp_client_etl_spark.sinks.dbf import write_dbf
 from cubicerp_client_etl_spark.sinks.writers import (
-    FWOutColumn,
     write_csv_resource,
     write_fixed_width,
     write_parquet,
 )
-from cubicerp_client_etl_spark.sources.csv_source import csv_columns, read_csv_resource
-from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, fixed_width_columns
-from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import (
-    DECODE_CHARSETS,
-    parse_texts,
-    read_texts,
-)
+from cubicerp_client_etl_spark.sources.lines import check_text_resource, read_text_resource
 from cubicerp_client_etl_spark.checkpointing import pin_eager
 
 _log = logging.getLogger(__name__)
@@ -70,51 +66,25 @@ def _ftp_server(res: ResourceSpec):
     return None
 
 
-def _resolve_file(res: ResourceSpec, run_date: str) -> tuple[str, str]:
+def _resolve_file(
+    spark: SparkSession, res: ResourceSpec, run_date: str, load: bool = False
+) -> tuple[str, str]:
     """``(path, encoding)`` of a file resource, for extract and load
     alike. The path is ``f_filename`` date-rendered (H4/H5) and, on a
     'file' server, joined under its ``fs_path`` (the reference's
     fs_path/filename, SURVEY A7; an absolute f_filename stays as is).
-    The encoding is the resource's, else the server's, else UTF-8, and
-    comes back under Spark's charset name (``_spark_charset``)."""
+    The encoding is the resource's, else the server's, else UTF-8; a
+    csv/txt resource's comes back under Spark's charset name once the
+    text codec's rules hold for it (``check_text_resource``), so a
+    resource that breaks them raises before any Spark job or merge."""
     path = render_date_template(res.f_filename, run_date) if res.f_filename else ""
     srv = res.server
     if path and srv is not None and srv.etl_type == "fs" and srv.fs_protocol == "file":
         path = os.path.join(srv.fs_path, path)
     encoding = res.encoding or (srv.encoding if srv is not None else "") or "UTF-8"
-    return path, _spark_charset(encoding)
-
-
-def _spark_charset(encoding: str) -> str:
-    """A declared encoding under Spark's name for it: the reference
-    takes Python codec names ('utf8', 'latin1', 'ascii'), and Spark's
-    ``decode`` accepts only its own spellings. A name outside that set
-    passes through unchanged: the csv source and writer, like ``decode``,
-    take such a (Java) charset only under ``spark.sql.legacy.javaCharsets``."""
-    try:
-        canonical = codecs.lookup(encoding).name
-    except LookupError:
-        return encoding
-    return DECODE_CHARSETS.get(canonical, encoding)
-
-
-_JAVA_CHARSETS = "spark.sql.legacy.javaCharsets"
-
-
-def _decodable(spark: SparkSession, encoding: str) -> str:
-    """``encoding`` if Spark's ``decode`` takes it — a text extract
-    (header/footer csv, txt, inline payload) decodes its bytes with it —
-    else a ValueError, raised while the plan is built rather than from
-    the first Spark job. ``decode`` takes the ``DECODE_CHARSETS`` names,
-    or any Java charset under ``spark.sql.legacy.javaCharsets``."""
-    charsets = DECODE_CHARSETS.values()
-    if encoding in charsets or spark.conf.get(_JAVA_CHARSETS) == "true":
-        return encoding
-    raise ValueError(
-        f"text extract encoding {encoding!r} is not one Spark's decode "
-        f"accepts: {', '.join(charsets)} (or any Java charset with "
-        f"{_JAVA_CHARSETS}=true)"
-    )
+    if res.f_type in ("csv", "txt"):
+        encoding = check_text_resource(spark, res, encoding, load)
+    return path, encoding
 
 
 @contextmanager
@@ -166,7 +136,7 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     """Resource → DataFrame (SURVEY A3/A4/A6/A9 dispatch, date-templated
     paths per H4/H5; A7 FTP staging; A1 begin/end hooks)."""
     res = job.extract
-    path, encoding = _resolve_file(res, job.run_date)
+    path, encoding = _resolve_file(spark, res, job.run_date)
     ftp_server = _ftp_server(res)
     if ftp_server is not None and res.f_filename:
         # A7: stage the remote file into the local spool; everything
@@ -189,12 +159,9 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
             schema=res.rpc_schema or None,
         )
     elif job.job_type == "online" and job.input_payload_b64 is not None:
-        # A6: the inline payload is one more (file, text) frame for the
-        # file codecs, header/footer included
-        payload = read_inline_payload(
-            spark, job.input_payload_b64, _decodable(spark, encoding)
-        )
-        df = _parse_text(res, payload)
+        # A6: the inline payload goes through the file codec itself,
+        # header/footer included
+        df = read_text_resource(spark, res, encoding, payload_b64=job.input_payload_b64)
     elif res.etl_type == "db" and res.sql_query:
         # A1 re-owned: the reference ships this SQL to the source DB
         # wrapped in optional begin/end statements with a settle delay
@@ -220,16 +187,13 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     elif res.f_type == "xml":
         df = spark.read.format("xml").option("rowTag", res.xml_row_tag).load(path)
     elif res.f_type == "csv" and not (res.header_columns or res.footer_columns):
-        df = read_csv_resource(
-            spark,
-            path,
-            [c.name for c in res.columns],
-            sep=res.txt_separator,
-            quote=res.txt_quote,
-            encoding=encoding,
-        )
+        # plain csv needs no line order: the splittable native source
+        df = spark.read.csv(
+            path, sep=res.txt_separator, quote=res.txt_quote, encoding=encoding,
+            header=False,
+        ).toDF(*[c.name for c in res.columns])
     elif res.f_type in ("csv", "txt"):
-        df = _parse_text(res, read_texts(spark, path, _decodable(spark, encoding)))
+        df = read_text_resource(spark, res, encoding, path=path)
     elif res.f_type == "dbf":
         from cubicerp_client_etl_spark.sources.dbf import read_dbf
 
@@ -256,27 +220,6 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
         ]
         df = df.selectExpr(*kept, *added)
     return df
-
-
-def _fw_in(c) -> FWColumn:
-    return FWColumn(c.name, c.txt_position, c.txt_length)
-
-
-def _parse_text(res: ResourceSpec, texts: DataFrame) -> DataFrame:
-    """``(file, text)`` rows (files' or an inline payload's) → body rows
-    per the resource's csv/txt physics and header/footer columns."""
-    if res.f_type == "csv":
-        to_col = lambda c: c.name  # noqa: E731
-        parse = partial(csv_columns, sep=res.txt_separator, quote=res.txt_quote)
-    elif res.f_type == "txt":
-        to_col, parse = _fw_in, fixed_width_columns
-    else:
-        raise ValueError(f"line payload needs csv/txt physics, got {res.f_type}")
-    header, footer = (
-        [to_col(c) for c in cols] if cols else None
-        for cols in (res.header_columns, res.footer_columns)
-    )
-    return parse_texts(texts, parse, [to_col(c) for c in res.columns], header, footer)
 
 
 # ------------------------------------------------------------------- transform
@@ -328,14 +271,7 @@ def load_sink(
     the merged frame (with the per-row action tag) for inspection."""
     res = job.load
     mode = job.transform.reprocess
-    path, encoding = _resolve_file(res, job.run_date)
-    if res.f_type == "txt" and encoding != "UTF-8":
-        # Spark's text writer always writes UTF-8: refuse before the
-        # merge runs rather than write a file in the wrong encoding
-        raise ValueError(
-            f"fixed-width load cannot write encoding {encoding!r}: "
-            "the text writer only writes UTF-8"
-        )
+    path, encoding = _resolve_file(df.sparkSession, res, job.run_date, load=True)
     # C4 shape: the target's recovered server ids (model_id) are load
     # METADATA, not merge payload — pull the (pk -> model_id) map out
     # before the merge (staged rows never carry one) and re-attach it
@@ -454,17 +390,7 @@ def _write_file(
             header=res.txt_header, single_file=single_file, encoding=encoding,
         )
     elif res.f_type == "txt":
-        write_fixed_width(
-            df,
-            path,
-            [
-                FWOutColumn(
-                    c.name, c.txt_length, c.txt_align, c.txt_fill_char, c.forced_value
-                )
-                for c in res.columns
-            ],
-            order_by=order_by,
-        )
+        write_fixed_width(df, path, list(res.columns), order_by=order_by)
     elif res.f_type == "dbf":
         # I5: one dBase file, streamed driver-side in pk order (always
         # latin-1, whatever the resolved encoding)

@@ -57,6 +57,8 @@ def get_spark(
         # Arrow for the Pandas-UDF slow paths (multimodal, as-of join).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # no [Stage 0:>  ] bars in logs and test output
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if master:
         builder = builder.master(master)

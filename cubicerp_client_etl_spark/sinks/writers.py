@@ -1,16 +1,19 @@
 """File sinks (SURVEY I3, I4, I8).
 
-Fixed-width rendering composes ``functions.fw_render_sql`` per column
-into the SQL text of one ``concat`` expression (H1/H11; reference semantics at
+The fixed-width writer takes the spec's own ``ColumnSpec``s: each
+column's ``txt_length``, ``txt_align``, ``txt_fill_char`` and
+``forced_value`` become one ``functions.fw_render_sql``, and the line is
+the SQL text of one ``concat`` of them (H1/H11; reference semantics at
 cubicerpetl/cubicerpetl.py:548-586 including forced values and the
-rjust-keeps-tail truncation). Header/footer emission (from the first and
-last body row, :421-425,433-437) forces single-file output — the writer
-goes to one partition only in that mode; plain writes stay fully parallel.
+rjust-keeps-tail truncation). An ordered write is one file in key order,
+matching the reference's sequential writer; plain writes stay fully
+parallel. The reference's header and footer lines, built from the first
+and last row (:421-425,433-437), are not written.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,36 +21,26 @@ from pyspark.sql import functions as F
 from cubicerp_client_etl_spark.compilers.sqltext import ident, literal
 from cubicerp_client_etl_spark.functions import fw_render_sql
 
-
-@dataclass(frozen=True)
-class FWOutColumn:
-    """Writer-side column physics (etl.resource.column, SURVEY §1.2):
-    source column or forced constant, rendered at ``length`` with
-    ``align`` ∈ {ljust, rjust, center} and ``fill``."""
-
-    name: str
-    length: int
-    align: str = "ljust"
-    fill: str = " "
-    forced_value: str | None = None  # B4: overrides row data at write
+if TYPE_CHECKING:  # plans imports this module: no runtime import back
+    from cubicerp_client_etl_spark.plans.spec import ColumnSpec
 
 
-def _fixed_width_line(columns: list[FWOutColumn]) -> str:
+def _fixed_width_line(columns: list[ColumnSpec]) -> str:
     """SQL text of one ``concat`` of every column's ``fw_render_sql``:
     the rendered line."""
     pieces = [
         fw_render_sql(
             literal(c.forced_value) if c.forced_value is not None else ident(c.name),
-            c.length,
-            c.align,
-            c.fill,
+            c.txt_length,
+            c.txt_align,
+            c.txt_fill_char,
         )
         for c in columns
     ]
     return f"concat({', '.join(pieces)})"
 
 
-def render_fixed_width_lines(df: DataFrame, columns: list[FWOutColumn]) -> DataFrame:
+def render_fixed_width_lines(df: DataFrame, columns: list[ColumnSpec]) -> DataFrame:
     """Project df → single-column ('value') DataFrame of rendered lines."""
     return df.selectExpr(f"{_fixed_width_line(columns)} AS value")
 
@@ -55,43 +48,28 @@ def render_fixed_width_lines(df: DataFrame, columns: list[FWOutColumn]) -> DataF
 def write_fixed_width(
     df: DataFrame,
     path: str,
-    columns: list[FWOutColumn],
+    columns: list[ColumnSpec],
     order_by: list[str] | None = None,
-    header_line: str | None = None,
-    footer_line: str | None = None,
 ) -> None:
-    """Render + write. With header/footer (or an explicit order) output
-    is a single ordered file, matching the reference's sequential writer;
-    otherwise each partition writes independently. The output is UTF-8:
-    Spark's text writer writes no other encoding. Every projection
-    reaches the JVM as SQL text (``selectExpr``)."""
-    if header_line is None and footer_line is None and not order_by:
+    """Render + write. With ``order_by`` the output is a single file in
+    key order, matching the reference's sequential writer; otherwise
+    each partition writes independently. The output is UTF-8: Spark's
+    text writer writes no other encoding. Every projection reaches the
+    JVM as SQL text (``selectExpr``)."""
+    if not order_by:
         render_fixed_width_lines(df, columns).write.mode("overwrite").text(path)
         return
-
-    # Single ordered file: one partition sorted on (__ord, keys) — union
-    # partition order is NOT a contract (AQE may re-plan), so the
-    # header/body/footer sequence is encoded in a sort key instead. The
-    # file is one task either way; repartition(1) + a partition-local
+    # The file is one task either way; repartition(1) + a partition-local
     # sort skips the range-partition sampling job a global orderBy adds.
-    spark = df.sparkSession
-    keys = [f"__k{i}" for i in range(len(order_by or []))]
+    # The keys are aliased so none can collide with 'value'.
+    keys = [f"__k{i}" for i in range(len(order_by))]
     out = df.selectExpr(
         f"{_fixed_width_line(columns)} AS value",
-        "1 AS __ord",
-        *[f"{ident(k)} AS {alias}" for k, alias in zip(order_by or [], keys)],
+        *[f"{ident(k)} AS {alias}" for k, alias in zip(order_by, keys)],
     )
-    null_keys = [f"NULL AS {alias}" for alias in keys]
-    for line, ord_ in ((header_line, 0), (footer_line, 2)):
-        if line is not None:
-            out = out.unionByName(
-                spark.range(1).selectExpr(
-                    f"{literal(line)} AS value", f"{ord_} AS __ord", *null_keys
-                )
-            )
     (
         out.repartition(1)
-        .sortWithinPartitions("__ord", *keys)
+        .sortWithinPartitions(*keys)
         .select("value")
         .write.mode("overwrite")
         .text(path)

@@ -19,28 +19,23 @@ from cubicerp_client_etl_spark.plans.spec import (
     TransformSpec,
 )
 from cubicerp_client_etl_spark.sinks.writers import (
-    FWOutColumn,
     render_fixed_width_lines,
     write_fixed_width,
 )
-from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import read_texts, split_lines
+from cubicerp_client_etl_spark.sources.lines import read_text_resource
 
 NATION_ROWS = [(0, "ALGERIA", 0), (1, "ARGENTINA", 1), (24, "UNITED STATES", 1)]
 
 # FIXTURES.md B2 layout: rjust-0 key, ljust name, rjust-0 regionkey,
-# centered forced tag with '-' fill
-FW_OUT = [
-    FWOutColumn("n_nationkey", 4, "rjust", "0"),
-    FWOutColumn("n_name", 20, "ljust", " "),
-    FWOutColumn("n_regionkey", 2, "rjust", "0"),
-    FWOutColumn("forced_tag", 3, "center", "-", forced_value="X"),
-]
-FW_IN = (
-    ColumnSpec("n_nationkey", txt_position=1, txt_length=4),
+# centered forced tag with '-' fill; one spec writes and reads the file
+FW = (
+    ColumnSpec("n_nationkey", txt_position=1, txt_length=4, txt_align="rjust",
+               txt_fill_char="0"),
     ColumnSpec("n_name", txt_position=5, txt_length=20),
-    ColumnSpec("n_regionkey", txt_position=25, txt_length=2),
-    ColumnSpec("forced_tag", txt_position=27, txt_length=3),
+    ColumnSpec("n_regionkey", txt_position=25, txt_length=2, txt_align="rjust",
+               txt_fill_char="0"),
+    ColumnSpec("forced_tag", txt_position=27, txt_length=3, txt_align="center",
+               txt_fill_char="-", forced_value="X"),
 )
 
 
@@ -65,7 +60,7 @@ def nation_df(spark):
 def test_fixed_width_golden_bytes(nation_df):
     lines = [
         r["value"]
-        for r in render_fixed_width_lines(nation_df, FW_OUT).collect()
+        for r in render_fixed_width_lines(nation_df, FW).collect()
     ]
     # golden: matches python f"{key:0>4}{name:<20}{rk:0>2}{'X':-^3}"
     assert lines[0] == "0000ALGERIA             00-X-"
@@ -104,19 +99,15 @@ def test_fw_render_matches_python_semantics(spark):
 
 
 def test_fixed_width_roundtrip_with_header_footer(spark, nation_df, tmp_path):
+    """The rendered body, between a header and a footer line of the
+    test's own, reads back through the same spec."""
     out = str(tmp_path / "fw")
-    write_fixed_width(
-        nation_df,
-        out,
-        FW_OUT,
-        order_by=["n_nationkey"],
-        header_line="H2024010599",
-        footer_line="F0000000003",
-    )
+    write_fixed_width(nation_df, out, FW, order_by=["n_nationkey"])
     files = glob.glob(f"{out}/part-*")
-    assert len(files) == 1, "header/footer mode must emit a single file"
-    raw = open(files[0]).read().rstrip("\n").split("\n")
-    assert raw[0] == "H2024010599" and raw[-1] == "F0000000003"
+    assert len(files) == 1, "an ordered write must emit a single file"
+    body = open(files[0]).read()
+    framed = tmp_path / "framed.txt"
+    framed.write_text("H2024010599\n" + body + "F0000000003\n")
 
     hdr = (
         ColumnSpec("h_tag", txt_position=1, txt_length=1),
@@ -130,8 +121,8 @@ def test_fixed_width_roundtrip_with_header_footer(spark, nation_df, tmp_path):
     res = ResourceSpec(
         name="nation_fw",
         f_type="txt",
-        f_filename=out,
-        columns=FW_IN,
+        f_filename=str(framed),
+        columns=FW,
         header_columns=hdr,
         footer_columns=ftr,
     )
@@ -148,8 +139,7 @@ def test_fixed_width_roundtrip_with_header_footer(spark, nation_df, tmp_path):
 
 def test_fixed_width_ordered_write_keeps_key_order(spark, tmp_path):
     """About 2k rows spread over 4 shuffled partitions, written with
-    ``order_by``, a header and a footer: one part file, header first,
-    footer last, body lines in key order."""
+    ``order_by``: one part file, lines in key order."""
     n = 2000
     df = (
         spark.range(n)
@@ -162,16 +152,12 @@ def test_fixed_width_ordered_write_keeps_key_order(spark, tmp_path):
     )
     assert df.rdd.getNumPartitions() >= 4
     out = str(tmp_path / "fw_ordered")
-    write_fixed_width(
-        df, out, FW_OUT, order_by=["n_nationkey"],
-        header_line="H2024010599", footer_line="F0000002000",
-    )
+    write_fixed_width(df, out, FW, order_by=["n_nationkey"])
     files = glob.glob(f"{out}/part-*")
     assert len(files) == 1
     raw = open(files[0]).read().rstrip("\n").split("\n")
-    assert len(raw) == n + 2
-    assert raw[0] == "H2024010599" and raw[-1] == "F0000002000"
-    keys = [int(line[:4]) for line in raw[1:-1]]
+    assert len(raw) == n
+    keys = [int(line[:4]) for line in raw]
     assert keys == list(range(n))
 
 
@@ -207,19 +193,21 @@ def test_inline_base64_equals_file_parse(spark, tmp_path):
     p.write_text(content)
     payload = base64.b64encode(content.encode()).decode()
 
-    def lines(texts):
-        return sorted(
-            map(tuple, texts.select(F.posexplode(split_lines(F.col("text")))).collect())
-        )
+    res = ResourceSpec(name="plain", f_type="csv", txt_separator=";",
+                       columns=(ColumnSpec("k"), ColumnSpec("v")))
 
-    via_file = lines(read_texts(spark, str(p)))
-    assert via_file == [(0, "a;1"), (1, "b;2"), (2, "c;3")]
-    assert lines(read_inline_payload(spark, payload)) == via_file
+    def lines(path="", payload=None):
+        df = read_text_resource(spark, res, "UTF-8", path=path, payload_b64=payload)
+        return sorted(tuple(r) for r in df.select("_line_no", "k", "v").collect())
+
+    via_file = lines(path=str(p))
+    assert via_file == [(0, "a", "1"), (1, "b", "2"), (2, "c", "3")]
+    assert lines(payload=payload) == via_file
     # an empty file and an empty payload both have no lines
     empty = tmp_path / "empty.csv"
     empty.write_text("")
-    assert lines(read_texts(spark, str(empty))) == []
-    assert lines(read_inline_payload(spark, "")) == []
+    assert lines(path=str(empty)) == []
+    assert lines(payload="") == []
 
 
 def test_empty_payload_with_header_footer_has_no_rows(spark):

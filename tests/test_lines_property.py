@@ -3,7 +3,9 @@ plain-Python model of the reference's in-memory slicing
 (cubicerpetl.py:228-270: header = line 0, footer = last line, body =
 the lines between, each parsed with its own column list) for csv and
 fixed-width txt, with or without header and footer, over several
-files of 0-3 lines with LF or CRLF line ends and trailing newlines."""
+files of 0-3 lines (blank ones among them) with LF or CRLF line ends and
+trailing newlines. An empty csv body line is no row (``csv.DictReader``
+skips it); a txt line is sliced whatever it holds."""
 
 from __future__ import annotations
 
@@ -14,13 +16,12 @@ import tempfile
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from cubicerp_client_etl_spark.sources.csv_source import csv_columns
-from cubicerp_client_etl_spark.sources.fixed_width import FWColumn, fixed_width_columns
-from cubicerp_client_etl_spark.sources.lines import parse_texts, read_texts
+from cubicerp_client_etl_spark.plans.spec import ColumnSpec, ResourceSpec
+from cubicerp_client_etl_spark.sources.lines import read_text_resource
 
 BODY, HEADER, FOOTER = ["a", "b"], ["h"], ["f", "g"]
 
-line = st.text(alphabet="xy;1 é", max_size=6)
+line = st.one_of(st.just(""), st.text(alphabet="xy;1 é", max_size=6))
 text_file = st.tuples(
     st.lists(line, max_size=3),
     st.sampled_from(["\n", "\r\n"]),
@@ -37,18 +38,21 @@ def model_lines(text: str) -> list[str]:
 
 def csv_model(value: str, names: list[str]) -> tuple:
     # from_csv: an empty field is NULL, missing fields are NULL, extra
-    # fields are dropped, an empty line is a row of NULLs
+    # fields are dropped; an empty header/footer line is a row of NULLs
     fields = value.split(";") if value else []
     fields += [""] * len(names)
     return tuple(f or None for f in fields[: len(names)])
 
 
-def fw_spec(names: list[str]) -> list[FWColumn]:
-    return [FWColumn(n, 1 + 2 * i, 2) for i, n in enumerate(names)]
+def fw_spec(names: list[str]) -> tuple[ColumnSpec, ...]:
+    return tuple(ColumnSpec(n, txt_position=1 + 2 * i, txt_length=2)
+                 for i, n in enumerate(names))
 
 
 def fw_model(value: str, names: list[str]) -> tuple:
-    return tuple(value[c.position - 1 :][: c.length].strip(" ") for c in fw_spec(names))
+    return tuple(
+        value[c.txt_position - 1 :][: c.txt_length].strip(" ") for c in fw_spec(names)
+    )
 
 
 def model(files: list[str], f_type: str, header: bool, footer: bool) -> list[tuple]:
@@ -58,6 +62,8 @@ def model(files: list[str], f_type: str, header: bool, footer: bool) -> list[tup
         lines = model_lines(text)
         first, last = int(header), len(lines) - int(footer)
         for no in range(first, last):
+            if f_type == "csv" and lines[no] == "":
+                continue
             row = (name, no, *parse(lines[no], BODY))
             if header:
                 row += parse(lines[0], HEADER)
@@ -87,17 +93,15 @@ def test_text_extract_matches_reference_slicing(
             with open(os.path.join(d, name), "wb") as fh:
                 fh.write(c.encode("utf-8"))
         if f_type == "csv":
-            parse = lambda line, cols: csv_columns(line, cols, ";", '"')  # noqa: E731
-            to_cols = list
+            to_cols = lambda names: tuple(map(ColumnSpec, names))  # noqa: E731
         else:
-            parse, to_cols = fixed_width_columns, fw_spec
-        df = parse_texts(
-            read_texts(spark, d),
-            parse,
-            to_cols(BODY),
-            to_cols(HEADER) if header else None,
-            to_cols(FOOTER) if footer else None,
+            to_cols = fw_spec
+        res = ResourceSpec(
+            name="prop", f_type=f_type, txt_separator=";", columns=to_cols(BODY),
+            header_columns=to_cols(HEADER) if header else None,
+            footer_columns=to_cols(FOOTER) if footer else None,
         )
+        df = read_text_resource(spark, res, "UTF-8", path=d)
         expected_cols = ["file", "_line_no", *BODY]
         expected_cols += HEADER if header else []
         expected_cols += FOOTER if footer else []

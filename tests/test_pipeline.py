@@ -5,6 +5,7 @@ merge-mode matrix through the spec interpreter (§5.2.6)."""
 from __future__ import annotations
 
 import base64
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -163,13 +164,18 @@ def test_online_job_inline_payload(spark, tmp_path):
     assert rows == {(10, "X"), (20, "Y"), (30, "NONE")}
 
 
-@pytest.mark.parametrize("f_type", ["csv", "txt"])
+@pytest.mark.parametrize("f_type", ["csv", "txt", "plain_csv"])
 def test_online_payload_parses_like_file(spark, tmp_path, f_type):
     """A6: an inline payload goes through the file codec itself, so a
     resource with header and footer columns gives the same body rows,
     header/footer fields broadcast, whether its bytes arrive as a file
-    or as an online job's base64 payload."""
-    if f_type == "csv":
+    or as an online job's base64 payload. A plain csv file (read by
+    ``spark.read.csv``) and its payload both skip a blank line."""
+    header = footer = ()
+    if f_type == "plain_csv":
+        content = "1;a;x\n\n2;b\n3;c;z;extra\n"
+        body = tuple(ColumnSpec(n) for n in ("k", "s", "t"))
+    elif f_type == "csv":
         content = "H;B7\n01;a\n02;b\nT;2\n"
         cols = lambda *names: tuple(ColumnSpec(n) for n in names)  # noqa: E731
         body, header, footer = cols("k", "s"), cols("hrec", "batch"), cols("trec", "n")
@@ -186,8 +192,9 @@ def test_online_payload_parses_like_file(spark, tmp_path, f_type):
 
     def rows(f_filename="", payload=None):
         res = ResourceSpec(
-            name="in", f_type=f_type, txt_separator=";", columns=body,
-            header_columns=header, footer_columns=footer, f_filename=f_filename,
+            name="in", f_type=f_type.removeprefix("plain_"), txt_separator=";",
+            columns=body, header_columns=header, footer_columns=footer,
+            f_filename=f_filename,
         )
         job = JobSpec(
             name="hf", extract=res, transform=TransformSpec(name="t"),
@@ -198,7 +205,12 @@ def test_online_payload_parses_like_file(spark, tmp_path, f_type):
         return sorted(tuple(r) for r in extract(spark, job).select(*names).collect())
 
     via_file = rows(f_filename=str(path))
-    assert via_file == [("01", "a", "H", "B7", "T", "2"), ("02", "b", "H", "B7", "T", "2")]
+    if f_type == "plain_csv":
+        assert via_file == [("1", "a", "x"), ("2", "b", None), ("3", "c", "z")]
+    else:
+        assert via_file == [
+            ("01", "a", "H", "B7", "T", "2"), ("02", "b", "H", "B7", "T", "2")
+        ]
     payload = base64.b64encode(content.encode()).decode()
     assert rows(payload=payload) == via_file
 
@@ -462,6 +474,63 @@ def test_txt_load_refuses_non_utf8_encoding(spark, tmp_path):
         run_job(spark, job)
     assert not out.exists()
     assert not (tmp_path / "ledger").exists()
+
+
+def _txt_job(tmp_path, extract_cols, load_cols):
+    """A fixed-width file → fixed-width load job with a ledger."""
+    src = tmp_path / "src.txt"
+    src.write_text("1a\n2b\n")
+    return JobSpec(
+        name="txt-cols",
+        extract=ResourceSpec(name="src", f_type="txt", f_filename=str(src),
+                             columns=extract_cols),
+        transform=TransformSpec(name="t", fields=(FieldSpec("pk"), FieldSpec("v"))),
+        load=ResourceSpec(name="dst", f_type="txt", f_filename=str(tmp_path / "out"),
+                          columns=load_cols),
+        pk_field="pk",
+        ledger_path=str(tmp_path / "ledger"),
+    )
+
+
+def test_txt_load_column_without_length_raises(spark, tmp_path):
+    """A fixed-width load column with no ``txt_length`` would render an
+    empty line; it raises, naming the resource and the column, before
+    the merge: no output and no ledger."""
+    job = _txt_job(
+        tmp_path,
+        (ColumnSpec("pk", txt_position=1, txt_length=1),
+         ColumnSpec("v", txt_position=2, txt_length=1)),
+        (ColumnSpec("pk", txt_length=1), ColumnSpec("v")),
+    )
+    with pytest.raises(ValueError, match="'dst'.*'v'"):
+        run_job(spark, job)
+    assert not (tmp_path / "out").exists()
+    assert not (tmp_path / "ledger").exists()
+
+
+def test_txt_extract_column_without_position_raises(spark, tmp_path):
+    """A fixed-width extract, header or footer column with no
+    ``txt_position`` would read from column 1 (``substring(x, 0, n)`` is
+    ``substring(x, 1, n)``); it raises, naming the resource and the
+    column, before any Spark job."""
+    load_cols = (ColumnSpec("pk", txt_length=1), ColumnSpec("v", txt_length=1))
+    pk = ColumnSpec("pk", txt_position=1, txt_length=1)
+    job = _txt_job(tmp_path, (pk, ColumnSpec("v", txt_length=1)), load_cols)
+    footer_job = _txt_job(tmp_path, (pk,), load_cols)
+    footer_job = replace(footer_job, extract=replace(
+        footer_job.extract, footer_columns=(ColumnSpec("n", txt_length=1),)
+    ))
+    sc = spark.sparkContext
+    sc.setJobGroup("txt-column-rule", "txt column rule")
+    try:
+        with pytest.raises(ValueError, match="'src'.*'v'"):
+            extract(spark, job)
+        with pytest.raises(ValueError, match="'src'.*'n'"):
+            extract(spark, footer_job)
+        assert sc.statusTracker().getJobIdsForGroup("txt-column-rule") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
 
 
 def test_txt_load_accepts_python_utf8_name(spark, tmp_path):

@@ -28,7 +28,7 @@ from cubicerp_client_etl_spark.plans.spec import (
     TransformSpec,
 )
 from cubicerp_client_etl_spark.sinks.ledger import build_ledger, ledger_job_id
-from cubicerp_client_etl_spark.sinks.writers import FWOutColumn, render_fixed_width_lines
+from cubicerp_client_etl_spark.sinks.writers import render_fixed_width_lines
 
 RAW = ("pk", "orderkey", "quantity", "price", "discount", "flag", "shipmode")
 ROWS = [
@@ -149,10 +149,7 @@ def _build(spark, job: JobSpec, target) -> list:
     out = [merged, build_ledger(merged, ledger_job_id(job.name), job.pk_field,
                                 message_col="action", model=job.load.name)]
     if job.load.f_type == "txt":
-        out.append(render_fixed_width_lines(merged.drop("action"), [
-            FWOutColumn(c.name, c.txt_length, c.txt_align, c.txt_fill_char)
-            for c in job.load.columns
-        ]))
+        out.append(render_fixed_width_lines(merged.drop("action"), job.load.columns))
     return out
 
 

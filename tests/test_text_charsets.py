@@ -1,6 +1,7 @@
-"""One decode rule for the text extracts: a file and an inline payload
-read the same bytes as the same text, and an encoding Spark's ``decode``
-cannot take is refused while the plan is built."""
+"""One charset rule for every csv/txt resource: a file and an inline
+payload read the same bytes as the same text, and an encoding that
+Spark's ``decode`` and csv source cannot take is refused while the plan
+is built, for an extract and a load alike."""
 
 from __future__ import annotations
 
@@ -8,15 +9,15 @@ import base64
 
 import pytest
 
-from cubicerp_client_etl_spark.plans.interpreter import extract
+from cubicerp_client_etl_spark.plans.interpreter import extract, run_job
 from cubicerp_client_etl_spark.plans.spec import (
     ColumnSpec,
+    FieldSpec,
     JobSpec,
     ResourceSpec,
     TransformSpec,
 )
-from cubicerp_client_etl_spark.sources.inline import read_inline_payload
-from cubicerp_client_etl_spark.sources.lines import DECODE_CHARSETS, read_texts
+from cubicerp_client_etl_spark.sources.lines import DECODE_CHARSETS
 
 
 def _job(resource: ResourceSpec, payload: bytes | None = None) -> JobSpec:
@@ -36,11 +37,6 @@ def test_invalid_utf8_byte_reads_alike_from_file_and_payload(spark, tmp_path):
     raw = b"ab\xffc"
     p = tmp_path / "bad.txt"
     p.write_bytes(raw)
-    via_file = read_texts(spark, str(p)).first().text
-    via_payload = read_inline_payload(spark, base64.b64encode(raw).decode()).first().text
-    assert via_file == via_payload == "ab\ufffdc"
-
-    # and through whole extracts: a txt file and an online job's payload
     cols = (ColumnSpec("v", txt_position=1, txt_length=9),)
     in_file = ResourceSpec(name="in", f_type="txt", f_filename=str(p), columns=cols)
     inline = ResourceSpec(name="in", f_type="txt", columns=cols)
@@ -50,7 +46,7 @@ def test_invalid_utf8_byte_reads_alike_from_file_and_payload(spark, tmp_path):
 
 
 @pytest.mark.parametrize("encoding", ["cp1252", "windows-1252", "UTF-32BE"])
-@pytest.mark.parametrize("shape", ["csv_footer", "txt", "inline"])
+@pytest.mark.parametrize("shape", ["csv_footer", "txt", "inline", "plain_csv"])
 def test_text_extract_refuses_a_charset_decode_cannot_take(
     spark, tmp_path, shape, encoding
 ):
@@ -61,6 +57,9 @@ def test_text_extract_refuses_a_charset_decode_cannot_take(
         res = ResourceSpec(name="in", f_type="csv", f_filename=str(p), columns=cols,
                            footer_columns=cols, encoding=encoding)
         job = _job(res)
+    elif shape == "plain_csv":
+        job = _job(ResourceSpec(name="in", f_type="csv", f_filename=str(p), columns=cols,
+                                encoding=encoding))
     elif shape == "txt":
         job = _job(ResourceSpec(name="in", f_type="txt", f_filename=str(p), columns=cols,
                                 encoding=encoding))
@@ -92,3 +91,27 @@ def test_java_charsets_under_the_legacy_conf(spark, tmp_path):
         assert [r.a for r in extract(spark, _job(as_txt)).collect()] == ["caf\u00e9;\u20ac"]
     finally:
         spark.conf.unset("spark.sql.legacy.javaCharsets")
+
+
+@pytest.mark.parametrize("encoding", ["cp1252", "windows-1252"])
+def test_csv_load_refuses_a_charset_its_writer_cannot_take(spark, tmp_path, encoding):
+    """A csv load declared with a Java-only charset raises, naming the
+    encoding, before the merge runs: no output and no ledger."""
+    src = tmp_path / "src.csv"
+    src.write_text("1,a\n")
+    out = tmp_path / "out_csv"
+    job = JobSpec(
+        name="cp1252-csv-load",
+        extract=ResourceSpec(
+            name="src", f_type="csv", f_filename=str(src),
+            columns=(ColumnSpec("id"), ColumnSpec("word")),
+        ),
+        transform=TransformSpec(name="t", fields=(FieldSpec("id"), FieldSpec("word"))),
+        load=ResourceSpec(name="dst", f_type="csv", f_filename=str(out), encoding=encoding),
+        pk_field="id",
+        ledger_path=str(tmp_path / "ledger"),
+    )
+    with pytest.raises(ValueError, match=encoding):
+        run_job(spark, job)
+    assert not out.exists()
+    assert not (tmp_path / "ledger").exists()
