@@ -93,9 +93,9 @@ def exact_jaccard_truth(
     a shingle, so the shingle equi-join IS the exact candidate
     universe; no all-pairs).
 
-    ``df_cap`` is the scale guard (the ``lsh_candidate_pairs``
-    ``hot_band_cap`` pattern): a stopword-class shingle shared by n
-    docs emits n² intersection rows before the threshold filter, so
+    ``df_cap`` is the scale guard (the ``setsim_join`` ``hot_cap``
+    pattern): a stopword-class shingle shared by n docs emits n²
+    intersection rows before the threshold filter, so
     shingles with document frequency > ``df_cap`` are dropped from the
     universe ENTIRELY — from both set sizes and intersections, keeping
     Jaccard internally consistent over the capped universe. The trade
@@ -236,7 +236,6 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    hot_band_cap: int | None = None,
 ) -> DataFrame:
     """Band the signature and self-join on (band_id, band_hash): documents
     agreeing on any full band become a candidate pair. Returns distinct
@@ -248,25 +247,10 @@ def lsh_candidate_pairs(
     holding |occ| near-identical docs still EMITS |occ|² candidate
     pairs downstream regardless of how evenly it's split.
 
-    ``hot_band_cap`` (opt-in, LOSSY — the ``setsim_join.hot_cap``
-    pattern): drop band buckets whose occupancy exceeds the cap before
-    the self-join, bounding any bucket's output at cap² pairs. A pair
-    is kept iff it shares at least one NON-hot band, so boilerplate
-    mega-clusters (every band hot) vanish instead of emitting |occ|²
-    rows; pairs of ordinary documents keep their other b−1 chances to
-    collide. The cap is plan-side: the hot-bucket table (buckets above
-    the cap — tiny by construction) broadcasts into a left-anti join,
-    so the banded frame never shuffles for the cap. Leave ``None``
-    (default, exact LSH semantics) when downstream verify+cluster is
-    expected to absorb the cluster — the oracle queries (q082/q209)
-    run uncapped.
-
     The band key is ``md5(h_i || '|' || … )`` over the band's string
     minhashes — engine-replayable (two docs collide iff the band's
     minhash tuples are equal).
     """
-    if hot_band_cap is not None and hot_band_cap < 1:
-        raise ValueError("hot_band_cap must be >= 1")
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -277,22 +261,12 @@ def lsh_candidate_pairs(
                 F.md5(F.concat_ws("|", *cols)).alias("band_hash"),
             )
         )
-    # Both self-join sides (and the hot-bucket census when capped) read
-    # the banded frame; checkpoint so the signature aggregate — the
-    # expensive upstream shuffle — runs once, not per consumer.
+    # Both self-join sides read the banded frame; checkpoint so the
+    # signature aggregate — the expensive upstream shuffle — runs once,
+    # not per consumer.
     banded = signatures.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
     ).select(id_col, "band.band_id", "band.band_hash").transform(pin)
-    if hot_band_cap is not None:
-        hot = (
-            banded.groupBy("band_id", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > hot_band_cap)
-            .drop("_occ")
-        )
-        banded = banded.join(
-            F.broadcast(hot), ["band_id", "band_hash"], "left_anti"
-        )
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -885,7 +859,7 @@ def sorted_neighborhood_pairs(
     smaller blocks; size it so blocks hold thousands of rows, not
     millions), while ``block_cap`` is the secondary dial that bounds
     CANDIDATE volume when a hot block slips through (the
-    ``lsh_candidate_pairs.hot_band_cap`` recall/cost trade). A key
+    ``setsim_join.hot_cap`` recall/cost trade). A key
     whose distribution defeats any prefix length (all records
     identical) needs a different blocking family — that is a data
     property, not a knob.
@@ -993,74 +967,108 @@ def sorted_neighborhood_pairs(
 
 
 def hamming_candidates(
-    df: DataFrame,
-    id_col: str,
-    band_cols: list[str],
-    max_hamming: int,
+    df: DataFrame, id_col: str, band_cols: list[str]
 ) -> DataFrame:
-    """Hamming-radius candidate pairs over banded bit fingerprints
-    (aHash/SimHash-style): explode the bands, equi-join records that
-    share ANY (band index, band value), and verify the exact Hamming
-    distance on candidates only with ``bit_count(xor)``.
+    """Hamming candidate pairs over banded bit fingerprints
+    (aHash/SimHash-style): records that share ANY (band index, band
+    value) become a pair, and the pair's exact Hamming distance
+    ``Σ bit_count(a_i xor b_i)`` over the bands is computed on
+    candidates only.
 
-    COMPLETE for ``max_hamming < len(band_cols)`` (pigeonhole: fewer
-    flipped bits than bands forces one untouched band); beyond that
-    the band join is best-effort recall — same contract as SimHash
-    pigeonhole blocking (``simhash_candidate_pairs``), documented, and
-    callers widen by re-banding rather than by all-pairs.
+    Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``, each pair
+    EXACTLY ONCE and UNFILTERED by distance: callers apply their own
+    radius, so the candidate count itself stays observable. A radius
+    ``r < len(band_cols)`` is COMPLETE (pigeonhole: fewer flipped bits
+    than bands leaves one band untouched); beyond that the band join
+    is best-effort recall, and callers widen by re-banding rather than
+    by all-pairs. A NULL band value joins nothing (and makes the pair's
+    ``hamming`` NULL).
 
-    Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b`` and
-    ``hamming <= max_hamming``.
+    Scale: an equi-join on (band index, value) — candidate volume is
+    Σ_buckets |occ|², bounded by how often full bands collide, never
+    all-pairs; the verify is integer xor/popcount on candidate rows.
+    """
+    return _hamming_band_join(df, id_col, band_cols, None)
 
-    Scale: the join is an equi-join on (band index, value) — candidate
-    volume is Σ_buckets |occ|², bounded by how often full bands
-    collide, never an all-pairs; the verify is integer xor/popcount on
-    candidate rows only.
+
+def _hamming_band_join(
+    df: DataFrame, id_col: str, band_cols: list[str], hot_cap: int | None
+) -> DataFrame:
+    """The one Hamming blocker behind ``hamming_candidates`` and
+    ``simhash_chunk_candidates``: explode the bands, self-join on
+    (band index, value), emit each pair once and verify it.
+
+    Exactly once: a pair is emitted from the least band it joins on —
+    every earlier band must not join it (``(a = b) IS NOT TRUE``, NULL
+    counting as no join), a predicate on the carried band values, so
+    uniqueness costs no DISTINCT shuffle.
+
+    ``hot_cap`` (opt-in, LOSSY): band buckets whose occupancy exceeds
+    the cap are dropped before the self-join, bounding any bucket's
+    output at cap² pairs. A pair is kept iff it shares at least one
+    NON-hot band, still exactly once: a hot earlier band counts as no
+    join there (side a's hot flags decide — equal values share their
+    bucket). The hot-bucket table is tiny by construction (≤ bands ·
+    docs / cap rows) and broadcasts into a left-anti join plus a
+    per-doc hot-flag annotation, so the band frame never shuffles for
+    the cap.
     """
     if not band_cols:
         raise ValueError("band_cols must be non-empty")
-    if max_hamming < 0:
-        raise ValueError("max_hamming must be >= 0")
-    base = df.select(F.col(id_col).alias("_id"), *band_cols)
-    bands = base.select(
-        "_id",
-        F.posexplode(F.array(*[F.col(b) for b in band_cols])).alias(
-            "_bi", "_bv"
-        ),
-    )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a._bi") == F.col("b._bi"))
-            & (F.col("a._bv") == F.col("b._bv"))
-            & (F.col("a._id") < F.col("b._id")),
+    n = len(band_cols)
+    vals = [f"_v{i}" for i in range(n)]
+    bands = (
+        df.select(
+            F.col(id_col).alias("_id"),
+            *[F.col(b).alias(v) for b, v in zip(band_cols, vals)],
         )
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
+        .select("_id", *vals, F.posexplode(F.array(*vals)).alias("band_id", "band"))
+        # consumed by both join sides (+ the hot census when capped);
+        # upstream is the caller's fingerprint build — run it once
+        .transform(pin)
+    )
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col("_id").alias(f"id_{s}"),
+            *[F.col(v).alias(f"_{s}{i}") for i, v in enumerate(vals)],
+            "band_id",
+            "band",
         )
-        .distinct()
+
+    if hot_cap is None:
+        a = side("a")
+    else:
+        hot = (
+            bands.groupBy("band_id", "band")
+            .agg(F.count(F.lit(1)).alias("_occ"))
+            .filter(F.col("_occ") > hot_cap)
+            .drop("_occ")
+        )
+        hot_flags = (
+            bands.join(F.broadcast(hot), ["band_id", "band"], "left_semi")
+            .groupBy(F.col("_id").alias("id_a"))
+            .agg(F.collect_set("band_id").alias("_hot"))
+        )
+        bands = bands.join(F.broadcast(hot), ["band_id", "band"], "left_anti")
+        a = side("a").join(F.broadcast(hot_flags), "id_a", "left")
+    # emitted at band c iff no earlier band joins the pair (a hot band
+    # joins nothing)
+    uniq = F.lit(True)
+    for e in range(n - 1):
+        no_join = ~F.coalesce(F.col(f"_a{e}") == F.col(f"_b{e}"), F.lit(False))
+        if hot_cap is not None:
+            no_join = no_join | F.coalesce(F.array_contains("_hot", e), F.lit(False))
+        uniq = uniq & ((F.col("band_id") <= e) | no_join)
+    hamming = sum(
+        F.bit_count(F.col(f"_a{i}").bitwiseXOR(F.col(f"_b{i}"))).cast("bigint")
+        for i in range(n)
     )
-    fa = base.select(
-        F.col("_id").alias("id_a"),
-        *[F.col(b).alias(f"_a{i}") for i, b in enumerate(band_cols)],
-    )
-    fb = base.select(
-        F.col("_id").alias("id_b"),
-        *[F.col(b).alias(f"_b{i}") for i, b in enumerate(band_cols)],
-    )
-    ham = None
-    for i in range(len(band_cols)):
-        term = F.bit_count(
-            F.col(f"_a{i}").bitwiseXOR(F.col(f"_b{i}"))
-        ).cast("bigint")
-        ham = term if ham is None else ham + term
     return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        a.join(side("b"), ["band_id", "band"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(uniq)
+        .select("id_a", "id_b", hamming.alias("hamming"))
     )
 
 
@@ -1074,121 +1082,56 @@ def simhash_chunk_candidates(
 ) -> DataFrame:
     """Hamming candidate pairs over INTEGER SimHash fingerprints via
     chunk blocking (Manku-Jain-Sarma WWW'07): split the ``n_bits``
-    fingerprint into ``n_bits // chunk_bits`` chunks, equi-join on
-    (chunk index, chunk value) — by pigeonhole, any pair within Hamming
-    distance < n_chunks shares at least one chunk — and verify the
-    exact distance with one ``bit_count(xor)`` on the join output.
+    fingerprint into ``n_bits // chunk_bits`` chunks by shift/mask —
+    by pigeonhole, any pair within Hamming distance < n_chunks shares
+    at least one chunk — and block on them with the one Hamming band
+    join (``hamming_candidates``' contract: ``(id_a, id_b, hamming)``,
+    ``id_a < id_b``, each pair exactly once, unfiltered by distance —
+    the q050 blocking query and the q040 datasheet use it directly).
 
-    Every pair is emitted EXACTLY ONCE, from its least shared LIVE
-    chunk (earlier chunks must differ — checkable from the carried
-    fingerprints, so uniqueness costs a predicate, not a DISTINCT
-    shuffle). Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``,
-    UNFILTERED by distance — callers apply their own radius so the
-    candidate count itself stays observable (the q050 blocking query and the q040 datasheet use
-    it directly).
+    ``hamming`` is the sum of the chunks' popcounts, which equals
+    ``bit_count(a xor b)`` over the whole fingerprint only when
+    ``0 <= f < 2^n_bits`` — what ``simhash_int_portable`` produces. A
+    fingerprint outside that range fails the query (``raise_error``)
+    rather than yield a silently wrong distance; at ``n_bits=64`` every
+    BIGINT is in range.
 
-    ``hot_chunk_cap`` (opt-in, LOSSY — the ``lsh_candidate_pairs.
-    hot_band_cap`` / ``setsim_join.hot_cap`` pattern): drop chunk
-    buckets whose occupancy exceeds the cap before the self-join,
-    bounding any bucket's output at cap² pairs. A pair is kept iff it
-    shares at least one NON-hot chunk — the uniqueness predicate
-    treats hot earlier chunks as "no chance there" (earlier chunks
-    must differ OR be hot), so a pair sharing hot chunk 0 and quiet
-    chunk 2 still surfaces, exactly once, from chunk 2. Boilerplate
-    mega-clusters (every shared chunk hot) vanish instead of emitting
-    |occ|² rows. The hot-bucket table is tiny by construction
-    (≤ n_chunks · n_docs / cap entries) and broadcasts into a
-    left-anti join plus a per-doc hot-flag annotation — the chunk
-    frame never shuffles for the cap.
+    ``hot_chunk_cap`` (opt-in, LOSSY — the ``setsim_join.hot_cap``
+    pattern): chunk buckets whose occupancy exceeds the cap are dropped
+    before the self-join; a pair is kept iff it shares at least one
+    NON-hot chunk, still exactly once, so boilerplate mega-clusters
+    (every shared chunk hot) vanish instead of emitting |occ|² rows.
 
-    Scale: fingerprints are map-only upstream; this join is the
-    LSH-band shape — candidate volume is Σ_buckets |occ|², never
-    all-pairs, and with the cap any single bucket's contribution is
-    bounded. Reference parity: the near-dup family the reference
-    cannot express at all (cubicerpetl.py processes dict-rows one
-    RPC at a time).
+    Reference parity: the near-dup family the reference cannot express
+    at all (cubicerpetl.py processes dict-rows one RPC at a time).
     """
-    if n_bits % chunk_bits != 0:
-        raise ValueError("n_bits must be a multiple of chunk_bits")
+    if n_bits > 64 or n_bits % chunk_bits != 0:
+        raise ValueError("n_bits must be a multiple of chunk_bits, at most 64")
     n_chunks = n_bits // chunk_bits
     if n_chunks < 2:
         raise ValueError("need at least 2 chunks to block on")
     if hot_chunk_cap is not None and hot_chunk_cap < 1:
         raise ValueError("hot_chunk_cap must be >= 1")
-    mask = (1 << chunk_bits) - 1
-
-    def _chunk(col: str, c: int) -> Column:
-        return F.shiftright(F.col(col), chunk_bits * (n_chunks - 1 - c)).bitwiseAND(
-            F.lit(mask)
-        )
-
-    base = fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_f"))
-    chunks = base.select(
-        "_id",
-        "_f",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        _chunk("_f", c).alias("chunk"),
-                    )
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("_c"),
-    ).select("_id", "_f", "_c.chunk_id", "_c.chunk").transform(pin)  # consumed by both join sides (+ the hot census when capped);
-    # upstream is the caller's fingerprint build — run it once
-
-    hot_flags = None
-    if hot_chunk_cap is not None:
-        hot = (
-            chunks.groupBy("chunk_id", "chunk")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > hot_chunk_cap)
-            .drop("_occ")
-        )
-        # per-doc bitmask-free hot flags: which of MY chunk slots sit in
-        # a hot bucket (shared-chunk hotness is a property of the value,
-        # and equal chunks mean equal values, so side a's flag decides)
-        hot_flags = (
-            chunks.join(F.broadcast(hot), ["chunk_id", "chunk"], "left_semi")
-            .groupBy("_id")
-            .agg(F.collect_set("chunk_id").alias("_hot"))
-        )
-        chunks = chunks.join(F.broadcast(hot), ["chunk_id", "chunk"], "left_anti")
-
-    a = chunks.select(
-        F.col("_id").alias("id_a"), F.col("_f").alias("_fa"), "chunk_id", "chunk"
+    f = F.col(fp_col)
+    if n_bits < 64:  # a BIGINT holds any 64-bit fingerprint
+        f = F.when(
+            F.shiftright(f, n_bits) != 0,
+            F.raise_error(
+                F.concat(
+                    F.lit(f"simhash_chunk_candidates: {fp_col} outside [0, 2^{n_bits}): "),
+                    f.cast("string"),
+                )
+            ),
+        ).otherwise(f)
+    chunks = fp.select(F.col(id_col), f.alias("_f")).select(
+        id_col,
+        *[
+            F.shiftright("_f", chunk_bits * (n_chunks - 1 - c))
+            .bitwiseAND(F.lit((1 << chunk_bits) - 1))
+            .alias(f"_chunk{c}")
+            for c in range(n_chunks)
+        ],
     )
-    if hot_flags is not None:
-        a = a.join(
-            F.broadcast(hot_flags.select(F.col("_id").alias("id_a"), "_hot")),
-            "id_a",
-            "left",
-        ).withColumn(
-            "_hot", F.coalesce(F.col("_hot"), F.array().cast("array<int>"))
-        )
-    b = chunks.select(
-        F.col("_id").alias("id_b"), F.col("_f").alias("_fb"), "chunk_id", "chunk"
-    )
-    # least-matching-LIVE-chunk uniqueness: emitted at chunk c iff every
-    # earlier chunk differs (uncapped) or differs-or-is-hot (capped)
-    uniq = F.lit(True)
-    for e in range(n_chunks - 1):
-        differs = _chunk("_fa", e) != _chunk("_fb", e)
-        if hot_flags is not None:
-            differs = differs | F.array_contains(F.col("_hot"), e)
-        uniq = uniq & ((F.col("chunk_id") <= e) | differs)
-    return (
-        a.join(b, ["chunk_id", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(uniq)
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
+    return _hamming_band_join(
+        chunks, id_col, [f"_chunk{c}" for c in range(n_chunks)], hot_chunk_cap
     )

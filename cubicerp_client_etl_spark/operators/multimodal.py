@@ -634,7 +634,8 @@ def image_ahash_bands(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     comfortably inside BIGINT (bit 63 would wrap the sign) and are
     exactly the blocking unit :func:`~cubicerp_client_etl_spark.
     operators.dedup.hamming_candidates` joins on — by pigeonhole, any
-    pair within Hamming distance 3 shares at least one band.
+    pair within Hamming distance 3 shares at least one band, so a
+    caller's ``hamming <= 3`` filter over its pairs is complete.
 
     Returns the input columns minus the payload, plus
     ``(width, height, band0, band1, band2, band3)``.

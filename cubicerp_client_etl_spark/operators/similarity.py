@@ -362,8 +362,8 @@ def lsh_bucket_pairs_capped(
     so expected occupancy grows LINEARLY with the corpus and the
     uncapped within-bucket self-join grows quadratically — the idle
     census measured the uncapped query (q209) at 4.2x on 10x data.
-    The cap is the same deterministic integer rule as the SimHash
-    chunk cap (``dedup.simhash_chunk_candidates.hot_chunk_cap``):
+    The cap is the same deterministic integer rule as the Hamming
+    blocker's chunk cap (``dedup.simhash_chunk_candidates(hot_chunk_cap=)``):
     buckets whose occupancy exceeds ``hot_bucket_cap`` are dropped
     ENTIRELY before the join (dense regions are re-bucketed with more
     planes or skipped at scale — recall price is measured, not

@@ -187,11 +187,15 @@ def extract(spark: SparkSession, job: JobSpec) -> DataFrame:
     elif res.f_type == "xml":
         df = spark.read.format("xml").option("rowTag", res.xml_row_tag).load(path)
     elif res.f_type == "csv" and not (res.header_columns or res.footer_columns):
-        # plain csv needs no line order: the splittable native source
+        # plain csv needs no line order: the splittable native source,
+        # read by the declared columns (a missing field is NULL, an extra
+        # one dropped, as on the codec path; no first-line job to count
+        # the columns)
+        schema = ", ".join(f"{ident(c.name)} STRING" for c in res.columns)
         df = spark.read.csv(
-            path, sep=res.txt_separator, quote=res.txt_quote, encoding=encoding,
-            header=False,
-        ).toDF(*[c.name for c in res.columns])
+            path, schema=schema, sep=res.txt_separator, quote=res.txt_quote,
+            encoding=encoding, header=False,
+        )
     elif res.f_type in ("csv", "txt"):
         df = read_text_resource(spark, res, encoding, path=path)
     elif res.f_type == "dbf":

@@ -4,11 +4,10 @@ defect) is where 100x pressure lands first on the MinHash/SimHash/
 setsim families — so the engine gets a first-class datasheet that
 reports, per blocking family, the bucket-occupancy distribution and
 the candidate-pair mass the bucket join would emit, BEFORE the join
-runs. The observability twin of the three hot-bucket caps
-(``lsh_candidate_pairs.hot_band_cap``, ``simhash_chunk_candidates.
-hot_chunk_cap``, ``setsim_join.hot_cap``): the datasheet's
-``hot_buckets`` / ``hot_pair_e6`` columns are exactly what says
-whether a cap is needed and what it would remove.
+runs. The observability twin of the hot-bucket caps
+(``simhash_chunk_candidates.hot_chunk_cap``, ``setsim_join.hot_cap``):
+the datasheet's ``hot_buckets`` / ``hot_pair_e6`` columns are exactly
+what says whether a cap is needed and what it would remove.
 
 Same corpus discipline as the rest of the registry: md5-portable hash
 families and exact integer arithmetic, so the whole datasheet carries

@@ -2,8 +2,9 @@
 
 Round 12 built the observability (the q040 candidate datasheet measured
 99.3% of the SimHash chunk family's 7.5M-pair mass sitting in 63 hot
-buckets at sf0.1) and the machinery (``simhash_chunk_candidates.
-hot_chunk_cap``, ``setsim_join.hot_cap``), but no oracled query ever
+buckets at sf0.1) and the machinery (the Hamming blocker's hot-chunk
+cap, ``simhash_chunk_candidates(hot_chunk_cap=)``, and
+``setsim_join.hot_cap``), but no oracled query ever
 RAN a cap — the scale remedy existed only behind equivalence tests.
 This wave closes that loop (judge r12 item 2): the caps are
 deterministic integer rules (hot bucket = occupancy > cap; hot shingle

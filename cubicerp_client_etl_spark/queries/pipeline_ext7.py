@@ -3013,8 +3013,8 @@ def q202_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q203 — LSH band-bucket skew report (the observability twin of the
-# hot_band_cap defense on lsh_candidate_pairs): bucket-size
+# q203 — LSH band-bucket skew report (observability for the uncapped
+# band join of lsh_candidate_pairs): bucket-size
 # distribution of the q032 band join — total buckets, singleton
 # fraction, max bucket, and the candidate-pair mass Σ m·(m−1)/2 the
 # join would emit — the report that says whether a boilerplate
@@ -3240,13 +3240,13 @@ def q050_simhash_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q205 — Windowed cardinality: per-hour distinct users, exact AND by
-# the portable HLL (q011's register family grouped by event-time
-# window) — the dashboard shape streaming analytics actually serves
-# ("uniques per hour"), with the sketch's per-window error measured
-# against the exact count in the same report. Registers group by
-# (window, bucket) — bounded 64·#windows state, the same merge-by-max
-# law the streaming accumulator uses. Fully oracled incl. the
-# estimate arithmetic.
+# the portable HLL (``sketches.hll_registers_by`` / ``hll_estimate_by``
+# keyed by the event-time window) — the dashboard shape streaming
+# analytics actually serves ("uniques per hour"), with the sketch's
+# per-window error measured against the exact count in the same
+# report. Registers group by (window, bucket) — bounded 64·#windows
+# state, the same merge-by-max law the streaming accumulator uses.
+# Fully oracled incl. the estimate arithmetic.
 # --------------------------------------------------------------------------
 @register(
     "q042_windowed_hll_uniques",
@@ -3293,44 +3293,17 @@ ORDER BY window_start_us
 """,
 )
 def q042_windowed_hll_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cubicerp_client_etl_spark.functions import e6_floor_ratio, md5_hash32
-    from cubicerp_client_etl_spark.operators.sketches import HLL_M
+    from cubicerp_client_etl_spark.functions import e6_floor_ratio
+    from cubicerp_client_etl_spark.operators.sketches import (
+        hll_estimate_by,
+        hll_registers_by,
+    )
 
     ev = load(spark, sf_dir, "events").select(
         F.unix_micros(F.window("ts", "1 hour").getField("start")).alias("w_us"),
         "user_id",
     )
-    h = md5_hash32(
-        F.concat(F.col("user_id").cast("string"), F.lit("|hll1"))
-    )
-    b = ev.select("w_us", h.alias("_h"), "user_id")
-    rho = b.select(
-        "w_us",
-        F.expr("_h div 67108864").cast("int").alias("bucket"),
-        F.when(F.expr("_h % 67108864") == 0, F.lit(27))
-        .otherwise(
-            F.lit(27)
-            - F.length(F.conv(F.expr("_h % 67108864").cast("string"), 10, 2))
-        )
-        .cast("int")
-        .alias("_rho"),
-    ).groupBy("w_us", "bucket").agg(F.max("_rho").alias("m_rho"))
-    wins = ev.select("w_us").distinct()
-    dim = spark.range(HLL_M).select(F.col("id").cast("int").alias("bucket"))
-    regs = (
-        wins.join(dim)
-        .join(rho, ["w_us", "bucket"], "left")
-        .select(
-            "w_us", "bucket", F.coalesce(F.col("m_rho"), F.lit(0)).alias("m_rho")
-        )
-    )
-    est = regs.groupBy("w_us").agg(
-        F.expr(
-            "CAST(389776872046592000 div "
-            "(SUM(shiftleft(CAST(1 AS BIGINT), 27 - m_rho)) * 1000000) "
-            "AS BIGINT)"
-        ).alias("hll_est")
-    )
+    est = hll_estimate_by(hll_registers_by(ev, "w_us", "user_id"), "w_us")
     ex = ev.groupBy("w_us").agg(
         F.count_distinct("user_id").cast("bigint").alias("n_exact")
     )

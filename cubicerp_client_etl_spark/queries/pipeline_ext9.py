@@ -507,8 +507,8 @@ def q283_image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = docs.mapInPandas(gen, "doc_id bigint, payload binary")
     fp = image_ahash_bands(media, "payload")
     pairs = hamming_candidates(
-        fp, "doc_id", ["band0", "band1", "band2", "band3"], max_hamming=3
-    )
+        fp, "doc_id", ["band0", "band1", "band2", "band3"]
+    ).where(F.col("hamming") <= 3)
     agg = pairs.groupBy("hamming").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(

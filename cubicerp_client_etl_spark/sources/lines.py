@@ -53,6 +53,9 @@ DECODE_CHARSETS = {
     "utf-32": "UTF-32",
 }
 _JAVA_CHARSETS = "spark.sql.legacy.javaCharsets"
+# a csv line holding a character above U+0020: what survives Java's
+# String.trim, the blank-line rule of Spark's csv source
+_NOT_BLANK = r"[^\x00-\x20]"
 
 
 def check_text_resource(
@@ -123,10 +126,14 @@ def read_text_resource(
     Header and footer are the first and last line of the same file,
     parsed once per file with their own column lists and carried onto
     every body row; both are dropped from the body (the reference's
-    slicing, cubicerpetl.py:242-245,267-270). An empty csv body line is
-    no row, as with the reference's ``csv.DictReader`` and
-    ``spark.read.csv``; a txt line is sliced whatever it holds. Each
-    projection reaches the JVM as one ``selectExpr``.
+    slicing, cubicerpetl.py:242-245,267-270). A csv body line that is
+    blank — empty, or only characters <= U+0020 (spaces, tabs), Java's
+    ``String.trim`` rule — is no row, as ``spark.read.csv`` skips it on
+    the plain csv path. The reference's ``csv.DictReader`` skips only an
+    empty line and keeps a whitespace-only one as a row of its first
+    field; the engine follows its splittable source there. A txt line
+    is sliced whatever it holds. Each projection reaches the JVM as one
+    ``selectExpr``.
     """
     if res.f_type == "csv":
         sep, quote = res.txt_separator, res.txt_quote
@@ -176,7 +183,7 @@ def read_text_resource(
         "file", *ends, f"posexplode({body}) AS (_line_no, value)"
     )
     if res.f_type == "csv":
-        exploded = exploded.filter("value != ''")
+        exploded = exploded.filter(f"value RLIKE {literal(_NOT_BLANK)}")
     parsed = exploded.selectExpr(
         "file", line_no, f"{parse('value', res.columns)} AS __body", *ends
     )

@@ -352,9 +352,21 @@ def test_hamming_candidates_complete_within_pigeonhole(spark):
         (3, 0b0101, 0b0011, 0b1110, 0b1111),  # far from both
     ]
     df = spark.createDataFrame(rows, "id long, b0 long, b1 long, b2 long, b3 long")
-    out = hamming_candidates(df, "id", ["b0", "b1", "b2", "b3"], max_hamming=3)
-    got = {(r.id_a, r.id_b): r.hamming for r in out.collect()}
-    assert got == {(1, 2): 1}
+    out = hamming_candidates(df, "id", ["b0", "b1", "b2", "b3"]).collect()
+    # 1 and 2 share three bands but are emitted once, from band 0
+    assert [(r.id_a, r.id_b, r.hamming) for r in out] == [(1, 2, 1)]
+
+
+def test_hamming_candidates_null_band_joins_nothing(spark):
+    """A NULL band value joins no pair, so it also does not stop the
+    pair's emission from a later shared band: exactly once, with a NULL
+    distance (one NULL band hides the Hamming value)."""
+    from cubicerp_client_etl_spark.operators.dedup import hamming_candidates
+
+    rows = [(1, None, 5, 7), (2, None, 5, 7), (3, 4, 6, 7)]
+    df = spark.createDataFrame(rows, "id long, b0 long, b1 long, b2 long")
+    out = hamming_candidates(df, "id", ["b0", "b1", "b2"]).collect()
+    assert sorted(tuple(r) for r in out) == [(1, 2, None), (1, 3, None), (2, 3, None)]
 
 
 def test_hamming_candidates_rejects_bad_args(spark):
@@ -364,9 +376,7 @@ def test_hamming_candidates_rejects_bad_args(spark):
 
     df = spark.createDataFrame([(1, 0)], "id long, b0 long")
     with _pytest.raises(ValueError):
-        hamming_candidates(df, "id", [], 1)
-    with _pytest.raises(ValueError):
-        hamming_candidates(df, "id", ["b0"], -1)
+        hamming_candidates(df, "id", [])
 
 
 # ------------------------------------------------- stock ledger balance ----

@@ -91,41 +91,6 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark):
     assert not missing, f"LSH missed exact-duplicate pairs: {sorted(missing)[:5]}"
 
 
-def test_lsh_hot_band_cap_bounds_boilerplate_blowup(spark):
-    """VERDICT r5 #4 adversarial fixture: 10⁴ byte-identical documents
-    put 10⁴ ids in every band bucket — uncapped LSH emits ~5·10⁷
-    candidate pairs (|occ|²/2, the scale-killer AQE splitting cannot
-    shrink). With hot_band_cap every boilerplate bucket is dropped
-    before the self-join: candidates from the mega-cluster are ZERO
-    (sub-linear, not just sub-quadratic) while a normal duplicate pair
-    that shares no hot bucket is still found."""
-    boiler = spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        F.lit("all rights reserved do not redistribute this file").alias("text"),
-    )
-    # one ordinary near-dup pair with distinct shingles
-    pair = spark.createDataFrame(
-        [
-            (20_001, "the quick brown fox jumps over the lazy dog tonight"),
-            (20_002, "the quick brown fox jumps over the lazy dog tonight"),
-        ],
-        "doc_id long, text string",
-    )
-    docs = boiler.unionByName(pair)
-    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=32)
-    cands = lsh_candidate_pairs(
-        sigs, "doc_id", num_hashes=32, bands=8, hot_band_cap=50
-    )
-    got = cands.collect()
-    # the 10⁴-doc cluster contributes nothing; the ordinary pair survives
-    assert (20_001, 20_002) in {(r.id_a, r.id_b) for r in got}
-    assert len(got) == 1, f"expected only the ordinary pair, got {len(got)}"
-    import pytest
-
-    with pytest.raises(ValueError):
-        lsh_candidate_pairs(sigs, "doc_id", hot_band_cap=0)
-
-
 # ---- duplicated-span removal (C4-style, q132) -----------------------------
 
 
@@ -589,9 +554,8 @@ def test_simhash_chunk_candidates_matches_brute_force(spark):
 
 
 def test_simhash_hot_chunk_cap_equivalence_and_boilerplate_drop(spark):
-    """Cap semantics (the lsh hot_band_cap contract, chunk flavour): a
-    pair survives iff it shares at least one NON-hot chunk — still
-    exactly once. The 200-doc identical-fingerprint cluster (every
+    """Cap semantics: a pair survives iff it shares at least one
+    NON-hot chunk — still exactly once. The 200-doc identical-fingerprint cluster (every
     bucket hot) contributes ZERO pairs; a pair sharing a hot chunk AND
     a quiet chunk still surfaces; a pair sharing ONLY hot chunks is
     dropped. With a huge cap the capped plan equals the uncapped one
@@ -638,7 +602,33 @@ def test_simhash_hot_chunk_cap_equivalence_and_boilerplate_drop(spark):
     with pytest.raises(ValueError):
         simhash_chunk_candidates(df, "doc_id", "f", n_bits=33)
     with pytest.raises(ValueError):
+        simhash_chunk_candidates(df, "doc_id", "f", n_bits=72)
+    with pytest.raises(ValueError):
         simhash_chunk_candidates(df, "doc_id", "f", n_bits=8, chunk_bits=8)
+
+
+@pytest.mark.parametrize("f", [-1, 1 << 32])
+def test_simhash_chunk_candidates_refuses_fingerprint_outside_n_bits(spark, f):
+    """The chunk popcounts sum to bit_count(a xor b) only for
+    0 <= f < 2^n_bits; any other fingerprint fails the query instead
+    of yielding a wrong distance (a negative one would xor its sign
+    bits away: -1 vs 0xFFFFFFFF shares every chunk at distance 0)."""
+    from cubicerp_client_etl_spark.operators.dedup import simhash_chunk_candidates
+
+    df = spark.createDataFrame([(1, f), (2, 0xFFFFFFFF)], "doc_id long, f long")
+    with pytest.raises(Exception, match="outside"):
+        simhash_chunk_candidates(df, "doc_id", "f").collect()
+
+
+def test_simhash_chunk_candidates_takes_any_64_bit_fingerprint(spark):
+    """At n_bits=64 a negative BIGINT is a fingerprint with its top bit
+    set, not out of range: its chunks' popcounts still sum to
+    bit_count(a xor b)."""
+    from cubicerp_client_etl_spark.operators.dedup import simhash_chunk_candidates
+
+    df = spark.createDataFrame([(1, -1), (2, -2), (3, 0)], "doc_id long, f long")
+    rows = simhash_chunk_candidates(df, "doc_id", "f", n_bits=64, chunk_bits=16).collect()
+    assert [tuple(r) for r in rows] == [(1, 2, 1)]
 
 
 # ---- the shingle family vs the pure-Python shingler ----------------------

@@ -4,8 +4,10 @@ plain-Python model of the reference's in-memory slicing
 the lines between, each parsed with its own column list) for csv and
 fixed-width txt, with or without header and footer, over several
 files of 0-3 lines (blank ones among them) with LF or CRLF line ends and
-trailing newlines. An empty csv body line is no row (``csv.DictReader``
-skips it); a txt line is sliced whatever it holds."""
+trailing newlines. A blank csv body line — empty, or only characters
+<= U+0020 (Java's ``String.trim`` rule, as ``spark.read.csv`` skips on
+the plain csv path) — is no row; a txt line is sliced whatever it
+holds."""
 
 from __future__ import annotations
 
@@ -21,7 +23,7 @@ from cubicerp_client_etl_spark.sources.lines import read_text_resource
 
 BODY, HEADER, FOOTER = ["a", "b"], ["h"], ["f", "g"]
 
-line = st.one_of(st.just(""), st.text(alphabet="xy;1 é", max_size=6))
+line = st.one_of(st.just(""), st.text(alphabet="xy;1 \té", max_size=6))
 text_file = st.tuples(
     st.lists(line, max_size=3),
     st.sampled_from(["\n", "\r\n"]),
@@ -62,7 +64,7 @@ def model(files: list[str], f_type: str, header: bool, footer: bool) -> list[tup
         lines = model_lines(text)
         first, last = int(header), len(lines) - int(footer)
         for no in range(first, last):
-            if f_type == "csv" and lines[no] == "":
+            if f_type == "csv" and all(ch <= " " for ch in lines[no]):
                 continue
             row = (name, no, *parse(lines[no], BODY))
             if header:

@@ -170,13 +170,16 @@ def test_online_payload_parses_like_file(spark, tmp_path, f_type):
     resource with header and footer columns gives the same body rows,
     header/footer fields broadcast, whether its bytes arrive as a file
     or as an online job's base64 payload. A plain csv file (read by
-    ``spark.read.csv``) and its payload both skip a blank line."""
+    ``spark.read.csv``) and its payload both read by the declared
+    columns (a ragged first line is no error: a missing field is NULL,
+    an extra one dropped) and skip a blank line, empty or only spaces
+    and tabs."""
     header = footer = ()
     if f_type == "plain_csv":
-        content = "1;a;x\n\n2;b\n3;c;z;extra\n"
+        content = "1;a\n\n2;b;y\n   \n\t \n3;c;z;extra\n"
         body = tuple(ColumnSpec(n) for n in ("k", "s", "t"))
     elif f_type == "csv":
-        content = "H;B7\n01;a\n02;b\nT;2\n"
+        content = "H;B7\n01;a\n \t\n02;b\nT;2\n"
         cols = lambda *names: tuple(ColumnSpec(n) for n in names)  # noqa: E731
         body, header, footer = cols("k", "s"), cols("hrec", "batch"), cols("trec", "n")
     else:
@@ -206,7 +209,7 @@ def test_online_payload_parses_like_file(spark, tmp_path, f_type):
 
     via_file = rows(f_filename=str(path))
     if f_type == "plain_csv":
-        assert via_file == [("1", "a", "x"), ("2", "b", None), ("3", "c", "z")]
+        assert via_file == [("1", "a", None), ("2", "b", "y"), ("3", "c", "z")]
     else:
         assert via_file == [
             ("01", "a", "H", "B7", "T", "2"), ("02", "b", "H", "B7", "T", "2")

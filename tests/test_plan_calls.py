@@ -195,3 +195,22 @@ def test_job_plan_builds_in_few_round_trips(plan_calls, kind):
     assert plan_calls[kind] > 0, "the round-trip counter saw no py4j call"
     assert plan_calls[kind] <= COLUMN_API_CALLS[kind] // 4, plan_calls
 
+
+def test_plain_csv_plan_runs_no_spark_job(spark, tmp_path):
+    """A plain csv extract (no header, no footer) reads by the declared
+    columns: building its job's plans runs no Spark job, where taking
+    the column count from the file's first line would run one."""
+    (tmp_path / "in.csv").write_text("".join(";".join(r) + "\n" for r in ROWS))
+    res = ResourceSpec(name="in_plain", f_type="csv", f_filename=str(tmp_path / "in.csv"),
+                       txt_separator=";", columns=tuple(ColumnSpec(c) for c in RAW),
+                       domain=DOMAIN)
+    job = JobSpec(name="plan_plain_csv", extract=res, transform=_transform("insert"),
+                  load=ResourceSpec(name="out_plain", f_type="csv"), pk_field="pk")
+    sc = spark.sparkContext
+    group = "plan_plain_csv"
+    sc.setJobGroup(group, "plan build only")
+    try:
+        _build(spark, job, None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

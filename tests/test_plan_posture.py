@@ -912,3 +912,27 @@ def test_sketch_operators_use_one_hash_family():
         in ("xxhash64", "hash")
     ]
     assert offenders == []
+
+
+def test_one_hamming_verify():
+    """Every bit-fingerprint near-dup join goes through one Hamming
+    blocker: exactly one package function calls ``bit_count``."""
+    import ast
+    import pathlib
+
+    import cubicerp_client_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    callers = sorted(
+        f"{path.relative_to(root)}:{fn.name}"
+        for path in root.rglob("*.py")
+        for fn in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and any(
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None))
+            == "bit_count"
+            for node in ast.walk(fn)
+        )
+    )
+    assert callers == ["operators/dedup.py:_hamming_band_join"]

@@ -286,23 +286,25 @@ def test_gini_property_vs_python(spark, vals):
     )
 )
 def test_hamming_candidates_complete_property(spark, fps):
-    """Pigeonhole completeness: with 4 bands and max_hamming=3, EVERY
-    pair within Hamming distance 3 must be found (and nothing beyond
-    reported)."""
+    """The blocker emits exactly the pairs sharing a band, each once
+    with its exact Hamming distance; so with 4 bands a radius of 3 is
+    complete (pigeonhole): EVERY pair within distance 3 is found."""
     from cubicerp_client_etl_spark.operators.dedup import hamming_candidates
 
     rows = [(i, *bands) for i, bands in enumerate(fps)]
     df = spark.createDataFrame(rows, "id long, b0 long, b1 long, b2 long, b3 long")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in hamming_candidates(
-            df, "id", ["b0", "b1", "b2", "b3"], max_hamming=3
-        ).collect()
+    out = hamming_candidates(df, "id", ["b0", "b1", "b2", "b3"]).collect()
+    got = {(r.id_a, r.id_b): r.hamming for r in out}
+    assert len(got) == len(out), "a pair was emitted more than once"
+    want = {
+        (i, j): sum(bin(a ^ b).count("1") for a, b in zip(fps[i], fps[j]))
+        for i in range(len(fps))
+        for j in range(i + 1, len(fps))
+        if any(a == b for a, b in zip(fps[i], fps[j]))
     }
+    assert got == want
     for i in range(len(fps)):
         for j in range(i + 1, len(fps)):
             h = sum(bin(a ^ b).count("1") for a, b in zip(fps[i], fps[j]))
             if h <= 3:
                 assert got.get((i, j)) == h, (i, j, h, got.get((i, j)))
-            else:
-                assert (i, j) not in got or got[(i, j)] <= 3
